@@ -101,23 +101,15 @@ def q_var_type_counts(spark, sf_dir):
     )
 
 
-def _parsed_prunable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse declared via the Catalyst-prunable scalar-UDF variant: queries
-    that never reference the parse outputs (pure key/dimension aggregates)
-    get the UDF elided by column pruning — declare the plan, let Catalyst
-    drop the work."""
-    return P.parse_encode_scalar(load_transcripts(spark, sf_dir))
-
-
 def q_tool_counts(spark, sf_dir):
-    enriched = P.enrich(_parsed_prunable(spark, sf_dir), dim_role(spark), dim_tool(spark))
+    enriched = P.enrich(load_transcripts(spark, sf_dir), dim_role(spark), dim_tool(spark))
     return P.per_tool_counts(enriched)
 
 
 def q_role_counts(spark, sf_dir):
     """Broadcast enrich on the role dimension (reference lookup-join
     pattern, SURVEY §2.3)."""
-    enriched = P.enrich(_parsed_prunable(spark, sf_dir), dim_role(spark), dim_tool(spark))
+    enriched = P.enrich(load_transcripts(spark, sf_dir), dim_role(spark), dim_tool(spark))
     return enriched.groupBy("role", "role_group", "is_human").agg(
         F.count("*").alias("cnt")
     )
@@ -131,7 +123,7 @@ def q_kql_count_by_time(spark, sf_dir):
 
 
 def q_conversation_counts(spark, sf_dir):
-    return P.per_conversation_counts(_parsed_prunable(spark, sf_dir))
+    return P.per_conversation_counts(load_transcripts(spark, sf_dir))
 
 
 def q_count_by_time(spark, sf_dir):

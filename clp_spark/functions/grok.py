@@ -41,7 +41,7 @@ from .tokenizer import (
     VT_FLOAT,
     VT_INT,
 )
-from .tokenizer_vec import _ranges, _split_lists
+from .tokenizer_vec import _ranges
 
 # Reference default delimiter set for schema files
 # (reference-unstructured-schema-file.md: `delimiters: \t\r\n:,!;%`).
@@ -142,8 +142,9 @@ def encode_text_schema(text: str, schema: GrokSchema):
 
 
 def encode_batch_schema(texts: pd.Series, schema: GrokSchema) -> pd.DataFrame:
-    """Vectorized schema-file encoder (same output columns as
-    tokenizer_vec.encode_batch)."""
+    """Vectorized schema-file encoder -> DataFrame(logtype, var_types,
+    dict_vars, encoded_nums, dict_slots); hash64.add_id_columns adds the
+    content ids."""
     n = len(texts)
     cols = ["logtype", "var_types", "dict_vars", "encoded_nums", "dict_slots"]
     if n == 0:
@@ -198,6 +199,16 @@ def encode_batch_schema(texts: pd.Series, schema: GrokSchema) -> pd.DataFrame:
             out[c][pos] = v
 
     return pd.DataFrame(out, index=texts.index)
+
+
+def _split_lists(values: np.ndarray, row_of: np.ndarray, n_rows: int) -> list:
+    """Group position-sorted per-token values into one Python list per row."""
+    counts = np.bincount(row_of, minlength=n_rows)
+    offs = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(counts, out=offs[1:])
+    vals = values.tolist()
+    offs_l = offs.tolist()
+    return [vals[a:b] for a, b in zip(offs_l, offs_l[1:])]
 
 
 def _encode_fast_schema(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int, schema: GrokSchema):

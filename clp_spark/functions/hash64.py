@@ -21,7 +21,7 @@ invertibility is what makes the VECTORIZED form possible: with
 S = sum_j byte_j * Pinv^j computable by one cumsum over the whole Arrow
 batch buffer, each string's raw hash is S-range * P^(end-1), all
 segment-summable with no per-row loop). The splitmix64 finalizer gives the
-id uniform low bits (route() buckets by pmod(logtype_id, n_buckets)).
+id uniform low bits (ingest buckets by pmod(logtype_id, n_buckets)).
 
 Like any 64-bit content hash (including the xxhash64 it replaces) this is
 collision-safe to ~1e9 distinct entries (birthday p < 3%); dictionaries
@@ -174,22 +174,3 @@ def add_id_columns(pdf):
     out["dict_var_ids"] = di_col
     out["encoded_vars"] = ev_col
     return out
-
-
-def hash64_series(s) -> np.ndarray:
-    """Vectorized hash of a pandas Series of strings -> int64 numpy array
-    (one flat-buffer hash64_spans call; used by pandas UDFs that need ids
-    for whole string values, e.g. clp_s VarString columns)."""
-    import pandas as pd
-
-    arr = s.to_numpy(dtype=object, copy=False)
-    if s.isna().any():
-        arr = np.where(pd.isna(arr), "", arr)
-    blist = [t.encode("utf-8", "surrogatepass") for t in arr]
-    n = len(blist)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    buf = np.frombuffer(b"".join(blist), dtype=np.uint8)
-    ends = np.cumsum(np.fromiter((len(b) for b in blist), count=n, dtype=np.int64))
-    starts = np.concatenate(([0], ends[:-1]))
-    return hash64_spans(buf, starts, ends)

@@ -13,9 +13,11 @@ Semantics re-derived from the reference (NOT ported code):
   - variable dispatch order int -> float -> dict
     (reference clp/EncodedVariableInterpreter.hpp:637-653)
 
-The hot path is :func:`encode_series`, which is applied per Arrow batch inside
-a pandas UDF (clp_spark/plans/pipeline.py). Per-batch memoization exploits
-template-heavy corpora: repeated identical texts are encoded once.
+This module is the semantics oracle. Ingest encodes whole Arrow batches
+with the numpy encoders in :mod:`clp_spark.functions.tokenizer_vec`, which
+call :func:`encode_text` only for rows needing constant-text escaping;
+:func:`encode_series_scalar` is the one-row-at-a-time reference the tests
+compare those encoders against.
 """
 
 from __future__ import annotations
@@ -187,24 +189,24 @@ def decode_text(logtype: str, dict_vars, encoded_nums) -> str:
     return "".join(out)
 
 
-def encode_series(texts: pd.Series) -> pd.DataFrame:
-    """Batch entry point: encode a pandas Series of messages.
-
-    Delegates to the numpy byte-column implementation
-    (:mod:`clp_spark.functions.tokenizer_vec`) — no per-row Python in the
-    hot path. This scalar module remains the semantics oracle
-    (tests/test_tokenizer_vec.py asserts exact equivalence).
-    """
-    from .tokenizer_vec import encode_batch
-
-    return encode_batch(texts)
+def _slots_from_types(var_types) -> list:
+    """dict_slots for one row: the index into its dict_vars of each
+    variable slot, -1 for int/float slots."""
+    out = []
+    d = 0
+    for t in var_types:
+        if t == VT_DICT:
+            out.append(d)
+            d += 1
+        else:
+            out.append(-1)
+    return out
 
 
 def encode_series_scalar(texts: pd.Series) -> pd.DataFrame:
     """Reference scalar implementation (one Python call per row); used as
     the test oracle for the vectorized path."""
     from .hash64 import add_id_columns
-    from .tokenizer_vec import _slots_from_types
 
     encoded = texts.map(lambda t: encode_text(t) if t is not None else ("", (), (), ()))
     return add_id_columns(

@@ -14,26 +14,29 @@ Semantics re-derived from the reference (NOT ported code):
   - placeholder bytes Integer=0x11, Dictionary=0x12, Float=0x13, Escape='\\':
     reference components/core/src/clp/ir/types.hpp:17-22
 
-Pipeline per batch:
-  1. join rows into one byte buffer with NUL separators (NUL is a delimiter
-     and cannot appear in the vector path — such rows use the scalar path);
+Pipeline per Arrow batch (shared by encode_ids_arrow and encode_full_arrow):
+  1. one scan of the Arrow values buffer finds the rows holding NUL,
+     placeholder or escape bytes; the remaining clean rows are joined into
+     one byte buffer with NUL separators (NUL is a delimiter);
   2. token spans via a 256-entry class table + run-length boundary masks;
   3. per-token predicates (has-digit / has-alpha / all-hex / canonical-int /
      float-form) via prefix-sum gathers — O(buffer), no token loop;
   4. int/float values via `np.add.reduceat` positional digit assembly;
   5. the logtype column is the buffer itself with each variable span
-     collapsed to its placeholder byte, then split back on NUL.
+     collapsed to its placeholder byte, then split back into rows.
 
-Rows whose text contains placeholder/escape bytes (0x11 0x12 0x13 '\\') or
-NUL fall back to the scalar encoder — they need in-place escaping
-(reference clp/ir/parsing.inc:12-33) and are rare by construction.
+Only the rows holding placeholder/escape bytes or NUL go through the scalar
+encoder — they need in-place escaping (reference clp/ir/parsing.inc:12-33),
+which is per message; their outputs are spliced back in input order.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
+from .hash64 import hash64_spans, hash64_str, hash64_strings
 from .tokenizer import (
     PLACEHOLDER_DICT,
     PLACEHOLDER_FLOAT,
@@ -100,145 +103,14 @@ def _prefix(cls: np.ndarray, buf: np.ndarray) -> np.ndarray:
     return out
 
 
-def _slots_from_types(var_types) -> list:
-    """dict_slots for one row from its var_types (scalar-path helper)."""
-    out = []
-    d = 0
-    for t in var_types:
-        if t == VT_DICT:
-            out.append(d)
-            d += 1
-        else:
-            out.append(-1)
-    return out
-
-
-def _split_lists(values: np.ndarray, row_of: np.ndarray, n_rows: int) -> list:
-    """Group position-sorted per-token values into one Python list per row."""
-    counts = np.bincount(row_of, minlength=n_rows)
-    offs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(counts, out=offs[1:])
-    vals = values.tolist()
-    offs_l = offs.tolist()
-    return [vals[a:b] for a, b in zip(offs_l, offs_l[1:])]
-
-
 def _scalar_row_outputs(text: str):
-    """Scalar-path encode of one row -> the full output tuple (with ids)."""
-    from .hash64 import hash64_str, hash64_strings
-
+    """Scalar-path encode of one row -> (logtype, var_types, dict_vars,
+    logtype_id, dict_var_ids, encoded_vars)."""
     lt, vt, dv, en = encode_text(text)
     di = hash64_strings(dv)
-    ev = []
-    d = 0
-    for t, e in zip(vt, en):
-        if t == VT_DICT:
-            ev.append(di[d])
-            d += 1
-        else:
-            ev.append(e)
-    return (
-        lt, list(vt), list(dv), list(en), _slots_from_types(vt),
-        hash64_str(lt), di, ev,
-    )
-
-
-def encode_batch(texts: pd.Series) -> pd.DataFrame:
-    """Encode a Series of messages -> DataFrame(logtype, var_types,
-    dict_vars, encoded_nums, dict_slots, logtype_id, dict_var_ids,
-    encoded_vars), vectorized. dict_slots[i] is the index into dict_vars
-    for variable slot i (-1 for int/float slots); *_id columns are hash64
-    content ids computed in-batch (functions/hash64.py) and encoded_vars is
-    encoded_nums with dict slots filled with their ids."""
-    n = len(texts)
-    if n == 0:
-        return pd.DataFrame(
-            {
-                "logtype": [],
-                "var_types": [],
-                "dict_vars": [],
-                "encoded_nums": [],
-                "dict_slots": [],
-                "logtype_id": pd.Series([], dtype="int64"),
-                "dict_var_ids": [],
-                "encoded_vars": [],
-            }
-        )
-
-    arr = texts.to_numpy(dtype=object, copy=False)
-    if texts.isna().any():
-        arr = np.where(pd.isna(arr), "", arr)
-
-    blist = [t.encode("utf-8", "surrogatepass") for t in arr]
-    lens = np.fromiter((len(b) for b in blist), count=n, dtype=np.int64)
-    joined = b"\x00".join(blist)
-    buf = np.frombuffer(joined, dtype=np.uint8)
-    row_start = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1] + 1, out=row_start[1:])
-
-    # Rows containing NUL / placeholder / escape bytes take the scalar path
-    # (they need in-place constant escaping). Detected on the joined buffer
-    # in one numpy pass — zero cost when there are none (the common case).
-    bad_pos = np.flatnonzero(_IS_SCALAR_BYTE[buf])
-    sep_pos = row_start[1:] - 1  # the NUL separators themselves
-    bad_pos = bad_pos[~np.isin(bad_pos, sep_pos)] if len(bad_pos) else bad_pos
-
-    out_logtype = np.empty(n, dtype=object)
-    out_vt = np.empty(n, dtype=object)
-    out_dv = np.empty(n, dtype=object)
-    out_en = np.empty(n, dtype=object)
-    out_sl = np.empty(n, dtype=object)
-    out_lid = np.zeros(n, dtype=np.int64)
-    out_di = np.empty(n, dtype=object)
-    out_ev = np.empty(n, dtype=object)
-
-    if len(bad_pos):
-        bad_rows = np.unique(np.searchsorted(row_start, bad_pos, side="right") - 1)
-        for i in bad_rows:
-            (
-                out_logtype[i], out_vt[i], out_dv[i], out_en[i], out_sl[i],
-                out_lid[i], out_di[i], out_ev[i],
-            ) = _scalar_row_outputs(arr[i])
-        good = np.ones(n, dtype=bool)
-        good[bad_rows] = False
-        fast_pos = np.flatnonzero(good)
-        fast_blist = [blist[i] for i in fast_pos]
-        joined = b"\x00".join(fast_blist)
-        buf = np.frombuffer(joined, dtype=np.uint8)
-        lens = lens[fast_pos]
-        row_start = np.zeros(len(fast_pos), dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=row_start[1:])
-    else:
-        fast_pos = None
-
-    if fast_pos is None or len(fast_pos):
-        n_fast = n if fast_pos is None else len(fast_pos)
-        lt_l, vt_l, dv_l, en_l, sl_l, lid, di_l, ev_l = _encode_fast(
-            joined, buf, row_start, n_fast
-        )
-        pos = slice(None) if fast_pos is None else fast_pos
-        out_logtype[pos] = lt_l
-        out_vt[pos] = vt_l
-        out_dv[pos] = dv_l
-        out_en[pos] = en_l
-        out_sl[pos] = sl_l
-        out_lid[pos] = lid
-        out_di[pos] = di_l
-        out_ev[pos] = ev_l
-
-    return pd.DataFrame(
-        {
-            "logtype": out_logtype,
-            "var_types": out_vt,
-            "dict_vars": out_dv,
-            "encoded_nums": out_en,
-            "dict_slots": out_sl,
-            "logtype_id": out_lid,
-            "dict_var_ids": out_di,
-            "encoded_vars": out_ev,
-        },
-        index=texts.index,
-    )
+    ids = iter(di)
+    ev = [next(ids) if t == VT_DICT else e for t, e in zip(vt, en)]
+    return lt, list(vt), list(dv), hash64_str(lt), di, ev
 
 
 class _Analysis:
@@ -249,22 +121,18 @@ class _Analysis:
     __slots__ = (
         "tok_s", "tok_e", "v_idx", "d_idx", "v_types",
         "int_vals", "float_vals", "int_form", "float_form",
-        "out", "keep", "empty",
+        "out", "keep",
     )
 
 
-def _analyze(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int) -> _Analysis:
+def _analyze(buf: np.ndarray) -> _Analysis:
     """Vector path over rows guaranteed free of NUL/placeholder/escape bytes.
 
-    `joined` is the rows' UTF-8 bytes NUL-separated, `buf` its uint8 view,
-    `row_start[i]` the buffer offset of row i."""
+    `buf` is the rows' UTF-8 bytes, NUL-separated. An empty buffer or one
+    without tokens yields zero-length token arrays (logtype == raw text)."""
     a = _Analysis()
-    a.empty = False
     # --- token spans ------------------------------------------------------
     nb = len(buf)
-    if nb == 0:
-        a.empty = True
-        return a
     mask = _IS_TOKEN[buf]
     # token spans as mask TRANSITIONS: one xor pass + one flatnonzero
     # instead of two shifted-mask temporaries and two flatnonzeros
@@ -272,8 +140,8 @@ def _analyze(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int) -> _
     # Transitions alternate start/end; a True first byte opens a span at 0,
     # a True last byte closes one at nb.
     ch = np.flatnonzero(mask[1:] != mask[:-1]) + 1
-    first = bool(mask[0])
-    last = bool(mask[-1])
+    first = nb > 0 and bool(mask[0])
+    last = nb > 0 and bool(mask[-1])
     bnd = np.empty(len(ch) + first + last, dtype=np.int64)
     if first:
         bnd[0] = 0
@@ -282,10 +150,6 @@ def _analyze(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int) -> _
         bnd[-1] = nb
     tok_s = bnd[0::2]
     tok_e = bnd[1::2]
-
-    if len(tok_s) == 0:
-        a.empty = True
-        return a
 
     # --- per-token predicates ---------------------------------------------
     # digit counts come from a prefix sum (cdig is ALSO needed per-position
@@ -378,8 +242,7 @@ def _analyze(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int) -> _
 
     # 19+ digit candidates: exact python check (rare)
     for j in np.flatnonzero(big_int):
-        tok = joined[tok_s[j] : tok_e[j]].decode()
-        v = int(tok)
+        v = int(buf[tok_s[j] : tok_e[j]].tobytes())
         if _INT64_MIN <= v <= _INT64_MAX:
             int_vals[j] = v
             int_vec[j] = True
@@ -447,24 +310,6 @@ def _analyze(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int) -> _
     return a
 
 
-def _logtype_hashes(a: _Analysis, buf: np.ndarray, row_start: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Per-row hash64 of the collapsed (placeholder) logtype bytes — the
-    template string's content id WITHOUT materializing the string."""
-    from .hash64 import hash64_spans
-
-    kc = np.zeros(len(buf) + 1, dtype=np.int64)
-    np.cumsum(a.keep, out=kc[1:])
-    cbuf = a.out[a.keep]
-    return hash64_spans(cbuf, kc[row_start], kc[row_start + lens])
-
-
-def _dict_hashes(a: _Analysis, buf: np.ndarray) -> np.ndarray:
-    """hash64 of each dictionary-variable token's UTF-8 byte span."""
-    from .hash64 import hash64_spans
-
-    return hash64_spans(buf, a.tok_s[a.d_idx], a.tok_e[a.d_idx])
-
-
 def _encoded_var_values(a: _Analysis, dict_ids: np.ndarray) -> np.ndarray:
     """Final per-variable int64 encodings, in token order: canonical int /
     custom float encodings where typed, dictionary content hash otherwise
@@ -479,171 +324,9 @@ def _encoded_var_values(a: _Analysis, dict_ids: np.ndarray) -> np.ndarray:
     return v_final
 
 
-def _encode_fast(joined: bytes, buf: np.ndarray, row_start: np.ndarray, n: int):
-    """Full-output vector path: logtype strings + per-row lists + content
-    ids (logtype_id / dict_var_ids / encoded_vars) in one pass."""
-    a = _analyze(joined, buf, row_start, n)
-    nb = len(buf)
-    if a.empty:
-        from .hash64 import hash64_strings
-
-        logtypes = (
-            [""] * n
-            if nb == 0
-            else [b.decode("utf-8", "surrogatepass") for b in joined.split(b"\x00")]
-        )
-        lt_ids = np.fromiter(hash64_strings(logtypes), count=n, dtype=np.int64)
-        empties = lambda: [[] for _ in range(n)]  # noqa: E731
-        return (
-            logtypes, empties(), empties(), empties(), empties(),
-            lt_ids, empties(), empties(),
-        )
-
-    tok_s, tok_e, v_idx, d_idx, v_types = a.tok_s, a.tok_e, a.v_idx, a.d_idx, a.v_types
-
-    v_nums = np.empty(len(v_idx), dtype=object)
-    v_nums[:] = None
-    im = a.int_form[v_idx]
-    fm = a.float_form[v_idx]
-    v_nums[im] = a.int_vals[v_idx][im].tolist()
-    v_nums[fm] = a.float_vals[v_idx][fm].tolist()
-
-    dict_strs = np.empty(len(d_idx), dtype=object)
-    for k, j in enumerate(d_idx):
-        dict_strs[k] = joined[tok_s[j] : tok_e[j]].decode("utf-8")
-
-    # per-variable slot index into the row's dict_vars (-1 for int/float
-    # slots) — lets the JVM merge dict ids into encoded_vars with a cheap
-    # transform instead of a stateful aggregate.
-    row_of_dict = np.searchsorted(row_start, tok_s[d_idx], side="right") - 1
-    v_slots = np.full(len(v_idx), -1, dtype=np.int64)
-    if len(d_idx):
-        within_row_rank = _ranges(np.bincount(row_of_dict)[np.unique(row_of_dict)])
-        v_slots[np.searchsorted(v_idx, d_idx)] = within_row_rank
-
-    logtypes = [
-        b.decode("utf-8", "surrogatepass") for b in a.out[a.keep].tobytes().split(b"\x00")
-    ]
-
-    # content ids (same hash as the ids-only Arrow path and the driver-side
-    # query candidate generation — see functions/hash64.py)
-    lens = np.empty(n, dtype=np.int64)
-    lens[:-1] = row_start[1:] - row_start[:-1] - 1
-    lens[-1] = nb - row_start[-1]
-    lt_ids = _logtype_hashes(a, buf, row_start, lens)
-    dict_ids = _dict_hashes(a, buf)
-    v_final = _encoded_var_values(a, dict_ids)
-
-    # --- group per row ----------------------------------------------------
-    row_of_var = np.searchsorted(row_start, tok_s[v_idx], side="right") - 1
-    vt_l = _split_lists(v_types, row_of_var, n)
-    en_l = _split_lists(v_nums, row_of_var, n)
-    sl_l = _split_lists(v_slots, row_of_var, n)
-    dv_l = _split_lists(dict_strs, row_of_dict, n)
-    di_l = _split_lists(dict_ids, row_of_dict, n)
-    ev_l = _split_lists(v_final, row_of_var, n)
-    return logtypes, vt_l, dv_l, en_l, sl_l, lt_ids, di_l, ev_l
-
-
-def encode_ids_arrow(texts):
-    """Ids-only Arrow-native encode: pa.Array of strings ->
-    (logtype_id: pa.Array int64, encoded_vars: pa.ListArray int64).
-
-    The 100-TB hot path (reference parity: the message store holds ONLY
-    ids + encoded values, File.hpp:257-259 — template/variable STRINGS live
-    in the dictionaries). Zero per-row Python:
-      * the UTF-8 bytes come straight from the Arrow string buffers
-        (no Python str objects are ever created);
-      * the NUL-joined working buffer is built with one gather/scatter;
-      * token analysis is the same numpy pass as the full path;
-      * logtype ids hash the placeholder-collapsed spans, dict-var ids hash
-        the raw token spans (functions/hash64.py);
-      * outputs go back as Arrow arrays built from numpy (zero-copy).
-
-    Rows with placeholder/escape bytes force the batch onto the pandas path
-    (rare by construction; correctness identical either way).
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n = len(texts)
-    if n == 0:
-        return (
-            pa.array([], type=pa.int64()),
-            pa.ListArray.from_arrays(pa.array([0], type=pa.int32()), pa.array([], type=pa.int64())),
-        )
-    if texts.null_count:
-        texts = pc.fill_null(texts, "")
-    # normalize to large_string for int64 offsets (cheap C cast)
-    if not pa.types.is_large_string(texts.type):
-        texts = texts.cast(pa.large_string())
-    if isinstance(texts, pa.ChunkedArray):
-        texts = texts.combine_chunks()
-
-    buffers = texts.buffers()
-    raw = buffers[2]
-    obuf = (
-        np.frombuffer(raw, dtype=np.uint8, count=raw.size)
-        if raw is not None
-        else np.zeros(0, dtype=np.uint8)
-    )
-    offs_all = np.frombuffer(buffers[1], dtype=np.int64)
-    offs = offs_all[texts.offset : texts.offset + n + 1]
-    lens = np.diff(offs)
-
-    # NUL-joined working buffer via one scatter (no per-row Python)
-    total = int(lens.sum())
-    nb = total + n - 1 if n > 1 else total
-    row_start = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1] + 1, out=row_start[1:])
-    buf = np.zeros(max(nb, 0), dtype=np.uint8)
-    pos_in_row = _ranges(lens)
-    src = np.repeat(offs[:-1], lens) + pos_in_row
-    dst = np.repeat(row_start, lens) + pos_in_row
-    buf[dst] = obuf[src]
-
-    # placeholder/escape bytes -> whole-batch pandas fallback (rare)
-    bad = np.flatnonzero(_IS_SCALAR_BYTE[buf])
-    sep_pos = row_start[1:] - 1
-    if len(bad) and len(bad[~np.isin(bad, sep_pos)]):
-        pdf = encode_batch(pd.Series(texts.to_pylist()))
-        lid = pa.array(pdf["logtype_id"].to_numpy(), type=pa.int64())
-        ev = pa.array(pdf["encoded_vars"].tolist(), type=pa.list_(pa.int64()))
-        return lid, ev
-
-    a = _analyze(buf.tobytes(), buf, row_start, n)
-    if a.empty:
-        # no variable tokens anywhere: logtype == raw text per row
-        from .hash64 import hash64_spans
-
-        lt_ids = hash64_spans(obuf, offs[:-1], offs[1:])
-        return (
-            pa.array(lt_ids, type=pa.int64()),
-            pa.ListArray.from_arrays(
-                pa.array(np.zeros(n + 1, dtype=np.int32)),
-                pa.array([], type=pa.int64()),
-            ),
-        )
-
-    lt_ids = _logtype_hashes(a, buf, row_start, lens)
-    dict_ids = _dict_hashes(a, buf)
-    v_final = _encoded_var_values(a, dict_ids)
-
-    row_of_var = np.searchsorted(row_start, a.tok_s[a.v_idx], side="right") - 1
-    counts = np.bincount(row_of_var, minlength=n)
-    ev_offsets = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(counts, out=ev_offsets[1:])
-    ev = pa.ListArray.from_arrays(
-        pa.array(ev_offsets), pa.array(v_final.astype(np.int64), type=pa.int64())
-    )
-    return pa.array(lt_ids, type=pa.int64()), ev
-
-
 def _pa_strings_from_spans(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray):
     """Arrow StringArray from byte spans of one buffer: ONE gather into a
     contiguous values buffer + int32 offsets — no Python str objects."""
-    import pyarrow as pa
-
     lens = ends - starts
     pos = _ranges(lens)
     values = buf[np.repeat(starts, lens) + pos] if len(pos) else np.zeros(0, np.uint8)
@@ -654,144 +337,141 @@ def _pa_strings_from_spans(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray
     )
 
 
-def _pa_list(offsets_counts: np.ndarray, values) -> "object":
-    import pyarrow as pa
-
+def _pa_list(offsets_counts: np.ndarray, values) -> pa.ListArray:
     offs = np.zeros(len(offsets_counts) + 1, dtype=np.int32)
     np.cumsum(offsets_counts, out=offs[1:])
     return pa.ListArray.from_arrays(pa.array(offs), values)
+
+
+def _prelude(texts):
+    """Shared prelude of both encoders: nulls -> "", one large_string chunk,
+    and ONE scan for NUL/placeholder/escape bytes over the Arrow values
+    buffer. Returns (texts, values buffer, row starts, row lengths, sorted
+    indices of the rows that need the scalar encoder)."""
+    if texts.null_count:
+        texts = pc.fill_null(texts, "")
+    # large_string for int64 offsets (cheap C cast)
+    if not pa.types.is_large_string(texts.type):
+        texts = texts.cast(pa.large_string())
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    n = len(texts)
+    _, offs_buf, raw = texts.buffers()
+    obuf = np.frombuffer(raw, dtype=np.uint8) if raw is not None else np.zeros(0, np.uint8)
+    offs = (
+        np.frombuffer(offs_buf, dtype=np.int64)[texts.offset : texts.offset + n + 1]
+        if n
+        else np.zeros(1, dtype=np.int64)
+    )
+    lo = int(offs[0])
+    bad = np.flatnonzero(_IS_SCALAR_BYTE[obuf[lo : int(offs[-1])]]) + lo
+    bad_rows = np.unique(np.searchsorted(offs, bad, side="right") - 1)
+    return texts, obuf, offs[:-1], np.diff(offs), bad_rows
+
+
+def _join(obuf: np.ndarray, starts: np.ndarray, lens: np.ndarray):
+    """NUL-joined working buffer of the given rows via one gather/scatter
+    (no per-row Python) -> (buf, row_start)."""
+    n = len(lens)
+    row_start = np.zeros(n, dtype=np.int64)
+    np.cumsum(lens[:-1] + 1, out=row_start[1:])
+    buf = np.zeros(int(lens.sum()) + max(n - 1, 0), dtype=np.uint8)
+    pos_in_row = _ranges(lens)
+    buf[np.repeat(row_start, lens) + pos_in_row] = obuf[np.repeat(starts, lens) + pos_in_row]
+    return buf, row_start
+
+
+def _logtype_spans(a: _Analysis, row_start: np.ndarray, lens: np.ndarray):
+    """Placeholder-collapsed logtype bytes of all rows, contiguous (killed
+    var-span bytes AND the NUL separators dropped), plus each row's
+    [start, end) in them -> (cbuf, starts, ends)."""
+    a.keep[row_start[1:] - 1] = False
+    kc = np.zeros(len(a.keep) + 1, dtype=np.int64)
+    np.cumsum(a.keep, out=kc[1:])
+    return a.out[a.keep], kc[row_start], kc[row_start + lens]
+
+
+def _encode_clean(obuf: np.ndarray, starts: np.ndarray, lens: np.ndarray, full: bool) -> dict:
+    """Vector path over rows free of NUL/placeholder/escape bytes. Logtype
+    ids hash the placeholder-collapsed spans, dict-var ids hash the raw
+    token spans (functions/hash64.py); with `full`, the logtype and
+    dict-var strings are each one gather into a contiguous Arrow values
+    buffer."""
+    n = len(lens)
+    buf, row_start = _join(obuf, starts, lens)
+    a = _analyze(buf)
+    cbuf, lt_s, lt_e = _logtype_spans(a, row_start, lens)
+    d_s, d_e = a.tok_s[a.d_idx], a.tok_e[a.d_idx]
+    dict_ids = hash64_spans(buf, d_s, d_e)
+    row_of_var = np.searchsorted(row_start, a.tok_s[a.v_idx], side="right") - 1
+    var_counts = np.bincount(row_of_var, minlength=n)
+    out = {
+        "logtype_id": pa.array(hash64_spans(cbuf, lt_s, lt_e), type=pa.int64()),
+        "encoded_vars": _pa_list(
+            var_counts, pa.array(_encoded_var_values(a, dict_ids), type=pa.int64())
+        ),
+    }
+    if full:
+        row_of_dict = np.searchsorted(row_start, d_s, side="right") - 1
+        dict_counts = np.bincount(row_of_dict, minlength=n)
+        out["logtype"] = _pa_strings_from_spans(cbuf, lt_s, lt_e)
+        out["var_types"] = _pa_list(var_counts, pa.array(a.v_types.astype(np.int32)))
+        out["dict_vars"] = _pa_list(dict_counts, _pa_strings_from_spans(buf, d_s, d_e))
+        out["dict_var_ids"] = _pa_list(dict_counts, pa.array(dict_ids, type=pa.int64()))
+    return out
+
+
+def _encode_escaped(texts: list, full: bool) -> dict:
+    """Scalar path for the rows needing constant-text escaping."""
+    lt, vt, dv, lid, di, ev = zip(*map(_scalar_row_outputs, texts))
+    out = {
+        "logtype_id": pa.array(lid, type=pa.int64()),
+        "encoded_vars": pa.array(ev, type=pa.list_(pa.int64())),
+    }
+    if full:
+        out["logtype"] = pa.array(lt, type=pa.string())
+        out["var_types"] = pa.array(vt, type=pa.list_(pa.int32()))
+        out["dict_vars"] = pa.array(dv, type=pa.list_(pa.string()))
+        out["dict_var_ids"] = pa.array(di, type=pa.list_(pa.int64()))
+    return out
+
+
+def _encode(texts, full: bool) -> dict:
+    """Clean rows through the vector path, escape rows through the scalar
+    encoder, spliced back into input order with one take per column."""
+    texts, obuf, starts, lens, bad = _prelude(texts)
+    if not len(bad):
+        return _encode_clean(obuf, starts, lens, full)
+    n = len(texts)
+    good = np.setdiff1d(np.arange(n), bad, assume_unique=True)
+    fast = _encode_clean(obuf, starts[good], lens[good], full)
+    slow = _encode_escaped(texts.take(pa.array(bad)).to_pylist(), full)
+    inverse = np.empty(n, dtype=np.int64)
+    inverse[np.concatenate([good, bad])] = np.arange(n)
+    inverse = pa.array(inverse)
+    return {k: pa.concat_arrays([fast[k], slow[k]]).take(inverse) for k in fast}
+
+
+def encode_ids_arrow(texts):
+    """Ids-only Arrow-native encode: pa.Array of strings ->
+    (logtype_id: pa.Array int64, encoded_vars: pa.ListArray int64).
+
+    The 100-TB hot path (reference parity: the message store holds ONLY
+    ids + encoded values, File.hpp:257-259 — template/variable STRINGS live
+    in the dictionaries): the UTF-8 bytes come straight from the Arrow
+    string buffers, no Python str objects are created for clean rows, and
+    outputs go back as Arrow arrays built from numpy.
+    """
+    out = _encode(texts, full=False)
+    return out["logtype_id"], out["encoded_vars"]
 
 
 def encode_full_arrow(texts):
     """Arrow-native FULL encode: pa string array -> dict of pa arrays
     (logtype, var_types, dict_vars, logtype_id, dict_var_ids, encoded_vars).
 
-    Same semantics as encode_batch, zero per-row Python anywhere: input
-    bytes come from the Arrow buffers, the logtype strings are rebuilt as
-    one gather into a contiguous Arrow values buffer, dict-var strings
-    likewise, ids are span-hashed. Batches containing placeholder/escape
-    bytes fall back to the pandas path wholesale (rare by construction).
+    Same analysis as encode_ids_arrow; additionally the logtype strings are
+    rebuilt as one gather into a contiguous Arrow values buffer, dict-var
+    strings likewise.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n = len(texts)
-    empty64 = pa.array([], type=pa.int64())
-    if n == 0:
-        return {
-            "logtype": pa.array([], type=pa.string()),
-            "var_types": pa.ListArray.from_arrays(
-                pa.array([0], type=pa.int32()), pa.array([], type=pa.int32())
-            ),
-            "dict_vars": pa.ListArray.from_arrays(
-                pa.array([0], type=pa.int32()), pa.array([], type=pa.string())
-            ),
-            "logtype_id": empty64,
-            "dict_var_ids": pa.ListArray.from_arrays(
-                pa.array([0], type=pa.int32()), empty64
-            ),
-            "encoded_vars": pa.ListArray.from_arrays(
-                pa.array([0], type=pa.int32()), empty64
-            ),
-        }
-    if texts.null_count:
-        texts = pc.fill_null(texts, "")
-    if not pa.types.is_large_string(texts.type):
-        texts = texts.cast(pa.large_string())
-    if isinstance(texts, pa.ChunkedArray):
-        texts = texts.combine_chunks()
-
-    buffers = texts.buffers()
-    raw = buffers[2]
-    obuf = (
-        np.frombuffer(raw, dtype=np.uint8, count=raw.size)
-        if raw is not None
-        else np.zeros(0, dtype=np.uint8)
-    )
-    offs_all = np.frombuffer(buffers[1], dtype=np.int64)
-    offs = offs_all[texts.offset : texts.offset + n + 1]
-    lens = np.diff(offs)
-
-    total = int(lens.sum())
-    nb = total + n - 1 if n > 1 else total
-    row_start = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1] + 1, out=row_start[1:])
-    buf = np.zeros(max(nb, 0), dtype=np.uint8)
-    pos_in_row = _ranges(lens)
-    src = np.repeat(offs[:-1], lens) + pos_in_row
-    dst = np.repeat(row_start, lens) + pos_in_row
-    buf[dst] = obuf[src]
-
-    bad = np.flatnonzero(_IS_SCALAR_BYTE[buf])
-    sep_pos = row_start[1:] - 1
-    if len(bad) and len(bad[~np.isin(bad, sep_pos)]):
-        pdf = encode_batch(pd.Series(texts.to_pylist()))
-        return {
-            "logtype": pa.array(pdf["logtype"], type=pa.string()),
-            "var_types": pa.array(
-                pdf["var_types"].tolist(), type=pa.list_(pa.int32())
-            ),
-            "dict_vars": pa.array(
-                pdf["dict_vars"].tolist(), type=pa.list_(pa.string())
-            ),
-            "logtype_id": pa.array(pdf["logtype_id"].to_numpy(), type=pa.int64()),
-            "dict_var_ids": pa.array(
-                pdf["dict_var_ids"].tolist(), type=pa.list_(pa.int64())
-            ),
-            "encoded_vars": pa.array(
-                pdf["encoded_vars"].tolist(), type=pa.list_(pa.int64())
-            ),
-        }
-
-    a = _analyze(buf.tobytes(), buf, row_start, n)
-    if a.empty:
-        from .hash64 import hash64_spans
-
-        lt_ids = hash64_spans(obuf, offs[:-1], offs[1:])
-        zero_counts = np.zeros(n, dtype=np.int64)
-        return {
-            "logtype": texts.cast(pa.string()),
-            "var_types": _pa_list(zero_counts, pa.array([], type=pa.int32())),
-            "dict_vars": _pa_list(zero_counts, pa.array([], type=pa.string())),
-            "logtype_id": pa.array(lt_ids, type=pa.int64()),
-            "dict_var_ids": _pa_list(zero_counts, empty64),
-            "encoded_vars": _pa_list(zero_counts, empty64),
-        }
-
-    lt_ids = _logtype_hashes(a, buf, row_start, lens)
-    dict_ids = _dict_hashes(a, buf)
-    v_final = _encoded_var_values(a, dict_ids)
-
-    # logtype strings: drop killed var-span bytes AND the NUL separators so
-    # rows become contiguous in one Arrow values buffer
-    keep_all = a.keep.copy()
-    if n > 1:
-        keep_all[sep_pos] = False
-    kc = np.zeros(nb + 1, dtype=np.int64)
-    np.cumsum(keep_all, out=kc[1:])
-    cbuf = a.out[keep_all]
-    lt_arr = _pa_strings_from_spans(
-        cbuf,
-        kc[row_start],
-        kc[np.minimum(row_start + lens, nb)],
-    )
-
-    row_of_var = np.searchsorted(row_start, a.tok_s[a.v_idx], side="right") - 1
-    row_of_dict = np.searchsorted(row_start, a.tok_s[a.d_idx], side="right") - 1
-    var_counts = np.bincount(row_of_var, minlength=n)
-    dict_counts = np.bincount(row_of_dict, minlength=n)
-
-    dv_values = _pa_strings_from_spans(buf, a.tok_s[a.d_idx], a.tok_e[a.d_idx])
-
-    import pyarrow as _pa
-
-    return {
-        "logtype": lt_arr,
-        "var_types": _pa_list(var_counts, _pa.array(a.v_types.astype(np.int32))),
-        "dict_vars": _pa_list(dict_counts, dv_values),
-        "logtype_id": _pa.array(lt_ids, type=_pa.int64()),
-        "dict_var_ids": _pa_list(dict_counts, _pa.array(dict_ids, type=_pa.int64())),
-        "encoded_vars": _pa_list(
-            var_counts, _pa.array(v_final.astype(np.int64), type=_pa.int64())
-        ),
-    }
+    return _encode(texts, full=True)

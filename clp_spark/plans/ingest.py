@@ -143,10 +143,12 @@ def ingest(
     the per-write option, not session config.
 
     Resumable: completed steps recorded in out/_manifest.json are skipped
-    (pass resume=False to force a full rebuild). `cache_parsed` persists the
-    parsed DataFrame across the sink jobs — right for memory-sized runs; at
-    cluster scale prefer StorageLevel.DISK_ONLY or accept a second parse
-    pass (both keep parallel efficiency; see bench.py). `only_steps`
+    (pass resume=False to force a full rebuild). `cache_parsed` persists
+    only the columns the dictionary steps read, so logtype_dict and
+    var_dict share one parse. The messages step does not read that cache
+    and runs its own parse, so a full ingest parses every turn twice: once
+    for the messages write and once when the first dictionary step fills
+    the cache. `only_steps`
     restricts the run to a subset of steps (e.g. {"messages"} for the
     parsed+routed scaling probe).
     """

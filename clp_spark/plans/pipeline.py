@@ -4,10 +4,11 @@ Spark-first re-expression of CLP's compression path
 (reference walk: clp/clp/FileCompressor.cpp -> clp/streaming_archive/writer/
 Archive.cpp:299-316 write_msg -> EncodedVariableInterpreter.hpp:317-336):
 
-  raw turns --pandas_udf(tokenize+encode+hash)--> parsed  (ids born in-UDF)
+  raw turns --mapInArrow(tokenize+encode+hash)--> parsed  (ids born in-UDF)
       parsed --groupBy--> logtype dictionary, var dictionary (content-hash ids)
       parsed --broadcast join--> role/tool enrichment
-      parsed --repartition(bucket, salt)--> per-logtype-bucket sinks
+      parsed --pmod(logtype_id, n_buckets)--> per-logtype-bucket sinks,
+             written partition-local (no shuffle; plans/ingest.py)
       parsed --groupBy--> per-logtype / per-tool / per-conversation counts
 
 Design-for-scale notes:
@@ -22,16 +23,16 @@ Design-for-scale notes:
     Arrow entirely.
   * per-turn work happens once in ONE Arrow-batched UDF; everything after is
     whole-stage-codegen column ops (no Python in the agg/join/route path).
-  * the logtype distribution is Zipfian (one hot template >= 40% of rows) —
-    routed writes salt the partition key so a hot logtype spreads over
-    `n_salts` tasks instead of one straggler; AQE skew-join covers the read
-    side.
+  * the logtype distribution is Zipfian (one hot template >= 40% of rows);
+    because the bucket column is derived in place rather than shuffled on,
+    a hot logtype stays spread over the input splits instead of landing on
+    one straggler task; AQE skew-join covers the read side.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -60,28 +61,6 @@ PARSED_EXTRA_FIELDS = [
 ]
 
 _ENCODED_STRUCT = StructType(PARSED_EXTRA_FIELDS)
-
-
-@F.pandas_udf(_ENCODED_STRUCT)
-def _encode_udf(texts: pd.Series) -> pd.DataFrame:
-    # import inside the worker so --py-files deployment works
-    from clp_spark.functions.tokenizer import encode_series
-
-    pdf = encode_series(texts)
-    return pdf[["logtype", "var_types", "dict_vars", "logtype_id", "dict_var_ids", "encoded_vars"]]
-
-
-def parse_encode_scalar(transcripts: DataFrame, text_col: str = "text") -> DataFrame:
-    """Scalar-pandas-UDF variant of parse_encode — use when downstream MIGHT
-    not consume the parse outputs: a scalar UDF in a Project is ELIDED by
-    Catalyst column pruning when nothing references its struct (a declared-
-    then-unused parse costs zero), whereas the mapInArrow node in
-    parse_encode is a black-box barrier Catalyst cannot remove. When the
-    outputs ARE consumed, prefer parse_encode: its Arrow-native
-    marshalling is faster than this path's pandas object columns."""
-    return transcripts.withColumn("_enc", _encode_udf(F.col(text_col))).select(
-        "*", "_enc.*"
-    ).drop("_enc")
 
 
 def parse_encode(transcripts: DataFrame, text_col: str = "text") -> DataFrame:
@@ -201,36 +180,12 @@ def build_var_dict(parsed: DataFrame) -> DataFrame:
     )
 
 
-def dense_ids(dict_df: DataFrame, id_col: str, order_col: str) -> DataFrame:
-    """Optional dense 0..N-1 ids (reference first-seen-wins analog,
-    deterministic here by ordering on content). Single-partition window —
-    only for small dictionaries / parity debugging; hashes are the scale path."""
-    w = Window.orderBy(order_col)
-    return dict_df.withColumn(id_col, F.row_number().over(w) - F.lit(1))
-
-
 def enrich(parsed: DataFrame, dim_role: DataFrame, dim_tool: DataFrame) -> DataFrame:
     """Broadcast-hash enrich (analog of CLP var-dict lookup joins,
     SURVEY.md §2.3; dims are tiny, never shuffled)."""
     return parsed.join(F.broadcast(dim_role), "role", "left").join(
         F.broadcast(dim_tool), "tool", "left"
     )
-
-
-def route(parsed: DataFrame, n_buckets: int = 16, n_salts: int = 8) -> DataFrame:
-    """Assign fan-out bucket + skew salt for per-logtype-bucket sinks.
-
-    Analog of glt's per-logtype tables (glt/.../LogtypeTable.hpp:13-76) as
-    hash-bucketed partitions. `repartition(bucket, salt)` spreads a hot
-    logtype over n_salts writer tasks (salting per SURVEY.md §4.2).
-    """
-    routed = parsed.withColumn(
-        "logtype_bucket", F.pmod(F.col("logtype_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn(
-        "salt",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts)).cast("int"),
-    )
-    return routed.repartition("logtype_bucket", "salt")
 
 
 def encoded_messages(parsed: DataFrame) -> DataFrame:

@@ -277,11 +277,6 @@ def expire_snapshots(sink_dir: str, keep_last: int = 2) -> int:
     return len(drop)
 
 
-def compact_all(spark: SparkSession, out_dir: str) -> None:
-    for name in DICT_SINKS:
-        compact_dict_sink(spark, os.path.join(out_dir, name))
-
-
 def _sink_parsed_batch(
     spark: SparkSession,
     out_dir: str,

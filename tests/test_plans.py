@@ -71,40 +71,6 @@ def test_bucket_partition_pruning_on_sink(spark, sink):
     assert df.count() > 0
 
 
-def test_salting_spreads_hot_logtype(spark):
-    """The corpus is Zipfian (one template ~40% of rows). route()'s
-    (bucket, salt) repartition must spread that hot logtype over n_salts
-    partitions instead of one straggler."""
-    # AQE would legitimately coalesce this small corpus into one partition;
-    # disable coalescing to observe the salt spread itself
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        _salting_body(spark)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-
-
-def _salting_body(spark):
-    t = load_transcripts(spark, "/root/testdata/sf0.01")
-    routed = P.route(P.parse_encode(t), n_buckets=16, n_salts=8)
-    hot = (
-        routed.groupBy("logtype_id")
-        .count()
-        .orderBy(F.desc("count"))
-        .first()["logtype_id"]
-    )
-    per_part = (
-        routed.filter(F.col("logtype_id") == hot)
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    counts = [r["count"] for r in per_part]
-    assert len(counts) >= 6  # hot rows landed on many partitions
-    assert max(counts) < 0.5 * sum(counts)  # no single straggler partition
-
-
 def test_shuffle_free_messages_write_plan(spark):
     """The routed messages sink must have NO Exchange between the parse and
     the write (fan-out without shuffle — the design claim in ingest.py)."""

@@ -19,7 +19,7 @@ from clp_spark.functions.render_vec import (
     render_groups,
     render_joined_batch,
 )
-from clp_spark.functions.tokenizer import encode_series, render_batch
+from clp_spark.functions.tokenizer import encode_series_scalar, render_batch
 
 
 def test_decode_float_vec_matches_scalar():
@@ -52,7 +52,7 @@ def encoded_corpus():
         "single 1",
         "big 12345678901234567890 int overflows to dict",
     ] * 20
-    pdf = encode_series(pd.Series(texts))
+    pdf = encode_series_scalar(pd.Series(texts))
     return texts, pdf
 
 

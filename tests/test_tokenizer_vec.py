@@ -1,19 +1,26 @@
-"""Exact equivalence of the vectorized tokenizer vs the scalar oracle.
+"""Exact equivalence of the Arrow batch encoders vs the scalar oracle.
 
 The scalar implementation (clp_spark.functions.tokenizer) encodes CLP's
-documented rules one string at a time; the vectorized one
-(clp_spark.functions.tokenizer_vec) must produce byte-identical outputs for
-every input, including the escape/NUL rows it routes to the scalar path.
+documented rules one string at a time; the production encoders
+(clp_spark.functions.tokenizer_vec.encode_full_arrow / encode_ids_arrow)
+must produce identical outputs for every input, including the escape/NUL
+rows they route to the scalar path and splice back in input order.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from clp_spark.functions import tokenizer_vec
 from clp_spark.functions.tokenizer import decode_text, encode_series_scalar
-from clp_spark.functions.tokenizer_vec import encode_batch
+from clp_spark.functions.tokenizer_vec import encode_full_arrow, encode_ids_arrow
+
+FULL_COLUMNS = (
+    "logtype", "var_types", "dict_vars", "logtype_id", "dict_var_ids", "encoded_vars",
+)
 
 EDGE_CASES = [
     "",
@@ -54,15 +61,25 @@ EDGE_CASES = [
 ]
 
 
-def assert_frames_equal(texts: list[str]) -> None:
-    s = pd.Series(texts, dtype=object)
-    got = encode_batch(s)
-    want = encode_series_scalar(s)
-    for col in ("logtype", "var_types", "dict_vars", "encoded_nums", "dict_slots"):
-        assert list(got[col]) == list(want[col]), (
-            f"column {col} diverged.\n texts={texts}\n got={list(got[col])}\n"
-            f" want={list(want[col])}"
-        )
+def assert_frames_equal(texts: list) -> None:
+    arr = pa.array(texts, type=pa.string())
+    want = encode_series_scalar(pd.Series(texts, dtype=object))
+    got = encode_full_arrow(arr)
+    assert set(got) == set(FULL_COLUMNS)
+    lid, ev = encode_ids_arrow(arr)
+    got_ids = {"logtype_id": lid, "encoded_vars": ev}
+    for name, out in (("full", got), ("ids", got_ids)):
+        for col, arrow_col in out.items():
+            expect = [list(v) if isinstance(v, (list, tuple)) else v for v in want[col]]
+            assert arrow_col.to_pylist() == expect, (
+                f"{name} column {col} diverged.\n texts={texts}\n"
+                f" got={arrow_col.to_pylist()}\n want={expect}"
+            )
+
+
+def _full(texts: list) -> dict:
+    out = encode_full_arrow(pa.array(texts, type=pa.string()))
+    return {k: v.to_pylist() for k, v in out.items()}
 
 
 def test_edge_cases():
@@ -70,17 +87,23 @@ def test_edge_cases():
 
 
 def test_none_and_empty():
-    s = pd.Series([None, "", "x 1", None], dtype=object)
-    got = encode_batch(s)
-    assert list(got["logtype"]) == ["", "", "x \x11", ""]
-    assert list(got["encoded_nums"]) == [[], [], [1], []]
+    got = _full([None, "", "x 1", None])
+    assert got["logtype"] == ["", "", "x \x11", ""]
+    assert got["encoded_vars"] == [[], [], [1], []]
+    assert_frames_equal([None, "", "x 1", None])
+
+
+def test_empty_batch():
+    assert _full([]) == {c: [] for c in FULL_COLUMNS}
+    lid, ev = encode_ids_arrow(pa.array([], type=pa.string()))
+    assert lid.to_pylist() == [] and ev.to_pylist() == []
 
 
 def test_roundtrip_through_vectorized():
-    s = pd.Series([t for t in EDGE_CASES if "\x00" not in t], dtype=object)
-    enc = encode_batch(s)
-    for text, lt, dv, en in zip(s, enc["logtype"], enc["dict_vars"], enc["encoded_nums"]):
-        assert decode_text(lt, dv, en) == text
+    texts = [t for t in EDGE_CASES if "\x00" not in t]
+    enc = _full(texts)
+    for text, lt, dv, ev in zip(texts, enc["logtype"], enc["dict_vars"], enc["encoded_vars"]):
+        assert decode_text(lt, dv, ev) == text
 
 
 @settings(max_examples=300, deadline=None)
@@ -146,10 +169,40 @@ def test_giant_token_four_pass_fallback():
     ]
     assert_frames_equal(texts)
     # and the encodings still round-trip byte-exactly
-    s = pd.Series(texts, dtype=object)
-    enc = encode_batch(s)
-    for text, lt, dv, en in zip(s, enc["logtype"], enc["dict_vars"], enc["encoded_nums"]):
-        assert decode_text(lt, dv, en) == text
+    enc = _full(texts)
+    for text, lt, dv, ev in zip(texts, enc["logtype"], enc["dict_vars"], enc["encoded_vars"]):
+        assert decode_text(lt, dv, ev) == text
+
+
+_CLEAN_ROW = st.text(alphabet="abcXYZ0189+-._ =,:/café", max_size=40)
+_ESCAPE_ROW = st.text(alphabet="ab09 .-=\\\x00\x11\x12\x13", min_size=1, max_size=20)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(_CLEAN_ROW, _ESCAPE_ROW, st.none()), min_size=1, max_size=24))
+def test_equivalence_mixed_escape_rows(texts):
+    """Clean rows mixed with rows biased toward backslash, NUL and
+    0x11-0x13, in random positions: pins the splice of scalar-path rows back
+    into input order."""
+    assert_frames_equal(texts)
+
+
+def test_only_escape_rows_take_scalar_path(monkeypatch):
+    calls = []
+    scalar = tokenizer_vec._scalar_row_outputs
+
+    def counting(text):
+        calls.append(text)
+        return scalar(text)
+
+    monkeypatch.setattr(tokenizer_vec, "_scalar_row_outputs", counting)
+    texts = [f"job {i} took {i * 7}.5 ms on host-{i % 13}" for i in range(2000)]
+    texts[1234] = "wrote C:\\tmp\\out.txt 3"
+    for encode in (encode_full_arrow, encode_ids_arrow):
+        calls.clear()
+        encode(pa.array(texts))
+        assert calls == [texts[1234]]
+    assert_frames_equal(texts)
 
 
 def test_render_batch_equals_decode_text():
