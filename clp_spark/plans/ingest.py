@@ -20,6 +20,18 @@ Spark-first re-expression — one ingest() call produces SINKS:
   out/_manifest.json   completed-step checkpoint + metrics
 
 Design-for-scale notes:
+  * One parse feeds all seven sinks, as the reference's compressor parses
+    each message once (clp/streaming_archive/writer/Archive.cpp:299-316).
+    The parsed frame is persisted once, holding MESSAGE_COLUMNS +
+    logtype_bucket + _text_bytes, plus logtype / dict_vars / dict_var_ids
+    when a dictionary step or counts_logtype runs. The storage level is
+    Spark's default MEMORY_AND_DISK_DESER, so partitions that do not fit in
+    memory spill to local disk instead of being re-parsed. The messages
+    write fills the cache; the dictionaries, count sinks and lineage
+    aggregate column-pruned InMemoryTableScans of it and never re-read the
+    messages sink. Only lineage.n_files comes from the committed sink (its
+    directory listing). A run with one pending step (the messages-only
+    routed path) persists nothing.
   * The messages write is SHUFFLE-FREE: rows get a logtype_bucket column and
     each task writes its own per-bucket files (sortWithinPartitions groups a
     task's rows so each task opens one file per bucket at a time). A hot
@@ -36,9 +48,9 @@ Design-for-scale notes:
     no append-on-retry double counting). This is the filesystem analog of
     Iceberg snapshot/WAP commits — swap _commit() for an Iceberg
     `writeTo(...).overwritePartitions()` on a real cluster.
-  * Metrics come from pyspark.sql.Observation on the messages scan (row
-    counts observed during the write, no extra pass) and land in the
-    manifest.
+  * Metrics come from pyspark.sql.Observation on the messages write (turn
+    count, text bytes and the archive's ts range, observed during the
+    write, no extra pass) and land in the manifest.
 """
 
 from __future__ import annotations
@@ -55,6 +67,11 @@ from pyspark.sql import functions as F
 from . import pipeline as P
 
 MANIFEST = "_manifest.json"
+
+STEPS = (
+    "messages", "logtype_dict", "var_dict",
+    "counts_logtype", "counts_tool", "counts_conv", "lineage",
+)
 
 MESSAGE_COLUMNS = [
     "conv_id", "turn_idx", "ts", "role", "tool", "logtype_id", "encoded_vars",
@@ -126,7 +143,6 @@ def ingest(
     dim_tool: DataFrame | None = None,
     n_buckets: int = 16,
     resume: bool = True,
-    cache_parsed: bool = True,
     only_steps: set[str] | None = None,
     dataset: str = "default",
     tags: tuple[str, ...] = (),
@@ -143,14 +159,11 @@ def ingest(
     the per-write option, not session config.
 
     Resumable: completed steps recorded in out/_manifest.json are skipped
-    (pass resume=False to force a full rebuild). `cache_parsed` persists
-    only the columns the dictionary steps read, so logtype_dict and
-    var_dict share one parse. The messages step does not read that cache
-    and runs its own parse, so a full ingest parses every turn twice: once
-    for the messages write and once when the first dictionary step fills
-    the cache. `only_steps`
-    restricts the run to a subset of steps (e.g. {"messages"} for the
-    parsed+routed scaling probe).
+    (pass resume=False to force a full rebuild). Every turn is parsed once
+    per call: when more than one step is pending, the parsed frame is
+    persisted, the first step's write fills the cache and every later step
+    reads it. `only_steps` restricts the run to a subset of steps (e.g.
+    {"messages"} for the parsed+routed scaling probe).
     """
     os.makedirs(out_dir, exist_ok=True)
     codec_opts = {"compression": codec} if codec else {}
@@ -162,6 +175,11 @@ def ingest(
     step_secs = manifest["metrics"].setdefault("step_secs", {})
     t_start = time.time()
 
+    def want(step):
+        return (only_steps is None or step in only_steps) and step not in steps
+
+    pending = [s for s in STEPS if want(s)]
+
     # The pipeline is shuffle-free after this point, so task parallelism ==
     # input splits. A narrow source (one small file, an exploded literal)
     # would otherwise serialize the whole job on one core; widen it up front.
@@ -171,55 +189,43 @@ def ingest(
     if transcripts.rdd.getNumPartitions() < target:
         transcripts = transcripts.repartition(target)
 
-    # Messages-only runs (the parsed+routed hot path / scaling probe) never
-    # need template or variable STRINGS — use the ids-only Arrow parse (the
-    # reference message layout, File.hpp:257-259). Dictionary steps need the
-    # strings, so full runs use the full parse.
-    needs_strings = only_steps is None or bool(
-        {"logtype_dict", "var_dict"} & only_steps
-    )
+    # Template and variable STRINGS are read only by the dictionaries and
+    # counts_logtype. Without them (the messages-only parsed+routed hot
+    # path) use the ids-only Arrow parse — the reference message layout,
+    # File.hpp:257-259.
+    needs_strings = bool({"logtype_dict", "var_dict", "counts_logtype"} & set(pending))
+    string_cols = ["logtype", "dict_vars", "dict_var_ids"] if needs_strings else []
     parsed = P.parse_encode(transcripts) if needs_strings else P.parse_encode_ids(transcripts)
-    enriched = None
     if dim_role is not None and dim_tool is not None:
-        enriched = P.enrich(parsed, dim_role, dim_tool)
-    # Only the columns the dictionary builds still need after the messages
-    # write; everything else is either in the sink (count sinks re-read it
-    # column-pruned — cheaper than scanning a fat cache) or derivable.
-    dict_src = (
-        parsed.select("logtype", "logtype_id", "dict_vars", "dict_var_ids")
-        if needs_strings
-        else None
+        parsed = P.enrich(parsed, dim_role, dim_tool)
+    staged = (
+        parsed.withColumn(
+            "logtype_bucket", F.pmod(F.col("logtype_id"), F.lit(n_buckets)).cast("int")
+        )
+        .withColumn("_text_bytes", F.octet_length("text"))
+        .select(*MESSAGE_COLUMNS, "logtype_bucket", "_text_bytes", *string_cols)
     )
-    cache_parsed = cache_parsed and needs_strings
-    if cache_parsed:
-        dict_src = dict_src.persist()
+    # One pending step (the routed probe) reads staged once; a cache would
+    # only add its build cost.
+    cached = len(pending) > 1
+    if cached:
+        staged = staged.persist()
 
     msgs_dir = os.path.join(out_dir, "messages")
-
-    def sink(*cols):
-        return spark.read.parquet(msgs_dir).select(*cols)
-
-    def want(step):
-        return (only_steps is None or step in only_steps) and step not in steps
-
     try:
         if want("messages"):
             obs = Observation("ingest_messages")
-            src = enriched if enriched is not None else parsed
-            msgs = (
-                src.withColumn(
-                    "logtype_bucket",
-                    F.pmod(F.col("logtype_id"), F.lit(n_buckets)).cast("int"),
-                )
-                .withColumn("_text_bytes", F.octet_length("text"))
-                .select(*MESSAGE_COLUMNS, "logtype_bucket", "_text_bytes")
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_turns"),
-                    F.sum("_text_bytes").alias("uncompressed_bytes"),
-                )
-                .drop("_text_bytes")
-            )
+            ts_ms = P.ts_millis("ts")
+            msgs = staged.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_turns"),
+                F.sum("_text_bytes").alias("uncompressed_bytes"),
+                # archive-level ts range for selection pruning (reference
+                # archives table begin/end_timestamp,
+                # clp_metadata_db_utils.py:27-95)
+                F.min(ts_ms).alias("begin_ts_ms"),
+                F.max(ts_ms).alias("end_ts_ms"),
+            ).select(*MESSAGE_COLUMNS, "logtype_bucket")
             _commit(
                 lambda d: msgs.sortWithinPartitions("logtype_bucket")
                 .write.mode("overwrite")
@@ -231,72 +237,18 @@ def ingest(
                 step_secs,
             )
             steps["messages"] = {"n_turns": obs.get["n_turns"]}
-            manifest["metrics"]["n_turns"] = obs.get["n_turns"]
-            manifest["metrics"]["uncompressed_bytes"] = obs.get["uncompressed_bytes"]
+            manifest["metrics"].update(obs.get)
             _write_manifest(out_dir, manifest)
 
-        if want("logtype_dict"):
-            _commit(
-                lambda d: P.build_logtype_dict(dict_src)
-                .write.mode("overwrite")
-                .options(**codec_opts)
-                .parquet(d),
-                out_dir,
-                "logtype_dict",
-                step_secs,
-            )
-            steps["logtype_dict"] = True
-            _write_manifest(out_dir, manifest)
-
-        if want("var_dict"):
-            _commit(
-                lambda d: P.build_var_dict(dict_src)
-                .write.mode("overwrite")
-                .options(**codec_opts)
-                .parquet(d),
-                out_dir,
-                "var_dict",
-                step_secs,
-            )
-            steps["var_dict"] = True
-            _write_manifest(out_dir, manifest)
-
-        # Count sinks + lineage are derived from the MESSAGES SINK with
-        # column-pruned scans (the reducer re-expressed: partial agg on
-        # executors, final agg after a tiny shuffle).
-        lt_dict = (
-            spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
-            if want("counts_logtype")
-            else None
-        )
-
+        # The reducer re-expressed: partial agg on executors, final agg
+        # after a tiny shuffle.
         builders = {
-            "counts_logtype": lambda: sink("logtype_id")
-            .groupBy("logtype_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .join(F.broadcast(lt_dict.select("logtype_id", "logtype")), "logtype_id")
-            .select("logtype", "cnt"),
-            "counts_tool": lambda: sink("tool")
-            .groupBy("tool")
-            .agg(F.count(F.lit(1)).alias("cnt")),
-            "counts_conv": lambda: sink("conv_id", "ts")
-            .groupBy("conv_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.min(P.ts_millis("ts")).alias("first_ts_ms"),
-                F.max(P.ts_millis("ts")).alias("last_ts_ms"),
-            ),
-            # per-bucket rows/files plus the min/max-ts range index that
-            # drives archive pruning in the reference
-            # (clp_s/TimestampEntry.hpp:58-93, EvaluateTimestampIndex)
-            "lineage": lambda: sink("logtype_bucket", "ts")
-            .groupBy("logtype_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min(P.ts_millis("ts")).alias("begin_ts_ms"),
-                F.max(P.ts_millis("ts")).alias("end_ts_ms"),
-            )
-            .withColumn("n_files", _bucket_file_counts_udf(msgs_dir)("logtype_bucket")),
+            "logtype_dict": lambda: P.build_logtype_dict(staged),
+            "var_dict": lambda: P.build_var_dict(staged),
+            "counts_logtype": lambda: P.per_logtype_counts(staged),
+            "counts_tool": lambda: staged.groupBy("tool").agg(F.count(F.lit(1)).alias("cnt")),
+            "counts_conv": lambda: P.per_conversation_counts(staged),
+            "lineage": lambda: _lineage(staged, msgs_dir),
         }
         for step, build in builders.items():
             if not want(step):
@@ -311,20 +263,8 @@ def ingest(
             steps[step] = True
             _write_manifest(out_dir, manifest)
     finally:
-        if cache_parsed:
-            dict_src.unpersist()
-
-    # archive-level ts range for selection pruning (reference archives
-    # table begin/end_timestamp, clp_metadata_db_utils.py:27-95)
-    lineage_dir = os.path.join(out_dir, "lineage")
-    if os.path.isdir(lineage_dir):
-        rng = (
-            spark.read.parquet(lineage_dir)
-            .agg(F.min("begin_ts_ms").alias("b"), F.max("end_ts_ms").alias("e"))
-            .first()
-        )
-        manifest["metrics"]["begin_ts_ms"] = rng["b"]
-        manifest["metrics"]["end_ts_ms"] = rng["e"]
+        if cached:
+            staged.unpersist()
 
     # archive size + compression ratio (reference ArchiveMetadata's
     # compressed/uncompressed running sizes, clp/streaming_archive/
@@ -353,6 +293,22 @@ def ingest(
 
         invalidate_dict_caches()
     return manifest
+
+
+def _lineage(rows: DataFrame, msgs_dir: str) -> DataFrame:
+    """Per-bucket rows/files plus the min/max-ts range index that drives
+    archive pruning in the reference (clp_s/TimestampEntry.hpp:58-93,
+    EvaluateTimestampIndex). `rows` carries logtype_bucket and ts; file
+    counts come from the listing of the committed messages sink."""
+    return (
+        rows.groupBy("logtype_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min(P.ts_millis("ts")).alias("begin_ts_ms"),
+            F.max(P.ts_millis("ts")).alias("end_ts_ms"),
+        )
+        .withColumn("n_files", _bucket_file_counts_udf(msgs_dir)("logtype_bucket"))
+    )
 
 
 def _bucket_file_counts_udf(msgs_dir: str):
@@ -531,20 +487,8 @@ def compact_archive(
             compact_bucket(spark, out_dir, int(r["logtype_bucket"]), target_files=1)
             compacted[int(r["logtype_bucket"])] = int(r["n_files"])
     if compacted:
-        sink = spark.read.parquet(os.path.join(out_dir, "messages"))
-        lineage = (
-            sink.select("logtype_bucket", "ts")
-            .groupBy("logtype_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min(P.ts_millis("ts")).alias("begin_ts_ms"),
-                F.max(P.ts_millis("ts")).alias("end_ts_ms"),
-            )
-            .withColumn(
-                "n_files",
-                _bucket_file_counts_udf(os.path.join(out_dir, "messages"))("logtype_bucket"),
-            )
-        )
+        msgs_dir = os.path.join(out_dir, "messages")
+        lineage = _lineage(spark.read.parquet(msgs_dir), msgs_dir)
         staging = lineage_dir + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
         lineage.coalesce(1).write.mode("overwrite").parquet(staging)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,21 +67,98 @@ def test_roundtrip_decode(spark, archive):
     assert joined.filter("dec_text != text").count() == 0
 
 
+COUNT_SINKS = ("counts_logtype", "counts_tool", "counts_conv", "lineage")
+
+
+def _row_set(spark, out, sink, drop=()):
+    df = spark.read.parquet(os.path.join(out, sink)).drop(*drop)
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
 def test_resume_skips_completed_steps(spark, archive):
     out, _ = archive
+    first = {s: _row_set(spark, out, s) for s in COUNT_SINKS}
     manifest = I.read_manifest(out)
-    # mark a sink step incomplete and delete it; resume should rebuild ONLY it
-    del manifest["steps"]["counts_conv"]
+    # mark the count sinks incomplete and delete them; resume should
+    # rebuild ONLY them, with the first run's rows
+    for s in COUNT_SINKS:
+        del manifest["steps"][s]
+        shutil.rmtree(os.path.join(out, s))
     I._write_manifest(out, manifest)
-    shutil.rmtree(os.path.join(out, "counts_conv"))
     before_msgs_mtime = os.path.getmtime(os.path.join(out, "messages"))
 
     t = load_transcripts(spark, SF_DIR)
     m2 = I.ingest(spark, t, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark))
-    assert "counts_conv" in m2["steps"]
+    assert set(COUNT_SINKS) <= set(m2["steps"])
     assert os.path.getmtime(os.path.join(out, "messages")) == before_msgs_mtime
+    assert {s: _row_set(spark, out, s) for s in COUNT_SINKS} == first
     cc = spark.read.parquet(os.path.join(out, "counts_conv"))
     assert cc.count() == t.select("conv_id").distinct().count()
+
+
+def test_ingest_parses_each_turn_once(spark, tmp_path):
+    """One full ingest runs the parse UDF over each turn exactly once: the
+    summed MapInArrow output rows of the executions it submits (SQL status
+    store, readable with the UI off) equal n_turns."""
+    from perfbench.tracing import SqlMetrics, metric_sum, within
+
+    sql = SqlMetrics(spark)
+    t = load_transcripts(spark, SF_DIR)
+    span = {"start": time.time()}
+    m = I.ingest(spark, t, str(tmp_path / "arch"),
+                 dim_role=dim_role(spark), dim_tool=dim_tool(spark))
+    span["end"] = time.time()
+    assert set(m["steps"]) == set(I.STEPS)
+    rows = metric_sum(within(sql.collect(), span), "MapInArrow", "number of output rows")
+    assert rows == m["metrics"]["n_turns"] > 0
+
+
+def test_derived_metrics_match_sinks(spark, archive, tmp_path):
+    """Values derived in the messages write or from the staged parse agree
+    with the sinks: the manifest's ts range is the lineage range,
+    counts_logtype is logtype_dict's (logtype, n_messages), and a
+    messages-only manifest carries the same ts range, so routed archives
+    take part in archive selection."""
+    out, manifest = archive
+    rng = (
+        spark.read.parquet(os.path.join(out, "lineage"))
+        .agg(F.min("begin_ts_ms").alias("b"), F.max("end_ts_ms").alias("e"))
+        .first()
+    )
+    metrics = manifest["metrics"]
+    assert (metrics["begin_ts_ms"], metrics["end_ts_ms"]) == (rng["b"], rng["e"])
+    assert rng["b"] is not None and rng["b"] <= rng["e"]
+
+    cl = spark.read.parquet(os.path.join(out, "counts_logtype"))
+    lt = spark.read.parquet(os.path.join(out, "logtype_dict"))
+    assert sorted(map(tuple, cl.select("logtype", "cnt").collect())) == sorted(
+        map(tuple, lt.select("logtype", "n_messages").collect())
+    )
+
+    routed = str(tmp_path / "routed")
+    t = load_transcripts(spark, SF_DIR)
+    rm = I.ingest(spark, t, routed, only_steps={"messages"})["metrics"]
+    assert (rm["begin_ts_ms"], rm["end_ts_ms"]) == (rng["b"], rng["e"])
+    assert I.select_archives([routed], begin_ts_ms=rng["e"] + 1) == []
+    assert I.select_archives([routed], end_ts_ms=rng["b"] - 1) == []
+    assert I.select_archives([routed], begin_ts_ms=rng["b"], end_ts_ms=rng["b"]) == [routed]
+
+
+def test_sinks_invariant_to_input_partitioning(spark, tmp_path):
+    """The same input read as 1 and as 4 partitions gives identical row sets
+    in all seven sinks. lineage.n_files counts the files each bucket was
+    written as, which follows the task layout, so it is left out."""
+    t = load_transcripts(spark, SF_DIR)
+    outs = []
+    for n, df in ((1, t.coalesce(1)), (4, t.repartition(4))):
+        assert df.rdd.getNumPartitions() == n
+        out = str(tmp_path / f"p{n}")
+        I.ingest(spark, df, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark))
+        outs.append(out)
+    for sink in I.STEPS:
+        drop = ("n_files",) if sink == "lineage" else ()
+        a, b = (_row_set(spark, out, sink, drop) for out in outs)
+        assert a == b and a, sink
 
 
 def test_crash_leaves_no_partial_sink(spark, tmp_path):

@@ -33,7 +33,7 @@ def main() -> None:
     m = ingest(
         spark, t, out,
         dim_role=dim_role(spark), dim_tool=dim_tool(spark),
-        resume=False, cache_parsed=False,
+        resume=False,
     )
     wall = time.perf_counter() - t0
     print(
