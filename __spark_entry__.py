@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clp_spark.caching import DRIVER_VALUES, persist, plan_key
 from clp_spark.plans import pipeline as P
 from clp_spark.plans.grep import (
     normalize_query,
@@ -62,19 +63,6 @@ JACCARD_THRESHOLD = 0.12
 
 def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.parse_encode(load_transcripts(spark, sf_dir))
-
-
-# Plan-keyed bounded cache: repeated queries over the same parse plan reuse
-# the live cached DataFrame (no re-parse); LRU eviction unpersists, so a
-# long-lived session (the driver runs the whole suite in one SparkSession)
-# holds at most a few cached intermediates instead of leaking one per query.
-from clp_spark.caching import PlanCache
-
-_PLAN_CACHE = PlanCache(max_items=3)
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    return _PLAN_CACHE.persist(df)
 
 
 # ---------------------------------------------------------------- queries ---
@@ -136,13 +124,12 @@ def q_roundtrip_mismatches(spark, sf_dir):
     reference decompressor's model). The join-based decode_messages stays
     exercised by pytest (tests/test_plans.py) — coverage belongs there, not
     in the headline query."""
-    from clp_spark.plans.grep import _TOO_BIG, _collect_lt_rows, _collect_vd_rows
+    from clp_spark.plans.grep import _TOO_BIG, dict_rows
 
     t = load_transcripts(spark, sf_dir)
-    parsed = _tracked_persist(P.parse_encode(t))
+    parsed = persist(P.parse_encode(t))
     lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
-    lt_rows = _collect_lt_rows(lt)  # session-cached collected dictionaries
-    vd_rows = _collect_vd_rows(vd)
+    lt_rows, vd_rows = dict_rows(lt, vd)  # session-cached collected dictionaries
     if vd_rows is _TOO_BIG:  # dictionaries beyond broadcast: join decode
         msgs = P.encoded_messages(parsed)
         dec = P.decode_messages(msgs, lt, vd).withColumnRenamed("text", "dec_text")
@@ -161,11 +148,11 @@ def q_roundtrip_mismatches(spark, sf_dir):
 
 
 def _encoded(spark, sf_dir):
-    # persist (tracked): messages + both dictionaries + decode all derive
+    # persist (session cache): messages + both dictionaries + decode all derive
     # from one parse (in production they read ingested SINKS; here we parse
     # fresh, and without a cache Catalyst would re-run the tokenizer per
     # branch)
-    parsed = _tracked_persist(P.parse_encode(load_transcripts(spark, sf_dir)))
+    parsed = persist(P.parse_encode(load_transcripts(spark, sf_dir)))
     return (
         P.encoded_messages(parsed),
         P.build_logtype_dict(parsed),
@@ -345,7 +332,7 @@ def _json_string_encoded(spark, sf_dir):
     df = load_jsonlogs(spark, sf_dir)
     schema = infer_json_schema(spark, df, "json")
     store = json_string_store(parse_json(df, "json", schema), schema)
-    encoded = _tracked_persist(encode_json_strings(store))
+    encoded = persist(encode_json_strings(store))
     lt, vd = json_string_dicts(encoded)
     return store, encoded, lt, vd
 
@@ -685,27 +672,20 @@ PCA_K = 8
 BPE_N_MERGES = 30
 
 # pca_fit / bpe_train run a distributed scan and return DRIVER-side
-# aggregates (eigenvectors / merge rules); memoize per (sf_dir, param) so
-# the audit query and the operator_invariants check share one corpus pass
-# instead of each re-fitting (ADVICE r4: q_pca_check re-ran the full scan
-# per invariants evaluation).
-_FIT_CACHE: dict[tuple, object] = {}
-
-
+# aggregates (eigenvectors / merge rules); session-cache them per source and
+# parameter so the audit query and the operator_invariants check share one
+# corpus pass instead of each re-fitting (ADVICE r4: q_pca_check re-ran the
+# full scan per invariants evaluation).
 def _pca_fit_cached(spark, sf_dir, k):
-    key = ("pca", sf_dir, k)
-    if key not in _FIT_CACHE:
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        _FIT_CACHE[key] = RD.pca_fit(e, k=k)
-    return _FIT_CACHE[key]
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return DRIVER_VALUES.get_or_load(plan_key(e, "pca_fit", k), lambda: RD.pca_fit(e, k=k))
 
 
 def _bpe_merges_cached(spark, sf_dir, n_merges):
-    key = ("bpe", sf_dir, n_merges)
-    if key not in _FIT_CACHE:
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        _FIT_CACHE[key] = BPE.bpe_train(d, n_merges=n_merges)
-    return _FIT_CACHE[key]
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return DRIVER_VALUES.get_or_load(
+        plan_key(d, "bpe_train", n_merges), lambda: BPE.bpe_train(d, n_merges=n_merges)
+    )
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -889,7 +869,7 @@ def q_dedup_lines(spark, sf_dir):
     # dedup_lines consumes its input twice (line-frequency aggregate, then
     # the flag join); caching the flattened docs halves the upstream
     # flatten cost — and sft_funnel reuses the same cached plan.
-    docs = _tracked_persist(
+    docs = persist(
         CTX.flatten_conversations(t).select("conv_id", "doc")
     )
     return CU.dedup_lines(
@@ -908,7 +888,7 @@ def q_sft_funnel(spark, sf_dir):
     transcripts-side analogue of pipeline_funnel: the chained semantics,
     not just each operator alone, are parity-checked."""
     t = load_transcripts(spark, sf_dir)
-    docs = _tracked_persist(
+    docs = persist(
         CTX.flatten_conversations(t).select("conv_id", "doc")
     )
     dl = CU.dedup_lines(

@@ -16,7 +16,6 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Iterator
 from hashlib import blake2b
 
@@ -26,36 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-
-# Bucket tables persisted for self-joins, held in a bounded plan-keyed LRU:
-# a repeated pairs call over the same input reuses the cached bucket table
-# (no signature recompute) while a long-lived session holds a bounded set.
-# The bound must exceed the number of persists ONE query plants before its
-# action runs (minhash_lsh_pairs plants buckets + cand + sh_rows, all lazy:
-# evicting-and-unpersisting any of them pre-action silently recomputes the
-# whole upstream lineage at job time) plus the n-gram path's shingle table.
-# release_dedup_caches() frees them all.
-from ..caching import PlanCache
-
-_PLAN_CACHE = PlanCache(max_items=6)
-
-# Memo of fully-CONSTRUCTED pair DataFrames keyed by (input plan, params):
-# building minhash_lsh_pairs analyzes ~10 nested plans through py4j
-# (~0.5 s of pure driver time), which dominates a warm re-run. A repeated
-# call with identical input + params returns the same DataFrame object —
-# execution still runs normally (only intermediates are persisted, never
-# the result). Same precedent as similarity.py's plan-keyed centroid cache.
-_PAIRS_MEMO: OrderedDict = OrderedDict()
-_PAIRS_MEMO_MAX = 8
-
-
-def release_dedup_caches() -> None:
-    _PLAN_CACHE.clear()
-    _PAIRS_MEMO.clear()
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    return _PLAN_CACHE.persist(df)
+from ..caching import DRIVER_VALUES, persist, plan_key
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -160,9 +130,9 @@ def ngram_jaccard_pairs(
             )
         )
     else:
-        # persisted (tracked): sizes + both self-join sides consume this —
+        # persisted (session cache): sizes + both self-join sides consume this —
         # without the cache the shingle UDF re-runs per consumer
-        shingles = _persist_tracked(_shingle_hash_rows(df, k, text_col, id_col))
+        shingles = persist(_shingle_hash_rows(df, k, text_col, id_col))
     sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
     joinable = shingles
     if max_docs_per_shingle is not None:
@@ -343,19 +313,21 @@ def minhash_lsh_pairs(
     """
     if threshold <= 0:
         raise ValueError("minhash_lsh_pairs: threshold must be > 0")
-    memo_key = (
-        PlanCache._key(df), num_hashes, bands, k, threshold, text_col, id_col,
+    # Memo of the CONSTRUCTED pair plan: building it analyzes ~10 nested
+    # plans through py4j (~0.5 s of driver time), which dominates a warm
+    # re-run. Execution still runs normally; only intermediates are persisted.
+    return DRIVER_VALUES.get_or_load(
+        plan_key(df, "minhash_lsh_pairs", num_hashes, bands, k, threshold, text_col, id_col),
+        lambda: _lsh_pairs_plan(df, num_hashes, bands, k, threshold, text_col, id_col),
     )
-    if memo_key[0] is not None:
-        hit = _PAIRS_MEMO.get(memo_key)
-        if hit is not None:
-            _PAIRS_MEMO.move_to_end(memo_key)
-            return hit
+
+
+def _lsh_pairs_plan(df, num_hashes, bands, k, threshold, text_col, id_col) -> DataFrame:
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, num_hashes, k, text_col, id_col)
-    # persist (tracked): the self-join consumes the bucket table twice;
+    # persist (session cache): the self-join consumes the bucket table twice;
     # without the cache both sides re-run the signature UDF over every doc
-    buckets = _persist_tracked(
+    buckets = persist(
         sigs.select(
             "id",
             F.posexplode(
@@ -379,7 +351,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # persisted: ids + the intersection join both consume the pair set
-    cand = _persist_tracked(cand)
+    cand = persist(cand)
     ids = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select(F.col("id_b").alias(id_col)))
@@ -395,7 +367,7 @@ def minhash_lsh_pairs(
         .join(ids, id_col)
         .filter(F.length(F.coalesce(F.col(text_col), F.lit(""))) > 0)
     )
-    sh_rows = _persist_tracked(_shingle_hash_rows(cand_docs, k, text_col, id_col))
+    sh_rows = persist(_shingle_hash_rows(cand_docs, k, text_col, id_col))
     sizes = sh_rows.groupBy("id").agg(F.count("*").alias("sz"))
     inter = (
         cand.join(sh_rows.select(F.col("id").alias("id_a"), "sh"), "id_a")
@@ -406,18 +378,13 @@ def minhash_lsh_pairs(
     jac = F.round(
         F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
     )
-    out = (
+    return (
         inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
         .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
         .withColumn("jaccard_x10000", F.round(jac * 10000).cast("long"))
         .filter(F.col("jaccard_x10000") >= int(threshold * 10000))
         .select("id_a", "id_b", "jaccard_x10000")
     )
-    if memo_key[0] is not None:
-        while len(_PAIRS_MEMO) >= _PAIRS_MEMO_MAX:
-            _PAIRS_MEMO.popitem(last=False)
-        _PAIRS_MEMO[memo_key] = out
-    return out
 
 
 def simhash_sketches(
@@ -495,7 +462,7 @@ def simhash_neardup_pairs(
         )
         for o, w in zip(offs, widths)
     ]
-    buckets = _persist_tracked(
+    buckets = persist(
         sk.select(
             "id",
             "simhash",

@@ -28,6 +28,7 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import DRIVER_VALUES, plan_key
 from ..functions.tokenizer import PLACEHOLDER_DICT, PLACEHOLDER_FLOAT, PLACEHOLDER_INT
 from ..functions.wildcard import clean_up_wildcard_search_string, wildcard_to_regex
 
@@ -270,59 +271,31 @@ def var_sequence_filter(needles: list[list[int]]):
     ) >= len(needles)
 
 
-# Per-session dictionary cache for bare search() calls (the reference keeps
-# per-archive dictionaries resident across queries too, clp/streaming_archive/
-# reader/Archive.cpp:163-195). Keyed by the ANALYZED-plan text of the dict
-# DataFrame: same source -> same key across repeated query construction.
-# One shared RowsCache implementation (clp_spark/caching.py), registry-
-# cleared automatically when ingest() rewrites sinks in-session.
-from ..caching import RowsCache
-
-_DICT_CACHE = RowsCache(max_items=8)
 _TOO_BIG = object()  # sentinel: var dict exceeds DICT_BROADCAST_LIMIT
 
 
-def clear_dict_cache() -> None:
-    """Clear ALL registered dictionary caches (rows + broadcasts), not just
-    this module's — kept as the public invalidation entry point."""
-    from ..caching import invalidate_dict_caches
-
-    invalidate_dict_caches()
-
-
-def _plan_key(df: DataFrame) -> str | None:
-    try:
-        return df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return None  # e.g. Spark Connect: fall back to uncached collect
-
-
-def _cached(df: DataFrame, loader):
-    return _DICT_CACHE.get_or_load(_plan_key(df), loader)
-
-
-def _collect_lt_rows(logtype_dict: DataFrame) -> list:
-    return _cached(
-        logtype_dict,
-        lambda: [
-            (r["logtype_id"], r["logtype"])
-            for r in logtype_dict.select("logtype_id", "logtype").collect()
-        ],
-    )
-
-
-def _collect_vd_rows(var_dict: DataFrame):
-    """Collected [(var_id, var_str), ...] or _TOO_BIG above the limit."""
+def dict_rows(logtype_dict: DataFrame, var_dict: DataFrame):
+    """Collected dictionaries -> (lt_rows, vd_rows): [(logtype_id, logtype),
+    ...] and [(var_id, var_str), ...], or _TOO_BIG in place of vd_rows above
+    DICT_BROADCAST_LIMIT. Session-cached by the dictionaries' plan identity
+    (clp_spark/caching.py), the way the reference keeps per-archive
+    dictionaries resident across queries
+    (clp/streaming_archive/reader/Archive.cpp:163-195)."""
 
     def load():
+        lt_rows = [
+            (r["logtype_id"], r["logtype"])
+            for r in logtype_dict.select("logtype_id", "logtype").collect()
+        ]
         sample = (
             var_dict.select("var_id", "var_str").limit(DICT_BROADCAST_LIMIT + 1).collect()
         )
         if len(sample) > DICT_BROADCAST_LIMIT:
-            return _TOO_BIG
-        return [(r["var_id"], r["var_str"]) for r in sample]
+            return lt_rows, _TOO_BIG
+        return lt_rows, [(r["var_id"], r["var_str"]) for r in sample]
 
-    return _cached(var_dict, load)
+    key = plan_key(logtype_dict, "dict_rows", plan_key(var_dict))
+    return DRIVER_VALUES.get_or_load(key, load)
 
 
 def _distributed_var_contains(var_dict: DataFrame, runs: list[str], ignore_case: bool) -> list[bool]:
@@ -378,7 +351,7 @@ def search(
 
     lt_rows / vd_rows: pre-collected dictionaries [(id, string), ...] —
     pass them to amortize dictionary loading across queries; otherwise they
-    are collected here once per distinct dictionary plan (session cache).
+    are collected here by dict_rows (session cache).
     When the var dictionary exceeds DICT_BROADCAST_LIMIT, the WontMatch
     precheck and var pruning switch to DISTRIBUTED dictionary lookups (one
     dictionary scan each) instead of disabling themselves, and decode falls
@@ -411,10 +384,10 @@ def search(
 
     # Driver-side dictionary prune (the logtype dictionary is bounded by
     # #distinct templates, not data size — always collectible).
-    if lt_rows is None:
-        lt_rows = _collect_lt_rows(logtype_dict)
-    if vd_rows is None:
-        vd_rows = _collect_vd_rows(var_dict)
+    if lt_rows is None or vd_rows is None:
+        cached_lt, cached_vd = dict_rows(logtype_dict, var_dict)
+        lt_rows = cached_lt if lt_rows is None else lt_rows
+        vd_rows = cached_vd if vd_rows is None else vd_rows
     if vd_rows is _TOO_BIG:
         vd_rows = None
 

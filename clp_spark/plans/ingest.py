@@ -64,6 +64,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import DRIVER_VALUES
 from . import pipeline as P
 
 MANIFEST = "_manifest.json"
@@ -285,13 +286,10 @@ def ingest(
     manifest["metrics"]["wall_sec"] = round(time.time() - t_start, 3)
     _write_manifest(out_dir, manifest)
     if set(steps) - resumed_steps:
-        # Sinks changed: drop every session dictionary cache (collected rows
-        # + broadcasts) so a re-ingest into the same paths can never serve
-        # stale dictionaries to search()/decode (cache keys are plan-text /
-        # path based and identical across a rewrite).
-        from ..caching import invalidate_dict_caches
-
-        invalidate_dict_caches()
+        # Sinks rewritten by rename: Spark's CacheManager matches a persisted
+        # read by root path, so refresh it or it serves the old files. Session
+        # cache keys carry the file listing and need no hook (caching.py).
+        spark.catalog.refreshByPath(out_dir)
     return manifest
 
 
@@ -360,25 +358,19 @@ def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
     when the var dictionary is collectible (the reference decompressor's
     model: dictionaries load fully before reading segments), else the
     broadcast-join decode."""
-    from .grep import DICT_BROADCAST_LIMIT
+    from .grep import _TOO_BIG, dict_rows
 
     msgs = spark.read.parquet(os.path.join(out_dir, "messages"))
     lt = spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
     vd = spark.read.parquet(os.path.join(out_dir, "var_dict"))
-    sample = vd.select("var_id", "var_str").limit(DICT_BROADCAST_LIMIT + 1).collect()
-    if len(sample) <= DICT_BROADCAST_LIMIT:
-        return P.decode_messages_dictmap(
-            spark,
-            msgs,
-            [(r["logtype_id"], r["logtype"]) for r in lt.select("logtype_id", "logtype").collect()],
-            [(r["var_id"], r["var_str"]) for r in sample],
-        )
+    lt_rows, vd_rows = dict_rows(lt, vd)
+    if vd_rows is not _TOO_BIG:
+        return P.decode_messages_dictmap(spark, msgs, lt_rows, vd_rows)
     return P.decode_messages(msgs, lt, vd)
 
 
-from ..caching import RowsCache
-
-_DICT_CACHE = RowsCache(max_items=8)
+# perfbench's cache counters wrap this instance's get_or_load
+_DICT_CACHE = DRIVER_VALUES
 
 
 def select_archives(
@@ -446,28 +438,12 @@ def search_archives(
     )
     vd = union_read("var_dict").select("var_id", "var_str").dropDuplicates(["var_id"])
 
-    # Per-archive-set dictionary cache: archives are immutable snapshots, so
-    # repeated queries skip the collect (the reference keeps per-archive
-    # dictionaries resident across searches too). Shared RowsCache — cleared
-    # automatically when ingest() rewrites an archive in-session.
-    def load_rows():
-        from .grep import _TOO_BIG, DICT_BROADCAST_LIMIT
-
-        lt_rows = [(r["logtype_id"], r["logtype"]) for r in lt.collect()]
-        sample = vd.limit(DICT_BROADCAST_LIMIT + 1).collect()
-        vd_rows = (
-            [(r["var_id"], r["var_str"]) for r in sample]
-            if len(sample) <= DICT_BROADCAST_LIMIT
-            else _TOO_BIG  # search() then uses DISTRIBUTED dict lookups
-        )
-        return (lt_rows, vd_rows)
-
-    lt_rows, vd_rows = _DICT_CACHE.get_or_load(tuple(dirs), load_rows)
-
+    # dictionary rows come from search's dict_rows, keyed by the dictionary
+    # plans and their files: repeated queries over one archive set collect once
     return search(
         msgs, lt, vd, query,
         begin_ts_ms=begin_ts_ms, end_ts_ms=end_ts_ms,
-        lt_rows=lt_rows, vd_rows=vd_rows, **search_kw,
+        **search_kw,
     )
 
 

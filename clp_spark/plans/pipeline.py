@@ -43,6 +43,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..caching import DRIVER_VALUES
+
+
 def ts_millis(ts_col: str) -> Column:
     """Epoch millis from a timestamp column. The cast normalizes
     TIMESTAMP_NTZ (parquet isAdjustedToUTC=false) to session-tz instants;
@@ -383,48 +386,18 @@ def parse_encode_with_schema(
     ).drop("_enc")
 
 
-# Bounded broadcast cache for the dictmap decode: repeated searches in one
-# session reuse the shipped dictionary maps instead of leaking one broadcast
-# per query. Keyed by a content fingerprint (sizes + boundary ids) — cheap,
-# and collision-safe in practice since dictionaries are content-hashed.
-# Registered with the shared cache registry: cleared (broadcasts unpersisted)
-# when ingest() rewrites sinks in-session.
-_BC_CACHE: dict = {}
-_BC_CACHE_MAX = 4
-
-
-def _clear_bc_cache() -> None:
-    while _BC_CACHE:
-        _, old = _BC_CACHE.popitem()
-        old.unpersist()
-
-
-from ..caching import register_dict_cache as _register_dict_cache  # noqa: E402
-
-_register_dict_cache(_clear_bc_cache)
-
-
 def _dict_broadcast(spark, logtype_rows, var_rows):
     """Broadcast pre-built decode structures (templates split once, var
-    dictionary as sorted arrays) — executors never re-derive them per task."""
+    dictionary as sorted arrays) — executors never re-derive them per task.
+    Session-cached by dictionary content, so repeated decodes of one archive
+    ship it once instead of leaking a broadcast per query."""
     from ..functions.render_vec import DictLookup, TemplateTable
 
-    def fp(rows):
-        head = tuple(int(r[0]) for r, _ in zip(iter(rows), range(3)))
-        return (len(rows), head, sum(int(r[0]) for r in rows) & ((1 << 64) - 1))
-
-    key = (fp(logtype_rows), fp(var_rows))
-    hit = _BC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    if len(_BC_CACHE) >= _BC_CACHE_MAX:
-        _, old = _BC_CACHE.popitem()
-        old.unpersist()
-    bc = spark.sparkContext.broadcast(
-        (TemplateTable(logtype_rows), DictLookup(var_rows))
+    lt, vd = tuple(logtype_rows), tuple(var_rows)
+    return DRIVER_VALUES.get_or_load(
+        ("dict_broadcast", lt, vd),
+        lambda: spark.sparkContext.broadcast((TemplateTable(lt), DictLookup(vd))),
     )
-    _BC_CACHE[key] = bc
-    return bc
 
 
 def decode_messages_dictmap(
@@ -451,7 +424,7 @@ def decode_messages_dictmap(
     logtype_rows: iterable of (logtype_id, logtype);
     var_rows: iterable of (var_id, var_str).
     """
-    bc = _dict_broadcast(spark, list(logtype_rows), list(var_rows))
+    bc = _dict_broadcast(spark, logtype_rows, var_rows)
 
     has_ts = "ts" in messages.columns and "ts" not in key_cols
     passthrough = list(key_cols) + (["ts"] if has_ts else [])
@@ -501,7 +474,7 @@ def roundtrip_mismatch_count(
     co-streamed verify the reference decompressor does against its input
     (clp/streaming_archive/reader/Archive.cpp:163-195 order guarantee).
     Returns a 1-row DataFrame (mismatches bigint)."""
-    bc = _dict_broadcast(spark, list(logtype_rows), list(var_rows))
+    bc = _dict_broadcast(spark, logtype_rows, var_rows)
     out_schema = StructType([StructField("mismatches", LongType())])
 
     def run(batches):

@@ -1230,11 +1230,9 @@ def ingest_json_archive(
             manifest["numeric_ts_ranges"] = ranges
     with open(os.path.join(out_dir, "_manifest.json"), "w") as f:
         _json.dump(manifest, f, indent=2, sort_keys=True)
-    # sinks rewritten: stale collected/broadcast dictionaries must not
-    # survive a same-path re-ingest within this session
-    from ..caching import invalidate_dict_caches
-
-    invalidate_dict_caches()
+    # sinks rewritten by rename: a persisted read of them must not keep
+    # serving the old files (caching.py)
+    spark.catalog.refreshByPath(out_dir)
     return manifest
 
 

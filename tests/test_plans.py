@@ -161,6 +161,7 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
     """Above DICT_BROADCAST_LIMIT, WontMatch + var pruning must switch to
     distributed dictionary lookups — never silently disable — and results
     must match the collected-dictionary path exactly."""
+    from clp_spark.caching import DRIVER_VALUES
     from clp_spark.plans import grep as G
 
     t = load_transcripts(spark, SF_DIR)
@@ -174,7 +175,7 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
     }
     assert expect  # the query matches something at this sf
 
-    G.clear_dict_cache()
+    DRIVER_VALUES.clear()
     monkeypatch.setattr(G, "DICT_BROADCAST_LIMIT", 2)  # force the too-big path
     try:
         got_df = G.search(msgs, lt, vd, "used 123 of ", prune_vars=True)
@@ -187,7 +188,7 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
             G.search(msgs, lt, vd, "zzz_no_such_token_anywhere").count() == 0
         )
     finally:
-        G.clear_dict_cache()
+        DRIVER_VALUES.clear()
     parsed.unpersist()
 
 
