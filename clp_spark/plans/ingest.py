@@ -7,7 +7,7 @@ the distributed package adds resumable per-task state in a metadata DB
 (scheduler/compress/compression_scheduler.py:230+, partition.py:16-107) and
 the reducer aggregates counts (reducer/CountOperator.cpp:4-41).
 
-Spark-first re-expression — one ingest() call produces SINKS:
+Spark-first re-expression — one ingest() call produces seven sinks:
 
   out/messages/        encoded turns, hash-partitioned by logtype_bucket
                        (glt-style per-logtype routing, glt/.../LogtypeTable.hpp)
@@ -18,6 +18,14 @@ Spark-first re-expression — one ingest() call produces SINKS:
   out/counts_conv/     per-conversation counts
   out/lineage/         per-bucket row/file lineage for the messages sink
   out/_manifest.json   completed-step checkpoint + metrics
+
+A streamed archive (clp_spark/streaming/ingest.py) runs the same staging and
+sink builders per micro-batch N (_ingest_steps) and differs only in where
+each step commits: out/messages/batch_id=N/logtype_bucket=B/ and
+out/<sink>/_deltas/batch_id=N/ for the six aggregate sinks, merged on read
+by SINKS' per-column rules; its _manifest.json holds a `batches` map plus
+the summed turn count and ts range. open_archive() reads either layout, so
+search_archives, decode_archive and readable_dictionaries open both.
 
 Design-for-scale notes:
   * One parse feeds all seven sinks, as the reference's compressor parses
@@ -60,6 +68,8 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -119,15 +129,17 @@ def _commit(df_writer_fn, out_dir: str, step: str, step_secs: dict | None = None
     """Write a step to a staging dir, then atomically rename into place.
 
     Filesystem stand-in for an Iceberg snapshot commit: a crashed write
-    leaves only staging garbage, never a half-visible sink; retries are
-    idempotent (stale staging dirs are removed first).
+    leaves the previous sink (if any) and staging garbage, never a
+    half-visible sink; retries are idempotent (stale staging dirs are
+    removed first). `step` may be a nested path (a stream's
+    `messages/batch_id=N`).
     """
     t0 = time.time()
     final = os.path.join(out_dir, step)
     staging = os.path.join(out_dir, "_staging", step)
     shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(final, ignore_errors=True)
     df_writer_fn(staging)
+    shutil.rmtree(final, ignore_errors=True)
     os.makedirs(os.path.dirname(final), exist_ok=True)
     os.replace(staging, final)
     if step_secs is not None:
@@ -176,10 +188,7 @@ def ingest(
     step_secs = manifest["metrics"].setdefault("step_secs", {})
     t_start = time.time()
 
-    def want(step):
-        return (only_steps is None or step in only_steps) and step not in steps
-
-    pending = [s for s in STEPS if want(s)]
+    pending = [s for s in STEPS if (only_steps is None or s in only_steps) and s not in steps]
 
     # The pipeline is shuffle-free after this point, so task parallelism ==
     # input splits. A narrow source (one small file, an exploded literal)
@@ -195,77 +204,19 @@ def ingest(
     # path) use the ids-only Arrow parse — the reference message layout,
     # File.hpp:257-259.
     needs_strings = bool({"logtype_dict", "var_dict", "counts_logtype"} & set(pending))
-    string_cols = ["logtype", "dict_vars", "dict_var_ids"] if needs_strings else []
     parsed = P.parse_encode(transcripts) if needs_strings else P.parse_encode_ids(transcripts)
     if dim_role is not None and dim_tool is not None:
         parsed = P.enrich(parsed, dim_role, dim_tool)
-    staged = (
-        parsed.withColumn(
-            "logtype_bucket", F.pmod(F.col("logtype_id"), F.lit(n_buckets)).cast("int")
-        )
-        .withColumn("_text_bytes", F.octet_length("text"))
-        .select(*MESSAGE_COLUMNS, "logtype_bucket", "_text_bytes", *string_cols)
-    )
-    # One pending step (the routed probe) reads staged once; a cache would
-    # only add its build cost.
-    cached = len(pending) > 1
-    if cached:
-        staged = staged.persist()
-
-    msgs_dir = os.path.join(out_dir, "messages")
-    try:
-        if want("messages"):
-            obs = Observation("ingest_messages")
-            ts_ms = P.ts_millis("ts")
-            msgs = staged.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_turns"),
-                F.sum("_text_bytes").alias("uncompressed_bytes"),
-                # archive-level ts range for selection pruning (reference
-                # archives table begin/end_timestamp,
-                # clp_metadata_db_utils.py:27-95)
-                F.min(ts_ms).alias("begin_ts_ms"),
-                F.max(ts_ms).alias("end_ts_ms"),
-            ).select(*MESSAGE_COLUMNS, "logtype_bucket")
-            _commit(
-                lambda d: msgs.sortWithinPartitions("logtype_bucket")
-                .write.mode("overwrite")
-                .options(**MESSAGES_PARQUET_OPTIONS, **codec_opts)
-                .partitionBy("logtype_bucket")
-                .parquet(d),
-                out_dir,
-                "messages",
-                step_secs,
-            )
-            steps["messages"] = {"n_turns": obs.get["n_turns"]}
-            manifest["metrics"].update(obs.get)
-            _write_manifest(out_dir, manifest)
-
-        # The reducer re-expressed: partial agg on executors, final agg
-        # after a tiny shuffle.
-        builders = {
-            "logtype_dict": lambda: P.build_logtype_dict(staged),
-            "var_dict": lambda: P.build_var_dict(staged),
-            "counts_logtype": lambda: P.per_logtype_counts(staged),
-            "counts_tool": lambda: staged.groupBy("tool").agg(F.count(F.lit(1)).alias("cnt")),
-            "counts_conv": lambda: P.per_conversation_counts(staged),
-            "lineage": lambda: _lineage(staged, msgs_dir),
-        }
-        for step, build in builders.items():
-            if not want(step):
-                continue
-            df = build()
-            _commit(
-                lambda d, df=df: df.write.mode("overwrite").options(**codec_opts).parquet(d),
-                out_dir,
-                step,
-                step_secs,
-            )
+    for step, obs in _ingest_steps(
+        parsed, out_dir, pending,
+        n_buckets=n_buckets, codec_opts=codec_opts, step_secs=step_secs,
+    ):
+        if obs is None:
             steps[step] = True
-            _write_manifest(out_dir, manifest)
-    finally:
-        if cached:
-            staged.unpersist()
+        else:
+            steps[step] = {"n_turns": obs["n_turns"]}
+            manifest["metrics"].update(obs)
+        _write_manifest(out_dir, manifest)
 
     # archive size + compression ratio (reference ArchiveMetadata's
     # compressed/uncompressed running sizes, clp/streaming_archive/
@@ -329,6 +280,120 @@ def _bucket_file_counts_udf(msgs_dir: str):
     return make
 
 
+class Sink(NamedTuple):
+    """An aggregate sink: its builder over the staged frame and the
+    committed messages dir, its group keys, and how each value column
+    merges partial aggregates (a stream's per-batch deltas and bases)."""
+
+    build: Callable[[DataFrame, str], DataFrame]
+    keys: tuple[str, ...]
+    merge: dict
+
+
+# The six aggregate sinks in STEPS order: the reducer re-expressed, partial
+# agg on executors, final agg after a tiny shuffle.
+SINKS = {
+    "logtype_dict": Sink(
+        lambda s, _m: P.build_logtype_dict(s),
+        ("logtype_id", "logtype", "var_kinds"), {"n_messages": F.sum},
+    ),
+    "var_dict": Sink(
+        lambda s, _m: P.build_var_dict(s), ("var_id", "var_str"), {"n_occurrences": F.sum}
+    ),
+    "counts_logtype": Sink(lambda s, _m: P.per_logtype_counts(s), ("logtype",), {"cnt": F.sum}),
+    "counts_tool": Sink(
+        lambda s, _m: s.groupBy("tool").agg(F.count(F.lit(1)).alias("cnt")),
+        ("tool",), {"cnt": F.sum},
+    ),
+    "counts_conv": Sink(
+        lambda s, _m: P.per_conversation_counts(s),
+        ("conv_id",), {"n_turns": F.sum, "first_ts_ms": F.min, "last_ts_ms": F.max},
+    ),
+    "lineage": Sink(
+        _lineage,
+        ("logtype_bucket",),
+        {"n_rows": F.sum, "n_files": F.sum, "begin_ts_ms": F.min, "end_ts_ms": F.max},
+    ),
+}
+
+
+def _ingest_steps(
+    parsed: DataFrame,
+    out_dir: str,
+    pending,
+    *,
+    at: Callable[[str], str] = lambda step: step,
+    n_buckets: int = 16,
+    codec_opts: dict | None = None,
+    step_secs: dict | None = None,
+):
+    """Stage `parsed` once and commit each pending step, in STEPS order, to
+    out_dir/at(step); yields (step, metrics) after each commit, where
+    metrics is the messages Observation's dict and None for the other steps.
+
+    The staged frame holds MESSAGE_COLUMNS + logtype_bucket, plus
+    _text_bytes when `parsed` carries text (IR frames do not) and the
+    template/variable strings when `parsed` carries them. It is persisted
+    when more than one step is pending: the messages write fills the cache
+    and every aggregate sink reads it."""
+    codec_opts = codec_opts or {}
+    text_cols = ["_text_bytes"] if "text" in parsed.columns else []
+    string_cols = [c for c in ("logtype", "dict_vars", "dict_var_ids") if c in parsed.columns]
+    if text_cols:
+        parsed = parsed.withColumn("_text_bytes", F.octet_length("text"))
+    staged = parsed.withColumn(
+        "logtype_bucket", F.pmod(F.col("logtype_id"), F.lit(n_buckets)).cast("int")
+    ).select(*MESSAGE_COLUMNS, "logtype_bucket", *text_cols, *string_cols)
+    # One pending step (the routed probe) reads staged once; a cache would
+    # only add its build cost.
+    cached = len(pending) > 1
+    if cached:
+        staged = staged.persist()
+
+    msgs_dir = os.path.join(out_dir, at("messages"))
+    try:
+        if "messages" in pending:
+            obs = Observation("ingest_messages")
+            ts_ms = P.ts_millis("ts")
+            text_bytes = [F.sum("_text_bytes").alias("uncompressed_bytes")] if text_cols else []
+            msgs = staged.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_turns"),
+                *text_bytes,
+                # archive-level ts range for selection pruning (reference
+                # archives table begin/end_timestamp,
+                # clp_metadata_db_utils.py:27-95)
+                F.min(ts_ms).alias("begin_ts_ms"),
+                F.max(ts_ms).alias("end_ts_ms"),
+            ).select(*MESSAGE_COLUMNS, "logtype_bucket")
+            _commit(
+                lambda d: msgs.sortWithinPartitions("logtype_bucket")
+                .write.mode("overwrite")
+                .options(**MESSAGES_PARQUET_OPTIONS, **codec_opts)
+                .partitionBy("logtype_bucket")
+                .parquet(d),
+                out_dir,
+                at("messages"),
+                step_secs,
+            )
+            yield "messages", obs.get
+
+        for step, sink in SINKS.items():
+            if step not in pending:
+                continue
+            df = sink.build(staged, msgs_dir)
+            _commit(
+                lambda d, df=df: df.write.mode("overwrite").options(**codec_opts).parquet(d),
+                out_dir,
+                at(step),
+                step_secs,
+            )
+            yield step, None
+    finally:
+        if cached:
+            staged.unpersist()
+
+
 def compact_bucket(
     spark: SparkSession, out_dir: str, bucket: int, target_files: int = 1
 ) -> None:
@@ -336,18 +401,29 @@ def compact_bucket(
     small per-logtype tables into combined tables). Rewrites the bucket's
     files into `target_files` files via staging + atomic rename."""
     bucket_dir = os.path.join(out_dir, "messages", f"logtype_bucket={bucket}")
-    staging = bucket_dir + ".compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        spark.read.parquet(bucket_dir)
-        .coalesce(target_files)
-        .write.mode("overwrite")
-        .parquet(staging)
+    _commit(
+        lambda d: spark.read.parquet(bucket_dir).coalesce(target_files).write.parquet(d),
+        out_dir,
+        f"messages/logtype_bucket={bucket}",
     )
-    old = bucket_dir + ".old"
-    os.replace(bucket_dir, old)
-    os.replace(staging, bucket_dir)
-    shutil.rmtree(old)
+
+
+def open_archive(spark: SparkSession, out_dir: str):
+    """(messages, logtype_dict, var_dict) of a batch or streamed archive.
+    A dictionary is its plain directory, or base ∪ live deltas merged by
+    SINKS when it has _deltas/. Messages are projected to MESSAGE_COLUMNS,
+    so archives of either layout (a streamed one adds a batch_id partition
+    column) union by name."""
+    from ..streaming.ingest import read_dict_sink
+
+    def sink(name):
+        d = os.path.join(out_dir, name)
+        if os.path.isdir(os.path.join(d, "_deltas")):
+            return read_dict_sink(spark, d)
+        return spark.read.parquet(d)
+
+    msgs = spark.read.parquet(os.path.join(out_dir, "messages")).select(*MESSAGE_COLUMNS)
+    return msgs, sink("logtype_dict"), sink("var_dict")
 
 
 def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -360,9 +436,7 @@ def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
     broadcast-join decode."""
     from .grep import _TOO_BIG, dict_rows
 
-    msgs = spark.read.parquet(os.path.join(out_dir, "messages"))
-    lt = spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
-    vd = spark.read.parquet(os.path.join(out_dir, "var_dict"))
+    msgs, lt, vd = open_archive(spark, out_dir)
     lt_rows, vd_rows = dict_rows(lt, vd)
     if vd_rows is not _TOO_BIG:
         return P.decode_messages_dictmap(spark, msgs, lt_rows, vd_rows)
@@ -422,21 +496,14 @@ def search_archives(
     )
     if not dirs:
         raise ValueError("no archive matches the selection")
-    from functools import reduce
-
-    def union_read(sub: str) -> DataFrame:
-        # per-archive reads + union: each partitioned root keeps its own
-        # partition discovery (one multi-root read would conflict)
-        parts = [spark.read.parquet(os.path.join(d, sub)) for d in dirs]
-        return reduce(DataFrame.unionByName, parts)
-
-    msgs = union_read("messages")
-    lt = (
-        union_read("logtype_dict")
-        .select("logtype_id", "logtype", "var_kinds")
-        .dropDuplicates(["logtype_id"])
+    # per-archive reads + union: each partitioned root keeps its own
+    # partition discovery (one multi-root read would conflict)
+    msgs, lt, vd = (
+        reduce(DataFrame.unionByName, parts)
+        for parts in zip(*(open_archive(spark, d) for d in dirs))
     )
-    vd = union_read("var_dict").select("var_id", "var_str").dropDuplicates(["var_id"])
+    lt = lt.select("logtype_id", "logtype", "var_kinds").dropDuplicates(["logtype_id"])
+    vd = vd.select("var_id", "var_str").dropDuplicates(["var_id"])
 
     # dictionary rows come from search's dict_rows, keyed by the dictionary
     # plans and their files: repeated queries over one archive set collect once
@@ -465,11 +532,7 @@ def compact_archive(
     if compacted:
         msgs_dir = os.path.join(out_dir, "messages")
         lineage = _lineage(spark.read.parquet(msgs_dir), msgs_dir)
-        staging = lineage_dir + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        lineage.coalesce(1).write.mode("overwrite").parquet(staging)
-        shutil.rmtree(lineage_dir)
-        os.replace(staging, lineage_dir)
+        _commit(lambda d: lineage.coalesce(1).write.mode("overwrite").parquet(d), out_dir, "lineage")
     return compacted
 
 
@@ -477,9 +540,9 @@ def readable_dictionaries(spark: SparkSession, out_dir: str):
     """Human-readable dictionary views, deterministically ordered
     (reference make_dictionaries_readable/): placeholder bytes rendered as
     \\x11/\\x12/\\x13 markers so templates print safely."""
+    _msgs, lt, vd = open_archive(spark, out_dir)
     lt = (
-        spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
-        .withColumn(
+        lt.withColumn(
             "logtype_readable",
             F.regexp_replace(
                 F.regexp_replace(
@@ -492,9 +555,5 @@ def readable_dictionaries(spark: SparkSession, out_dir: str):
         .select("logtype_id", "logtype_readable", "n_messages")
         .orderBy("logtype_readable")
     )
-    vd = (
-        spark.read.parquet(os.path.join(out_dir, "var_dict"))
-        .select("var_id", "var_str", "n_occurrences")
-        .orderBy("var_str")
-    )
+    vd = vd.select("var_id", "var_str", "n_occurrences").orderBy("var_str")
     return lt, vd

@@ -1129,11 +1129,13 @@ def ingest_json_archive(
       json_strings/   (id, path, kind, logtype_id, encoded_vars)
       logtype_dict/ var_dict/
       _manifest.json  row/schema counts
-    Same staging + atomic-rename commit discipline as plans/ingest.py.
+    Every sink and the manifest commit through plans/ingest.py's _commit
+    and _write_manifest (staging + atomic rename): a crash mid-write leaves
+    the previous sink or manifest readable.
     """
-    import json as _json
     import os
-    import shutil as _sh
+
+    from .ingest import _commit, _write_manifest
 
     if schema is None:
         # archive ingest: a key the sample misses is silently ABSENT from
@@ -1163,33 +1165,26 @@ def ingest_json_archive(
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def commit(write_fn, step):
-        staging = os.path.join(out_dir, "_staging", step)
-        final = os.path.join(out_dir, step)
-        _sh.rmtree(staging, ignore_errors=True)
-        _sh.rmtree(final, ignore_errors=True)
-        write_fn(staging)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.replace(staging, final)
-
     records = parsed.withColumn(
         "schema_bucket", F.pmod(F.col("schema_id"), F.lit(n_buckets)).cast("int")
     )
-    commit(
+    _commit(
         lambda d: records.sortWithinPartitions("schema_bucket")
         .write.mode("overwrite").partitionBy("schema_bucket").parquet(d),
+        out_dir,
         "records",
     )
-    commit(
+    _commit(
         lambda d: encoded.select(
             id_col, "path", "kind", "logtype_id", "encoded_vars"
         ).write.mode("overwrite").parquet(d),
+        out_dir,
         "json_strings",
     )
-    commit(lambda d: lt.write.mode("overwrite").parquet(d), "logtype_dict")
-    commit(lambda d: vd.write.mode("overwrite").parquet(d), "var_dict")
-    commit(lambda d: arr_store.write.mode("overwrite").parquet(d), "array_store")
-    commit(lambda d: arr_dict.write.mode("overwrite").parquet(d), "array_dict")
+    _commit(lambda d: lt.write.mode("overwrite").parquet(d), out_dir, "logtype_dict")
+    _commit(lambda d: vd.write.mode("overwrite").parquet(d), out_dir, "var_dict")
+    _commit(lambda d: arr_store.write.mode("overwrite").parquet(d), out_dir, "array_store")
+    _commit(lambda d: arr_dict.write.mode("overwrite").parquet(d), out_dir, "array_dict")
     encoded.unpersist()
     arr_store.unpersist()
 
@@ -1228,8 +1223,7 @@ def ingest_json_archive(
         }
         if ranges:
             manifest["numeric_ts_ranges"] = ranges
-    with open(os.path.join(out_dir, "_manifest.json"), "w") as f:
-        _json.dump(manifest, f, indent=2, sort_keys=True)
+    _write_manifest(out_dir, manifest)
     # sinks rewritten by rename: a persisted read of them must not keep
     # serving the old files (caching.py)
     spark.catalog.refreshByPath(out_dir)

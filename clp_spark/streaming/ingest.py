@@ -1,38 +1,34 @@
-"""Structured Streaming ingest: micro-batch parse -> encode -> route ->
-merge, exactly-once.
+"""Structured Streaming ingest: each micro-batch runs batch ingest's staging
+and sink builders, exactly-once, so a stream writes an ordinary archive.
 
-Reference analog (SURVEY.md §2.9): the Rust log-ingestor's S3/SQS listener +
-buffered compression submission (log-ingestor/src/ingestion_job/
-sqs_listener.rs, compression/buffer.rs) and clp_s's real-time KV-IR
-compression (clp_s/JsonParser.hpp:82-96). The reference has no watermarks /
-late-data semantics — late rows simply land in the currently-open archive —
-so a plain file-source stream with `Trigger.AvailableNow` + `foreachBatch`
-reproduces the model exactly.
+Reference analog (SURVEY.md §2.9): the Rust log-ingestor's S3/SQS listener
+feeds buffered files into the compression path batch jobs use
+(log-ingestor/src/compression/buffer.rs), and clp_s compresses KV-IR in real
+time (clp_s/JsonParser.hpp:82-96). The reference has no watermarks — late
+rows land in the open archive — so a file-source stream with
+`Trigger.AvailableNow` + `foreachBatch` reproduces the model exactly.
 
-Exactly-once: Spark's streaming checkpoint guarantees each micro-batch id is
-delivered at least once; EVERY sink write is idempotent per batch id —
-  * messages append as out/messages/batch_id=<id>/ via staging + atomic
-    rename (a re-delivered batch overwrites itself, never double-appends);
-  * dictionaries and counts are DELTA-LOG sinks: each batch writes only its
-    own partial aggregate under <sink>/_deltas/batch_id=<id>/ (staged +
-    atomic rename — a redelivered batch overwrites its own delta, so there
-    is NO crash window between sink commits and the manifest: the manifest
-    is bookkeeping, not a correctness fence); reads aggregate
-    base ∪ live deltas; periodic compaction writes a NEW uuid-named base dir
-    and commits it with one atomic rename of _base_meta.json, which names
-    both the current base dir and the batch ids it folds — so a crash at any
-    point leaves a consistent (base, merged-set) pair and can neither double
-    count a folded delta nor lose the base. Prior bases stay on disk as a
-    SNAPSHOT LOG (the Iceberg snapshot-list analog): read_dict_sink(
-    as_of_batch=N) time-travels to any unexpired micro-batch;
-    expire_snapshots() reclaims history behind a retention horizon.
-Per-batch write cost is O(delta) — the previous design rewrote the WHOLE
-dictionary every micro-batch (read-all ∪ delta -> overwrite), which goes
-quadratic over a long-running stream; compaction amortizes the O(total)
-rewrite over COMPACT_EVERY batches.
-This is the same no-append-on-retry discipline as the batch ingest manifest
-(clp_spark/plans/ingest.py), which the north rule requires for exact
-per-sink count parity.
+Micro-batch N calls plans.ingest._ingest_steps, ingest()'s own staging and
+step loop (one parse, one persisted staged frame, an Observation on the
+messages write), and commits all seven sinks through plans.ingest._commit
+(staging + atomic rename) to per-batch paths:
+  * messages -> out/messages/batch_id=N/logtype_bucket=B/;
+  * logtype_dict, var_dict, counts_logtype, counts_tool, counts_conv and
+    lineage -> out/<sink>/_deltas/batch_id=N/ (the batch's partial aggregate).
+A re-delivered batch overwrites its own files, never double-appends. The
+batch then lands in out/_manifest.json under `batches`, with the summed
+n_turns and min/max begin/end_ts_ms in `metrics` for select_archives. The
+manifest is bookkeeping, not a correctness fence.
+
+DELTA-LOG sinks: reads merge base ∪ live deltas per column (sum, min or max,
+plans.ingest.SINKS); compaction writes a NEW uuid-named base dir and commits
+it with one atomic rename of _base_meta.json, which names the base dir and
+the batch ids it folds, so a crash can neither double count a folded delta
+nor lose the base. Prior bases stay as a SNAPSHOT LOG (the Iceberg
+snapshot-list analog): read_dict_sink(as_of_batch=N) time-travels, and
+expire_snapshots() reclaims history. Per-batch writes are O(delta);
+compaction amortizes the O(total) rewrite over COMPACT_EVERY batches.
+plans.ingest.open_archive reads this layout and the batch one alike.
 """
 
 from __future__ import annotations
@@ -46,43 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import pipeline as P
-from ..plans.ingest import MESSAGE_COLUMNS
-
-
-def _stream_manifest(out_dir: str) -> dict:
-    p = os.path.join(out_dir, "_stream_manifest.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"batches": {}}
-
-
-def _write_stream_manifest(out_dir: str, m: dict) -> None:
-    p = os.path.join(out_dir, "_stream_manifest.json")
-    tmp = f"{p}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=2, sort_keys=True)
-    os.replace(tmp, p)
-
-
-def _staged_write(df: DataFrame, final: str, partition_by: list[str] | None = None):
-    staging = final + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    shutil.rmtree(final, ignore_errors=True)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    os.replace(staging, final)
-
-
-# (sink subdir, group keys, count column) for every delta-log sink
-DICT_SINKS = {
-    "logtype_dict": (["logtype_id", "logtype", "var_kinds"], "n_messages"),
-    "var_dict": (["var_id", "var_str"], "n_occurrences"),
-    "counts_logtype": (["logtype"], "cnt"),
-}
+from ..plans.ingest import SINKS, STEPS, _commit, _ingest_steps, _write_manifest, read_manifest
 
 # fold deltas into the base once this many live deltas accumulate
 COMPACT_EVERY = 8
@@ -97,29 +57,14 @@ def _base_meta(sink_dir: str) -> dict:
     which delta batch ids it already folds, plus the SNAPSHOT LOG — every
     retained historical base with the max batch id it folds (the Iceberg
     snapshot-list analog; `read_dict_sink(as_of_batch=...)` time-travels
-    through it). Written atomically (os.replace) so base CONTENTS, the
-    merged set and the snapshot list commit together."""
+    through it) — and the smallest delta batch id still guaranteed on disk
+    (raised by expiry). Written atomically (os.replace) so base CONTENTS,
+    the merged set and the snapshot list commit together."""
     p = os.path.join(sink_dir, "_base_meta.json")
     if os.path.exists(p):
         with open(p) as f:
-            meta = json.load(f)
-    else:
-        meta = {"merged_batches": []}
-    if "base_dir" not in meta:
-        # pre-pointer layout (or no base yet): the base, if any, is ./_base
-        meta["base_dir"] = (
-            "_base" if os.path.isdir(os.path.join(sink_dir, "_base")) else None
-        )
-    if "snapshots" not in meta:
-        # legacy meta: the current base is the only snapshot
-        meta["snapshots"] = (
-            [{"base_dir": meta["base_dir"], "max_batch": max(meta["merged_batches"], default=-1)}]
-            if meta["base_dir"]
-            else []
-        )
-    # smallest delta batch id still guaranteed on disk (raised by expiry)
-    meta.setdefault("delta_floor", 0)
-    return meta
+            return json.load(f)
+    return {"base_dir": None, "merged_batches": [], "snapshots": [], "delta_floor": 0}
 
 
 def _write_base_meta(sink_dir: str, meta: dict) -> None:
@@ -149,7 +94,9 @@ def _live_delta_ids(sink_dir: str, meta: dict | None = None) -> list[int]:
 def write_dict_delta(delta: DataFrame, sink_dir: str, batch_id: int) -> None:
     """O(delta) per-batch sink write, idempotent per batch id (staged +
     atomic rename: a redelivered batch overwrites its own delta)."""
-    _staged_write(delta, os.path.join(sink_dir, "_deltas", f"batch_id={batch_id}"))
+    _commit(
+        lambda d: delta.write.mode("overwrite").parquet(d), sink_dir, f"_deltas/batch_id={batch_id}"
+    )
 
 
 def _delta_ids_on_disk(sink_dir: str) -> list[int]:
@@ -171,10 +118,9 @@ def read_dict_sink(
     between (Iceberg snapshot-read analog; the time-travel path reads
     O(#batches-since-snapshot) small files, it is not the hot path).
     Raises ValueError when N predates the expiry horizon
-    (`expire_snapshots`). Sink subdir name determines (keys, cnt) via
-    DICT_SINKS."""
-    name = os.path.basename(sink_dir.rstrip("/"))
-    keys, cnt = DICT_SINKS[name]
+    (`expire_snapshots`). The sink subdir name selects its keys and
+    per-column merges in plans.ingest.SINKS."""
+    sink = SINKS[os.path.basename(sink_dir.rstrip("/"))]
     # One meta read gives a CONSISTENT (base, merged-set, snapshots) view.
     meta = _base_meta(sink_dir)
     parts = []
@@ -204,7 +150,7 @@ def read_dict_sink(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.groupBy(*keys).agg(F.sum(cnt).alias(cnt))
+    return out.groupBy(*sink.keys).agg(*[f(c).alias(c) for c, f in sink.merge.items()])
 
 
 def compact_dict_sink(spark: SparkSession, sink_dir: str) -> int:
@@ -277,43 +223,39 @@ def expire_snapshots(sink_dir: str, keep_last: int = 2) -> int:
     return len(drop)
 
 
-def _sink_parsed_batch(
-    spark: SparkSession,
-    out_dir: str,
-    parsed: DataFrame,
-    batch_id: int,
-    n_buckets: int,
-    compact_every: int,
-) -> int:
-    """Route one parsed micro-batch into all sinks (messages + delta-log
-    dictionaries/counts), idempotently per batch id. `parsed` must carry the
-    parse_encode output columns. Returns the batch's turn count."""
-    parsed = parsed.persist()
-    try:
-        msgs = parsed.withColumn(
-            "logtype_bucket",
-            F.pmod(F.col("logtype_id"), F.lit(n_buckets)).cast("int"),
-        ).select(*MESSAGE_COLUMNS, "logtype_bucket")
-        n = msgs.count()
-        _staged_write(
-            msgs.sortWithinPartitions("logtype_bucket"),
-            os.path.join(out_dir, "messages", f"batch_id={batch_id}"),
-            ["logtype_bucket"],
-        )
-        deltas = {
-            "logtype_dict": P.build_logtype_dict(parsed),
-            "var_dict": P.build_var_dict(parsed),
-            "counts_logtype": P.per_logtype_counts(parsed),
-        }
-        for name, delta in deltas.items():
+# per-batch Observation metrics -> archive totals in the manifest
+_TOTALS = {"n_turns": sum, "uncompressed_bytes": sum, "begin_ts_ms": min, "end_ts_ms": max}
+
+
+def _batch_fn(spark, out_dir, n_buckets, compact_every, parse):
+    """foreachBatch callback: parse the batch, commit all seven sinks for its
+    batch id through _ingest_steps, fold sinks that reached compact_every
+    live deltas, then record the batch in the manifest."""
+
+    def fn(batch_df: DataFrame, batch_id: int) -> None:
+        manifest = read_manifest(out_dir)
+        batches = manifest.setdefault("batches", {})
+        if str(batch_id) in batches:
+            return  # re-delivered batch: already fully committed
+
+        def at(step):
+            sub = step if step == "messages" else f"{step}/_deltas"
+            return f"{sub}/batch_id={batch_id}"
+
+        steps = dict(_ingest_steps(parse(batch_df), out_dir, STEPS, at=at, n_buckets=n_buckets))
+        batches[str(batch_id)] = steps["messages"]
+        for name in SINKS:
             sink = os.path.join(out_dir, name)
-            write_dict_delta(delta, sink, batch_id)
             if len(_live_delta_ids(sink)) >= compact_every:
                 compact_dict_sink(spark, sink)
                 expire_snapshots(sink, keep_last=SNAPSHOT_RETENTION)
-    finally:
-        parsed.unpersist()
-    return n
+        for k, total in _TOTALS.items():
+            vals = [b[k] for b in batches.values() if b.get(k) is not None]
+            if vals:
+                manifest["metrics"][k] = total(vals)
+        _write_manifest(out_dir, manifest)
+
+    return fn
 
 
 def process_batch(
@@ -323,20 +265,7 @@ def process_batch(
     compact_every: int = COMPACT_EVERY,
 ):
     """Returns the foreachBatch callback for stream_ingest."""
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        manifest = _stream_manifest(out_dir)
-        key = str(batch_id)
-        if key in manifest["batches"]:
-            return  # re-delivered batch: already fully committed
-
-        n = _sink_parsed_batch(
-            spark, out_dir, P.parse_encode(batch_df), batch_id, n_buckets, compact_every
-        )
-        manifest["batches"][key] = {"n_turns": n}
-        _write_stream_manifest(out_dir, manifest)
-
-    return fn
+    return _batch_fn(spark, out_dir, n_buckets, compact_every, P.parse_encode)
 
 
 def process_ir_batch(
@@ -351,28 +280,14 @@ def process_ir_batch(
     re-delivery, so a replayed batch rewrites identical rows."""
     from ..sources.ir_stream import ir_messages, read_clp_ir
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        manifest = _stream_manifest(out_dir)
-        key = str(batch_id)
-        if key in manifest["batches"]:
-            return  # re-delivered batch: already fully committed
-
+    def parse(batch_df: DataFrame) -> DataFrame:
         frames = batch_df.select(
             F.xxhash64("path").alias("stream_idx"),
             F.col("content").alias("payload"),
         )
-        n = _sink_parsed_batch(
-            spark,
-            out_dir,
-            ir_messages(read_clp_ir(frames)),
-            batch_id,
-            n_buckets,
-            compact_every,
-        )
-        manifest["batches"][key] = {"n_turns": n}
-        _write_stream_manifest(out_dir, manifest)
+        return ir_messages(read_clp_ir(frames))
 
-    return fn
+    return _batch_fn(spark, out_dir, n_buckets, compact_every, parse)
 
 
 def stream_ingest_ir(

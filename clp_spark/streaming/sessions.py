@@ -17,9 +17,10 @@ parity test pins agreement on gap-free-of-ties data.
 
 Exactly-once: emitted rows in append mode are CLOSED sessions (watermark
 passed end + gap), so they are immutable facts; each micro-batch's rows go
-to sessions/batch_id=<id>/ via the same staged-atomic-rename discipline as
-the ingest sinks (`streaming/ingest.py`) — a redelivered batch overwrites
-itself, never double-appends.
+to sessions/batch_id=<id>/ through the ingest sinks' commit helper
+(plans.ingest._commit, staging + atomic rename) and is recorded in the
+archive manifest format (_manifest.json `batches`) — a redelivered batch
+overwrites itself, never double-appends.
 
 At scale: session state is partitioned by the entity key (one shuffle);
 watermark bounds state size — sessions older than the delay are evicted as
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sessionize import _us
-from .ingest import _staged_write, _stream_manifest, _write_stream_manifest
+from ..plans.ingest import _commit, _write_manifest, read_manifest
 
 __all__ = ["session_stream", "stream_session_stats", "read_session_sink"]
 
@@ -95,17 +96,20 @@ def stream_session_stats(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        manifest = _stream_manifest(out_dir)
+        manifest = read_manifest(out_dir)
+        batches = manifest.setdefault("batches", {})
         key = str(batch_id)
-        if key in manifest["batches"]:
+        if key in batches:
             return  # redelivered batch: already committed
         rows = batch_df.count()
         if rows:
-            _staged_write(
-                batch_df, os.path.join(out_dir, "sessions", f"batch_id={batch_id}")
+            _commit(
+                lambda d: batch_df.write.mode("overwrite").parquet(d),
+                out_dir,
+                f"sessions/batch_id={batch_id}",
             )
-        manifest["batches"][key] = {"n_sessions": rows}
-        _write_stream_manifest(out_dir, manifest)
+        batches[key] = {"n_sessions": rows}
+        _write_manifest(out_dir, manifest)
 
     writer = sessions.writeStream.outputMode("append").foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

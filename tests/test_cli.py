@@ -73,6 +73,28 @@ def test_cli_extract_roundtrips(spark, archive):
     assert lines == want
 
 
+def test_cli_on_streamed_archive(spark, tmp_path):
+    """search and extract open a streamed archive (delta-log dictionaries,
+    batch_id-partitioned messages) and print the batch archive's output
+    for the same input."""
+    from clp_spark.plans.ingest import ingest
+    from clp_spark.sources.transcripts import load_transcripts
+    from clp_spark.streaming.ingest import stream_ingest
+
+    t = load_transcripts(spark, SF_DIR)
+    inp, streamed, batch = (str(tmp_path / d) for d in ("in", "streamed", "batch"))
+    t.repartition(2).write.parquet(inp)
+    q = stream_ingest(spark, inp, streamed, str(tmp_path / "ckpt"), schema=t.schema,
+                      max_files_per_trigger=1)
+    q.awaitTermination(120)
+    ingest(spark, t, batch)
+
+    for argv in (["search", "{}", "commit", "--count"], ["extract", "{}"]):
+        got = _run(spark, [a.format(streamed) for a in argv])
+        want = _run(spark, [a.format(batch) for a in argv])
+        assert got == want and got, argv
+
+
 def test_cli_compress_json_and_search_kql(spark, tmp_path):
     from clp_spark.sources.jsonlogs import load_jsonlogs
 

@@ -224,6 +224,33 @@ def test_json_archive_roundtrip_and_search(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
+def test_json_archive_manifest_survives_torn_rewrite(spark, tmp_path, monkeypatch):
+    """Re-ingesting into an existing JSON archive while the manifest write
+    fails part-way leaves the previous manifest readable, so KQL search
+    over the archive still works."""
+    import os
+
+    from clp_spark.plans.semistructured import ingest_json_archive, search_json_archives_kql
+
+    df = load_jsonlogs(spark, SF_DIR).limit(200)
+    out = str(tmp_path / "jarch")
+    first = ingest_json_archive(spark, df, out)
+
+    def torn_dump(obj, f, **kw):
+        text = json.dumps(obj, **kw)
+        f.write(text[: len(text) // 2])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        ingest_json_archive(spark, df, out)
+    monkeypatch.undo()
+
+    with open(os.path.join(out, "_manifest.json")) as f:
+        assert json.load(f) == first
+    assert search_json_archives_kql(spark, [out], 'level: "ERROR"').count() > 0
+
+
 def test_partitioned_inference_sees_late_keys(spark):
     """ADVICE r2: archive ingest must not silently drop a key that first
     appears after the global sample window. Per-partition sampling sees a

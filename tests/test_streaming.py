@@ -1,13 +1,15 @@
 """Streaming ingest: micro-batch drain, exactly-once re-delivery, parity
-with batch ingest counts."""
+with batch ingest on every sink and through the read path."""
 
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from clp_spark.plans import ingest as I
 from clp_spark.plans import pipeline as P
 from clp_spark.sources.transcripts import load_transcripts
 from clp_spark.streaming.ingest import (
@@ -74,6 +76,66 @@ def test_redelivered_batch_is_idempotent(spark, streamed):
         map(tuple, read_dict_sink(spark, os.path.join(out, "counts_logtype")).collect())
     )
     assert after_counts == before_counts
+
+
+def test_stream_matches_batch_ingest(spark, streamed, tmp_path):
+    """A streamed archive is an ordinary archive: after compaction each of
+    the seven sinks holds the batch ingest's rows, and search, decode and
+    archive selection give the batch archive's answers. lineage.n_files
+    (task layout, as in test_sinks_invariant_to_input_partitioning) and
+    messages.batch_id (the stream's partition column) are excluded."""
+    _, out, _ = streamed
+    batch = str(tmp_path / "batch")
+    I.ingest(spark, load_transcripts(spark, SF_DIR), batch)
+
+    def rows(df, cols):
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+    msg_cols = [*I.MESSAGE_COLUMNS, "logtype_bucket"]
+    s_msgs = spark.read.parquet(os.path.join(out, "messages"))
+    b_msgs = spark.read.parquet(os.path.join(batch, "messages"))
+    assert rows(s_msgs, msg_cols) == rows(b_msgs, msg_cols)
+    for name in I.STEPS[1:]:  # the six aggregate sinks
+        sink = os.path.join(out, name)
+        compact_dict_sink(spark, sink)
+        want = spark.read.parquet(os.path.join(batch, name))
+        cols = [c for c in want.columns if (name, c) != ("lineage", "n_files")]
+        got = rows(read_dict_sink(spark, sink), cols)
+        assert got == rows(want, cols) and got, name
+
+    cols = ["conv_id", "turn_idx", "ts", "text"]
+    for q, hits in (("commit", True), ("used 1* of * GB*", True), ("no such turn zzqx", False)):
+        want = rows(I.search_archives(spark, [batch], q), cols)
+        assert bool(want) == hits, q
+        assert rows(I.search_archives(spark, [out], q), cols) == want, q
+        both = I.search_archives(spark, [out, batch], q)
+        assert rows(both, cols) == sorted(want * 2, key=repr), q
+
+    cols = ["conv_id", "turn_idx", "text"]
+    assert rows(I.decode_archive(spark, out), cols) == rows(I.decode_archive(spark, batch), cols)
+
+    end = I.read_manifest(batch)["metrics"]["end_ts_ms"]
+    assert I.read_manifest(out)["metrics"]["end_ts_ms"] == end
+    assert I.select_archives([out, batch], begin_ts_ms=end + 1) == []
+    assert set(I.select_archives([out, batch], begin_ts_ms=end)) == {out, batch}
+
+
+def test_micro_batch_parses_each_turn_once(spark, tmp_path):
+    """One process_batch call runs the parse UDF over each turn once (the
+    summed MapInArrow output rows equal the batch's rows), and the
+    manifest's turn count is the messages write's Observation."""
+    from perfbench.tracing import SqlMetrics, metric_sum, within
+
+    sql = SqlMetrics(spark)
+    t = load_transcripts(spark, SF_DIR)
+    out = str(tmp_path / "out")
+    span = {"start": time.time()}
+    process_batch(spark, out)(t, 0)
+    span["end"] = time.time()
+    n = t.count()
+    assert metric_sum(within(sql.collect(), span), "MapInArrow", "number of output rows") == n
+    manifest = I.read_manifest(out)
+    assert manifest["batches"]["0"]["n_turns"] == manifest["metrics"]["n_turns"] == n
 
 
 def test_delta_log_writes_are_o_delta_and_replay_safe(spark, tmp_path):
@@ -149,7 +211,6 @@ def test_stream_ingest_ir_end_to_end(spark, tmp_path):
     exact counts preserved across an incremental trigger AND a replayed
     batch; decoded text is byte-identical to what was serialized."""
     from clp_spark.functions.tokenizer import encode_text
-    from clp_spark.plans.pipeline import decode_messages
     from clp_spark.sources.ir_stream import write_ir_stream
     from clp_spark.streaming.ingest import process_ir_batch, stream_ingest_ir
 
@@ -180,10 +241,10 @@ def test_stream_ingest_ir_end_to_end(spark, tmp_path):
     assert msgs.count() == len(texts_a) + len(texts_b)
     assert msgs.select("conv_id").distinct().count() == 2
 
-    lt = read_dict_sink(spark, os.path.join(out, "logtype_dict"))
-    vd = read_dict_sink(spark, os.path.join(out, "var_dict"))
-    decoded = {r["text"] for r in decode_messages(msgs, lt, vd).collect()}
+    decoded = {r["text"] for r in I.decode_archive(spark, out).collect()}
     assert decoded == set(texts_a) | set(texts_b)
+    metrics = I.read_manifest(out)["metrics"]
+    assert (metrics["begin_ts_ms"], metrics["end_ts_ms"]) == (1700000000000, 1700000101000)
 
     # incremental: a third stream arrives; a second AvailableNow pass over
     # the SAME checkpoint drains only the new file
@@ -194,6 +255,7 @@ def test_stream_ingest_ir_end_to_end(spark, tmp_path):
     q2.awaitTermination(120)
     msgs2 = spark.read.parquet(os.path.join(out, "messages"))
     assert msgs2.count() == len(texts_a) + len(texts_b) + len(texts_c)
+    assert I.read_manifest(out)["metrics"]["end_ts_ms"] == 1700000200000
 
     # replay: re-delivering an already-committed batch id changes nothing
     frames = spark.read.format("binaryFile").load(inp)
