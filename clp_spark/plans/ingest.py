@@ -11,7 +11,7 @@ Spark-first re-expression — one ingest() call produces seven sinks:
 
   out/messages/        encoded turns, hash-partitioned by logtype_bucket
                        (glt-style per-logtype routing, glt/.../LogtypeTable.hpp)
-  out/logtype_dict/    (logtype_id, logtype, n_messages)
+  out/logtype_dict/    (logtype_id, logtype, n_messages, var_kinds)
   out/var_dict/        (var_id, var_str, n_occurrences)
   out/counts_logtype/  per-logtype counts     (north-star aggregate parity)
   out/counts_tool/     per-tool counts
@@ -35,11 +35,11 @@ Design-for-scale notes:
     when a dictionary step or counts_logtype runs. The storage level is
     Spark's default MEMORY_AND_DISK_DESER, so partitions that do not fit in
     memory spill to local disk instead of being re-parsed. The messages
-    write fills the cache; the dictionaries, count sinks and lineage
-    aggregate column-pruned InMemoryTableScans of it and never re-read the
-    messages sink. Only lineage.n_files comes from the committed sink (its
-    directory listing). A run with one pending step (the messages-only
-    routed path) persists nothing.
+    write fills the cache; every other sink aggregates column-pruned
+    InMemoryTableScans of it and never re-reads the messages sink. Only
+    lineage.n_files comes from the committed sink (its directory listing).
+    A run with one pending step (the messages-only routed path) persists
+    nothing.
   * The messages write is SHUFFLE-FREE: rows get a logtype_bucket column and
     each task writes its own per-bucket files (sortWithinPartitions groups a
     task's rows so each task opens one file per bucket at a time). A hot
@@ -48,9 +48,14 @@ Design-for-scale notes:
     repartition+AQE for a Zipfian logtype distribution. Small files are
     handled by compact_bucket() (size-tiered merge, the analog of glt's
     combined tables, glt/.../GLTSegment.hpp:83-113).
-  * Dictionary builds are groupBys with map-side partial aggregation — the
-    shuffle carries only per-partition distinct partials (tiny), like the
-    reference's inter-stage vs intra-stage CountOperator split.
+  * logtype_dict, counts_logtype, counts_tool and lineage are sized by
+    templates, tools and buckets, not by data. ONE Spark action (a groupBy
+    of staged with count and min/max ts, collected as Arrow) feeds all
+    four; the driver rolls it up per sink and writes each through its own
+    _commit, as the reference writes its logtype dictionary from memory
+    once per archive (LogTypeDictionaryWriter) and counts with one
+    partial/final CountOperator aggregate. var_dict and counts_conv grow
+    with the data and stay Spark groupBys.
   * Each step commits via staging-dir + atomic rename and is recorded in
     the manifest; re-running ingest() skips completed steps (idempotent,
     no append-on-retry double counting). This is the filesystem analog of
@@ -68,9 +73,11 @@ import os
 import shutil
 import time
 import uuid
-from functools import reduce
+from functools import cache, reduce
 from typing import Callable, NamedTuple
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -167,9 +174,12 @@ def ingest(
     --compression knob, clp/streaming_compression/: zstd default, lzma,
     passthrough). Parquet codecs here: zstd (default, the reference's
     default too), gzip (the high-ratio/slow slot lzma occupies there —
-    parquet-mr has no lzma/xz codec), snappy/lz4 (fast), uncompressed
-    (= the reference's passthrough). Applied to every sink of this job via
-    the per-write option, not session config.
+    parquet-mr has no lzma/xz codec), snappy/lz4_raw (fast), uncompressed
+    (= the reference's passthrough); None is the session's parquet codec.
+    It applies to every sink of this job: to the Spark writes as the
+    per-write option, not session config, and to the four driver-written
+    sinks through ARROW_CODECS. A codec outside ARROW_CODECS raises
+    ValueError before any sink is written.
 
     Resumable: completed steps recorded in out/_manifest.json are skipped
     (pass resume=False to force a full rebuild). Every turn is parsed once
@@ -179,7 +189,6 @@ def ingest(
     {"messages"} for the parsed+routed scaling probe).
     """
     os.makedirs(out_dir, exist_ok=True)
-    codec_opts = {"compression": codec} if codec else {}
     manifest = read_manifest(out_dir) if resume else {"steps": {}, "metrics": {}}
     manifest["dataset"] = dataset
     manifest["tags"] = sorted(tags)
@@ -209,7 +218,7 @@ def ingest(
         parsed = P.enrich(parsed, dim_role, dim_tool)
     for step, obs in _ingest_steps(
         parsed, out_dir, pending,
-        n_buckets=n_buckets, codec_opts=codec_opts, step_secs=step_secs,
+        n_buckets=n_buckets, codec=codec, step_secs=step_secs,
     ):
         if obs is None:
             steps[step] = True
@@ -244,67 +253,133 @@ def ingest(
     return manifest
 
 
-def _lineage(rows: DataFrame, msgs_dir: str) -> DataFrame:
-    """Per-bucket rows/files plus the min/max-ts range index that drives
-    archive pruning in the reference (clp_s/TimestampEntry.hpp:58-93,
-    EvaluateTimestampIndex). `rows` carries logtype_bucket and ts; file
-    counts come from the listing of the committed messages sink."""
-    return (
-        rows.groupBy("logtype_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min(P.ts_millis("ts")).alias("begin_ts_ms"),
-            F.max(P.ts_millis("ts")).alias("end_ts_ms"),
+def _bucket_file_counts(msgs_dir: str) -> dict[int, int]:
+    """Parquet files per logtype bucket, from the messages dir listing."""
+    return {
+        int(d.split("=", 1)[1]): sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(msgs_dir, d))
         )
-        .withColumn("n_files", _bucket_file_counts_udf(msgs_dir)("logtype_bucket"))
+        for d in os.listdir(msgs_dir)
+        if d.startswith("logtype_bucket=")
+    }
+
+
+# Spark's parquet schema of each driver-written sink, nullability included:
+# the read path and the delta merge depend on these types.
+DRIVER_SCHEMAS = {
+    "logtype_dict": pa.schema([
+        ("logtype_id", pa.int64()), ("logtype", pa.string()),
+        pa.field("n_messages", pa.int64(), False), ("var_kinds", pa.list_(pa.int32())),
+    ]),
+    "counts_logtype": pa.schema([("logtype", pa.string()), pa.field("cnt", pa.int64(), False)]),
+    "counts_tool": pa.schema([("tool", pa.string()), pa.field("cnt", pa.int64(), False)]),
+    "lineage": pa.schema([
+        ("logtype_bucket", pa.int32()), pa.field("n_rows", pa.int64(), False),
+        ("begin_ts_ms", pa.int64()), ("end_ts_ms", pa.int64()), ("n_files", pa.int32()),
+    ]),
+}
+
+
+def _table(sink: str, *columns) -> pa.Table:
+    schema = DRIVER_SCHEMAS[sink]
+    return pa.table(dict(zip(schema.names, columns)), schema=schema)
+
+
+def _aggregate(staged: DataFrame, keys: list[str]) -> pa.Table:
+    """The one Spark action behind the driver sinks: rows and ts range per
+    group of `keys` (at most templates x tools rows), collected as Arrow."""
+    ts_ms = P.ts_millis("ts")
+    return staged.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"), F.min(ts_ms).alias("ts_min"), F.max(ts_ms).alias("ts_max")
+    ).toArrow()
+
+
+def _logtype_dict(groups: pa.Table, _msgs_dir: str) -> pa.Table:
+    """(logtype_id, logtype, n_messages, var_kinds): P.build_logtype_dict's
+    rows, from the groups."""
+    t = groups.group_by(["logtype_id", "logtype"]).aggregate([("n", "sum")])
+    kinds = [P.var_kinds(lt) for lt in t["logtype"].to_pylist()]
+    return _table("logtype_dict", t["logtype_id"], t["logtype"], t["n_sum"], kinds)
+
+
+def _counts(sink: str, key: str):
+    """(key, cnt): the groups' rows summed per `key`."""
+    return lambda groups, _m: _table(
+        sink, *groups.group_by([key]).aggregate([("n", "sum")]).select([key, "n_sum"]).columns
     )
 
 
-def _bucket_file_counts_udf(msgs_dir: str):
-    """File counts per bucket from a directory listing (driver-side
-    metadata, no data scan) exposed as a tiny lookup udf."""
-    counts = {}
-    for d in os.listdir(msgs_dir):
-        if d.startswith("logtype_bucket="):
-            b = int(d.split("=", 1)[1])
-            counts[b] = sum(
-                1 for f in os.listdir(os.path.join(msgs_dir, d)) if f.endswith(".parquet")
-            )
+def _lineage(groups: pa.Table, msgs_dir: str) -> pa.Table:
+    """Per-bucket rows/files plus the min/max-ts range index that drives
+    archive pruning in the reference (clp_s/TimestampEntry.hpp:58-93,
+    EvaluateTimestampIndex); file counts list the committed messages dir."""
+    t = groups.group_by(["logtype_bucket"]).aggregate(
+        [("n", "sum"), ("ts_min", "min"), ("ts_max", "max")]
+    )
+    files = _bucket_file_counts(msgs_dir)
+    return _table(
+        "lineage", t["logtype_bucket"], t["n_sum"], t["ts_min_min"], t["ts_max_max"],
+        [files.get(b) for b in t["logtype_bucket"].to_pylist()],
+    )
 
-    def make(col):
-        mapping = F.create_map(
-            *[F.lit(x) for kv in counts.items() for x in kv]
-        ) if counts else F.create_map()
-        return mapping[F.col(col)]
 
-    return make
+# Spark parquet codec -> pyarrow's, so driver-written sinks match the others.
+# Spark's "lz4" is Hadoop-framed LZ4, which pyarrow does not write; pyarrow's
+# "lz4" is LZ4_RAW.
+ARROW_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "gzip": "gzip", "lz4_raw": "lz4", "zstd": "zstd",
+}
+
+
+def _parquet_codec(spark: SparkSession, codec: str | None) -> str:
+    """`codec` or the session's parquet codec; ValueError if unsupported."""
+    name = (codec or spark.conf.get("spark.sql.parquet.compression.codec")).lower()
+    if name not in ARROW_CODECS:
+        raise ValueError(f"unsupported parquet codec {name!r}, not in {sorted(ARROW_CODECS)}")
+    return name
+
+
+def _write_table(table: pa.Table, d: str, codec: str) -> None:
+    """One parquet file from the driver, no larger than Spark's write of the
+    same rows: no embedded Arrow schema, plain pages, and zstd at
+    parquet-mr's default level 3."""
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(
+        table, os.path.join(d, "part-00000.parquet"), compression=ARROW_CODECS[codec],
+        compression_level=3 if codec == "zstd" else None,
+        use_dictionary=False, store_schema=False,
+    )
 
 
 class Sink(NamedTuple):
-    """An aggregate sink: its builder over the staged frame and the
-    committed messages dir, its group keys, and how each value column
-    merges partial aggregates (a stream's per-batch deltas and bases)."""
+    """An aggregate sink: its builder over the staged frame (a DataFrame)
+    or, for a driver sink, over the `group_keys` of the one shared
+    aggregate (a DRIVER_SCHEMAS table), plus the committed messages dir;
+    its keys; and how each value column merges partial aggregates (a
+    stream's per-batch deltas and bases)."""
 
-    build: Callable[[DataFrame, str], DataFrame]
+    build: Callable
     keys: tuple[str, ...]
     merge: dict
+    group_keys: tuple[str, ...] = ()
 
 
-# The six aggregate sinks in STEPS order: the reducer re-expressed, partial
-# agg on executors, final agg after a tiny shuffle.
+# The six aggregate sinks in STEPS order: the reducer re-expressed. The two
+# data-sized ones are Spark jobs; the four driver-sized ones roll up one
+# collected aggregate (the CountOperator partial/final split, SURVEY §4.2).
 SINKS = {
     "logtype_dict": Sink(
-        lambda s, _m: P.build_logtype_dict(s),
-        ("logtype_id", "logtype", "var_kinds"), {"n_messages": F.sum},
+        _logtype_dict, ("logtype_id", "logtype", "var_kinds"), {"n_messages": F.sum},
+        ("logtype_id", "logtype"),
     ),
     "var_dict": Sink(
         lambda s, _m: P.build_var_dict(s), ("var_id", "var_str"), {"n_occurrences": F.sum}
     ),
-    "counts_logtype": Sink(lambda s, _m: P.per_logtype_counts(s), ("logtype",), {"cnt": F.sum}),
-    "counts_tool": Sink(
-        lambda s, _m: s.groupBy("tool").agg(F.count(F.lit(1)).alias("cnt")),
-        ("tool",), {"cnt": F.sum},
+    "counts_logtype": Sink(
+        _counts("counts_logtype", "logtype"), ("logtype",), {"cnt": F.sum}, ("logtype",)
     ),
+    "counts_tool": Sink(_counts("counts_tool", "tool"), ("tool",), {"cnt": F.sum}, ("tool",)),
     "counts_conv": Sink(
         lambda s, _m: P.per_conversation_counts(s),
         ("conv_id",), {"n_turns": F.sum, "first_ts_ms": F.min, "last_ts_ms": F.max},
@@ -313,6 +388,7 @@ SINKS = {
         _lineage,
         ("logtype_bucket",),
         {"n_rows": F.sum, "n_files": F.sum, "begin_ts_ms": F.min, "end_ts_ms": F.max},
+        ("logtype_bucket",),
     ),
 }
 
@@ -324,7 +400,7 @@ def _ingest_steps(
     *,
     at: Callable[[str], str] = lambda step: step,
     n_buckets: int = 16,
-    codec_opts: dict | None = None,
+    codec: str | None = None,
     step_secs: dict | None = None,
 ):
     """Stage `parsed` once and commit each pending step, in STEPS order, to
@@ -335,8 +411,11 @@ def _ingest_steps(
     _text_bytes when `parsed` carries text (IR frames do not) and the
     template/variable strings when `parsed` carries them. It is persisted
     when more than one step is pending: the messages write fills the cache
-    and every aggregate sink reads it."""
-    codec_opts = codec_opts or {}
+    and every aggregate sink reads it. The driver sinks share one aggregate
+    action, run inside the first pending driver sink's commit so that
+    step's time carries it. `codec` (default: the session's parquet codec)
+    applies to every sink; an unsupported one raises before any write."""
+    codec = _parquet_codec(parsed.sparkSession, codec)
     text_cols = ["_text_bytes"] if "text" in parsed.columns else []
     string_cols = [c for c in ("logtype", "dict_vars", "dict_var_ids") if c in parsed.columns]
     if text_cols:
@@ -349,6 +428,9 @@ def _ingest_steps(
     cached = len(pending) > 1
     if cached:
         staged = staged.persist()
+    # group keys no pending driver sink reads are left out of the aggregate
+    group_keys = list(dict.fromkeys(k for s in pending if s in SINKS for k in SINKS[s].group_keys))
+    groups = cache(lambda: _aggregate(staged, group_keys))
 
     msgs_dir = os.path.join(out_dir, at("messages"))
     try:
@@ -369,7 +451,7 @@ def _ingest_steps(
             _commit(
                 lambda d: msgs.sortWithinPartitions("logtype_bucket")
                 .write.mode("overwrite")
-                .options(**MESSAGES_PARQUET_OPTIONS, **codec_opts)
+                .options(**MESSAGES_PARQUET_OPTIONS, compression=codec)
                 .partitionBy("logtype_bucket")
                 .parquet(d),
                 out_dir,
@@ -381,13 +463,16 @@ def _ingest_steps(
         for step, sink in SINKS.items():
             if step not in pending:
                 continue
-            df = sink.build(staged, msgs_dir)
-            _commit(
-                lambda d, df=df: df.write.mode("overwrite").options(**codec_opts).parquet(d),
-                out_dir,
-                at(step),
-                step_secs,
-            )
+            if sink.group_keys:
+
+                def write(d, build=sink.build):
+                    _write_table(build(groups(), msgs_dir), d, codec)
+            else:
+                df = sink.build(staged, msgs_dir)
+
+                def write(d, df=df):
+                    df.write.mode("overwrite").option("compression", codec).parquet(d)
+            _commit(write, out_dir, at(step), step_secs)
             yield step, None
     finally:
         if cached:
@@ -520,19 +605,24 @@ def compact_archive(
     """Lineage-driven size-tiered compaction: rewrite every bucket whose
     file count exceeds the limit (the glt combined-table policy,
     glt/.../GLTSegment.hpp:83-113 — many small per-logtype tables get
-    packed together). Refreshes the lineage sink afterwards. Returns
+    packed together). Compaction moves no rows, so only lineage.n_files
+    changes: it is re-read from the messages dir listing and the sink is
+    recommitted from the driver, with no data scan. Returns
     {bucket: files_before} for the compacted buckets."""
-    lineage_dir = os.path.join(out_dir, "lineage")
-    rows = spark.read.parquet(lineage_dir).collect()
+    lineage = pq.read_table(os.path.join(out_dir, "lineage"))
     compacted = {}
-    for r in rows:
-        if r["n_files"] > max_files_per_bucket:
-            compact_bucket(spark, out_dir, int(r["logtype_bucket"]), target_files=1)
-            compacted[int(r["logtype_bucket"])] = int(r["n_files"])
+    for b, n in zip(lineage["logtype_bucket"].to_pylist(), lineage["n_files"].to_pylist()):
+        if n > max_files_per_bucket:
+            compact_bucket(spark, out_dir, b, target_files=1)
+            compacted[b] = n
     if compacted:
-        msgs_dir = os.path.join(out_dir, "messages")
-        lineage = _lineage(spark.read.parquet(msgs_dir), msgs_dir)
-        _commit(lambda d: lineage.coalesce(1).write.mode("overwrite").parquet(d), out_dir, "lineage")
+        files = _bucket_file_counts(os.path.join(out_dir, "messages"))
+        lineage = _table(
+            "lineage", *(lineage[c] for c in ("logtype_bucket", "n_rows", "begin_ts_ms", "end_ts_ms")),
+            [files.get(b) for b in lineage["logtype_bucket"].to_pylist()],
+        )
+        codec = _parquet_codec(spark, None)
+        _commit(lambda d: _write_table(lineage, d, codec), out_dir, "lineage")
     return compacted
 
 

@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..caching import DRIVER_VALUES
+from ..functions.tokenizer import _template_parts
 
 
 def ts_millis(ts_col: str) -> Column:
@@ -139,12 +140,14 @@ def parse_encode_ids(transcripts: DataFrame, text_col: str = "text") -> DataFram
     return transcripts.mapInArrow(run, schema=out_schema)
 
 
+def var_kinds(logtype: str | None) -> list[int]:
+    """Placeholder-kind sequence of a template (0x11/0x12/0x13 per var)."""
+    return [ord(k) for k in _template_parts(logtype or "")[1]]
+
+
 @F.pandas_udf(ArrayType(IntegerType()))
 def _var_kinds_udf(logtypes: pd.Series) -> pd.Series:
-    """Placeholder-kind sequence of each template (0x11/0x12/0x13 per var)."""
-    from clp_spark.functions.tokenizer import _template_parts
-
-    return logtypes.map(lambda lt: [ord(k) for k in _template_parts(lt or "")[1]])
+    return logtypes.map(var_kinds)
 
 
 def build_logtype_dict(parsed: DataFrame) -> DataFrame:
@@ -323,21 +326,6 @@ def count_by_time(df: DataFrame, bucket_ms: int = 3_600_000, ts_col: str = "ts")
     return df.groupBy(bucket.alias("bucket_ms")).agg(F.count("*").alias("cnt"))
 
 
-def count_logtype_vars(logtype: str) -> int:
-    """Number of variable placeholders in a logtype template (escape-aware)."""
-    n = 0
-    i = 0
-    while i < len(logtype):
-        c = logtype[i]
-        if c == "\\":
-            i += 2
-            continue
-        if c in ("\x11", "\x12", "\x13"):
-            n += 1
-        i += 1
-    return n
-
-
 def logtype_table(messages: DataFrame, logtype_dict: DataFrame, logtype: str) -> DataFrame:
     """glt-style per-logtype pivot: one table per template with the ragged
     variable array pivoted to real columns (ts, keys, var_0..var_{n-1}) —
@@ -349,7 +337,7 @@ def logtype_table(messages: DataFrame, logtype_dict: DataFrame, logtype: str) ->
     bucket-partitioned messages sink the logtype_id filter prunes files via
     parquet min-max/dictionary stats.
     """
-    n_vars = count_logtype_vars(logtype)
+    n_vars = len(var_kinds(logtype))
     lid_row = logtype_dict.filter(F.col("logtype") == logtype).select("logtype_id").first()
     if lid_row is None:
         base = messages.filter(F.lit(False))

@@ -78,17 +78,8 @@ def _write_base_meta(sink_dir: str, meta: dict) -> None:
 
 def _live_delta_ids(sink_dir: str, meta: dict | None = None) -> list[int]:
     """Delta batch ids NOT yet folded into the base."""
-    ddir = os.path.join(sink_dir, "_deltas")
-    if not os.path.isdir(ddir):
-        return []
     merged = set((meta or _base_meta(sink_dir))["merged_batches"])
-    out = []
-    for d in os.listdir(ddir):
-        if d.startswith("batch_id="):
-            b = int(d.split("=", 1)[1])
-            if b not in merged:
-                out.append(b)
-    return sorted(out)
+    return [b for b in _delta_ids_on_disk(sink_dir) if b not in merged]
 
 
 def write_dict_delta(delta: DataFrame, sink_dir: str, batch_id: int) -> None:

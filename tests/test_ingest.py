@@ -113,6 +113,44 @@ def test_ingest_parses_each_turn_once(spark, tmp_path):
     assert rows == m["metrics"]["n_turns"] > 0
 
 
+DRIVER_SINKS = ("logtype_dict", "counts_logtype", "counts_tool", "lineage")
+
+
+def test_driver_sinks_come_from_one_execution(spark, tmp_path, monkeypatch):
+    """A full ingest builds the four driver-sized sinks from one SQL
+    execution (one aggregate collected as Arrow), and no execution outside
+    the messages step runs Python workers: the parse runs once, in the
+    messages write, and nothing after it leaves the JVM."""
+    from perfbench.tracing import SqlMetrics, metric_sum
+
+    sql = SqlMetrics(spark)
+    spans = {}
+    commit = I._commit
+
+    def traced_commit(fn, out_dir, step, *args, **kwargs):
+        spans[step] = (time.time(), None)
+        try:
+            return commit(fn, out_dir, step, *args, **kwargs)
+        finally:
+            spans[step] = (spans[step][0], time.time())
+
+    monkeypatch.setattr(I, "_commit", traced_commit)
+    t = load_transcripts(spark, SF_DIR)
+    start = time.time()
+    I.ingest(spark, t, str(tmp_path / "arch"),
+             dim_role=dim_role(spark), dim_tool=dim_tool(spark))
+    end = time.time()
+
+    def submitted(e, step):
+        return spans[step][0] <= e["submitted"] <= spans[step][1]
+
+    ex = [e for e in sql.collect() if start <= e["submitted"] <= end]
+    assert [sum(submitted(e, s) for e in ex) for s in DRIVER_SINKS] == [1, 0, 0, 0]
+    outside = [e["rows"] for e in ex if not submitted(e, "messages")]
+    assert len(outside) == 3  # the aggregate, var_dict and counts_conv
+    assert metric_sum(outside, "", "time to run Python workers") == 0
+
+
 def test_derived_metrics_match_sinks(spark, archive, tmp_path):
     """Values derived in the messages write or from the staged parse agree
     with the sinks: the manifest's ts range is the lineage range,
@@ -196,6 +234,36 @@ def test_crash_leaves_no_partial_sink(spark, tmp_path):
     assert os.path.isdir(os.path.join(out, "logtype_dict"))
 
 
+@pytest.mark.parametrize("step", ["logtype_dict", "lineage"])
+def test_crash_between_commit_and_manifest(spark, archive, tmp_path, monkeypatch, step):
+    """A crash after a driver-written sink's rename and before the manifest
+    records it: the resume=True rerun commits that step again, and every
+    sink is row-identical to an uninterrupted ingest, with the same
+    manifest steps."""
+    full, _ = archive
+    out = str(tmp_path / "arch")
+    t = load_transcripts(spark, SF_DIR)
+    commit = I._commit
+
+    def commit_then_crash(fn, out_dir, s, *args, **kwargs):
+        final = commit(fn, out_dir, s, *args, **kwargs)
+        if s == step:
+            raise RuntimeError("injected after commit")
+        return final
+
+    monkeypatch.setattr(I, "_commit", commit_then_crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        I.ingest(spark, t, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark))
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(out, step))
+    assert step not in I.read_manifest(out)["steps"]
+
+    I.ingest(spark, t, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark), resume=True)
+    assert set(I.read_manifest(out)["steps"]) == set(I.read_manifest(full)["steps"])
+    for sink in I.STEPS:
+        assert _row_set(spark, out, sink) == _row_set(spark, full, sink), sink
+
+
 def test_compaction_preserves_rows(spark, archive):
     out, _ = archive
     msgs_dir = os.path.join(out, "messages")
@@ -266,24 +334,37 @@ def test_reingest_invalidates_dict_caches(spark, tmp_path):
 
 
 def test_auto_compaction_by_lineage(spark, tmp_path):
+    """Compaction moves no rows: per bucket, n_rows and the ts range stay as
+    ingest wrote them, and n_files follows the messages dir listing."""
     out = str(tmp_path / "arch_many")
     t = load_transcripts(spark, SF_DIR).repartition(16)  # 16 files per bucket
     I.ingest(spark, t, out)
-    lin = {r["logtype_bucket"]: r["n_files"]
-           for r in spark.read.parquet(os.path.join(out, "lineage")).collect()}
-    assert max(lin.values()) > 4
+
+    def lineage():
+        return {r["logtype_bucket"]: r.asDict()
+                for r in spark.read.parquet(os.path.join(out, "lineage")).collect()}
+
+    lin = lineage()
+    assert max(r["n_files"] for r in lin.values()) > 4
     before = spark.read.parquet(os.path.join(out, "messages")).count()
 
     compacted = I.compact_archive(spark, out, max_files_per_bucket=4)
     assert compacted  # something was over the limit
-    lin2 = {r["logtype_bucket"]: r["n_files"]
-            for r in spark.read.parquet(os.path.join(out, "lineage")).collect()}
-    assert max(lin2.values()) <= 4
+    assert compacted == {b: r["n_files"] for b, r in lin.items() if r["n_files"] > 4}
+    lin2 = lineage()
+    assert max(r["n_files"] for r in lin2.values()) <= 4
     assert spark.read.parquet(os.path.join(out, "messages")).count() == before
-    # rows per bucket unchanged
-    l1 = {r["logtype_bucket"]: r["n_rows"]
-          for r in spark.read.parquet(os.path.join(out, "lineage")).collect()}
-    assert sum(l1.values()) == before
+    assert sum(r["n_rows"] for r in lin2.values()) == before
+    keep = ("n_rows", "begin_ts_ms", "end_ts_ms")
+    assert {b: [r[k] for k in keep] for b, r in lin2.items()} == \
+        {b: [r[k] for k in keep] for b, r in lin.items()}
+    msgs_dir = os.path.join(out, "messages")
+    listed = {
+        int(d.split("=")[1]): len([f for f in os.listdir(os.path.join(msgs_dir, d))
+                                   if f.endswith(".parquet")])
+        for d in os.listdir(msgs_dir) if d.startswith("logtype_bucket=")
+    }
+    assert {b: r["n_files"] for b, r in lin2.items()} == listed
 
 
 def test_readable_dictionaries(spark, archive):
@@ -350,27 +431,47 @@ def test_messages_sink_rowgroup_skip_machinery(spark, archive, tmp_path):
     assert meta["ts"][0] == -1, meta
 
 
-def test_codec_knob_applies_to_all_sinks(spark, tmp_path):
-    """Per-job compression codec (the reference's --compression knob,
-    clp/streaming_compression/): every sink's parquet pages carry the
-    selected codec; results are identical to the default-zstd archive."""
-    import pyarrow.parquet as pq
+CODECS = ("zstd", "gzip", "snappy", "uncompressed")
+
+
+def _footer_codecs(sink_dir):
     import glob
 
-    out = str(tmp_path / "gz")
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(sink_dir, "**", "*.parquet"), recursive=True)
+    assert files, sink_dir
+    codecs = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        codecs |= {md.row_group(g).column(i).compression
+                   for g in range(md.num_row_groups) for i in range(md.num_columns)}
+    return codecs
+
+
+def test_codec_knob_applies_to_all_sinks(spark, tmp_path):
+    """Per-job compression codec (the reference's --compression knob,
+    clp/streaming_compression/): for every codec of the round-trip matrix,
+    the pages of all seven sinks, Spark-written and driver-written, carry
+    the messages sink's codec. A codec the driver writer cannot match
+    raises before any sink is written."""
     t = load_transcripts(spark, SF_DIR)
-    I.ingest(spark, t, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark),
-             codec="gzip")
-    for sink in ("messages", "logtype_dict", "var_dict", "counts_logtype"):
-        files = glob.glob(os.path.join(out, sink, "**", "*.parquet"),
-                          recursive=True)
-        assert files, sink
-        md = pq.ParquetFile(files[0]).metadata
-        codecs = {md.row_group(0).column(i).compression
-                  for i in range(md.num_columns)}
-        assert codecs == {"GZIP"}, (sink, codecs)
-    n = spark.read.parquet(os.path.join(out, "messages")).count()
-    assert n == load_transcripts(spark, SF_DIR).count()
+    n = t.count()
+    for codec in CODECS:
+        out = str(tmp_path / codec)
+        I.ingest(spark, t, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark),
+                 codec=codec)
+        assert _footer_codecs(os.path.join(out, "messages")) == {codec.upper()}
+        for sink in I.STEPS[1:]:
+            assert _footer_codecs(os.path.join(out, sink)) == {codec.upper()}, (codec, sink)
+        assert spark.read.parquet(os.path.join(out, "messages")).count() == n
+
+    # lz4 is Hadoop-framed LZ4, which the driver writer cannot produce
+    for codec in ("brotli", "lz4"):
+        bad = str(tmp_path / f"bad_{codec}")
+        with pytest.raises(ValueError, match=codec):
+            I.ingest(spark, t, bad, codec=codec)
+        assert not [s for s in I.STEPS if os.path.exists(os.path.join(bad, s))], codec
 
 
 def test_codec_matrix_roundtrip_and_ratio_ordering(spark, tmp_path):
@@ -383,7 +484,7 @@ def test_codec_matrix_roundtrip_and_ratio_ordering(spark, tmp_path):
     parquet-mr has no lzma) beats snappy."""
     t_small = load_transcripts(spark, SF_DIR)
     texts = t_small.select("conv_id", "turn_idx", "text")
-    for codec in ("zstd", "gzip", "snappy", "uncompressed"):
+    for codec in CODECS:
         out = str(tmp_path / f"rt_{codec}")
         I.ingest(spark, t_small, out, dim_role=dim_role(spark),
                  dim_tool=dim_tool(spark), codec=codec)
@@ -394,7 +495,7 @@ def test_codec_matrix_roundtrip_and_ratio_ordering(spark, tmp_path):
 
     t_big = load_transcripts(spark, "/root/testdata/sf0.01")
     ratios = {}
-    for codec in ("zstd", "gzip", "snappy", "uncompressed"):
+    for codec in CODECS:
         m = I.ingest(spark, t_big, str(tmp_path / f"ratio_{codec}"),
                      dim_role=dim_role(spark), dim_tool=dim_tool(spark),
                      codec=codec)

@@ -78,15 +78,20 @@ def test_redelivered_batch_is_idempotent(spark, streamed):
     assert after_counts == before_counts
 
 
-def test_stream_matches_batch_ingest(spark, streamed, tmp_path):
+@pytest.fixture(scope="module")
+def batch(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("batch"))
+    I.ingest(spark, load_transcripts(spark, SF_DIR), out)
+    return out
+
+
+def test_stream_matches_batch_ingest(spark, streamed, batch):
     """A streamed archive is an ordinary archive: after compaction each of
     the seven sinks holds the batch ingest's rows, and search, decode and
     archive selection give the batch archive's answers. lineage.n_files
     (task layout, as in test_sinks_invariant_to_input_partitioning) and
     messages.batch_id (the stream's partition column) are excluded."""
     _, out, _ = streamed
-    batch = str(tmp_path / "batch")
-    I.ingest(spark, load_transcripts(spark, SF_DIR), batch)
 
     def rows(df, cols):
         return sorted(map(tuple, df.select(*cols).collect()), key=repr)
@@ -118,6 +123,46 @@ def test_stream_matches_batch_ingest(spark, streamed, tmp_path):
     assert I.read_manifest(out)["metrics"]["end_ts_ms"] == end
     assert I.select_archives([out, batch], begin_ts_ms=end + 1) == []
     assert set(I.select_archives([out, batch], begin_ts_ms=end)) == {out, batch}
+
+
+# Spark's read schema of the four driver-written sinks, as Spark wrote
+# them: read_dict_sink's merge and decode_messages' var_kinds branch
+# depend on these types.
+DRIVER_SINK_SCHEMAS = {
+    "logtype_dict": "logtype_id bigint, logtype string, n_messages bigint, var_kinds array<int>",
+    "counts_logtype": "logtype string, cnt bigint",
+    "counts_tool": "tool string, cnt bigint",
+    "lineage": "logtype_bucket int, n_rows bigint, begin_ts_ms bigint, end_ts_ms bigint,"
+               " n_files int",
+}
+
+
+def _parquet_bytes(d):
+    return sum(os.path.getsize(os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_driver_sinks_keep_spark_schema_and_size(spark, streamed, batch, tmp_path):
+    """In a batch and a streamed archive, each driver-written sink (each
+    per-batch delta of a stream) reads back with Spark's column names,
+    order and types, and takes no more parquet bytes than a Spark write of
+    the same rows."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    _, streamed_out, _ = streamed
+    n = 0
+    for name, ddl in DRIVER_SINK_SCHEMAS.items():
+        deltas = os.path.join(streamed_out, name, "_deltas")
+        dirs = [os.path.join(batch, name)] + [
+            os.path.join(deltas, b) for b in sorted(os.listdir(deltas))
+        ]
+        assert len(dirs) >= 3, name  # the batch sink and >= 2 micro-batch deltas
+        for d in dirs:
+            df = spark.read.parquet(d)
+            assert df.schema == _parse_datatype_string(ddl), (d, df.schema.simpleString())
+            ref = str(tmp_path / f"spark{n}")
+            n += 1
+            df.coalesce(1).write.parquet(ref)
+            assert 0 < _parquet_bytes(d) <= _parquet_bytes(ref), d
 
 
 def test_micro_batch_parses_each_turn_once(spark, tmp_path):
