@@ -129,8 +129,8 @@ def q_roundtrip_mismatches(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
     parsed = persist(P.parse_encode(t))
     lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
-    lt_rows, vd_rows = dict_rows(lt, vd)  # session-cached collected dictionaries
-    if vd_rows is _TOO_BIG:  # dictionaries beyond broadcast: join decode
+    templates, var_index = dict_rows(lt, vd)  # session-cached collected dictionaries
+    if var_index is _TOO_BIG:  # dictionaries beyond broadcast: join decode
         msgs = P.encoded_messages(parsed)
         dec = P.decode_messages(msgs, lt, vd).withColumnRenamed("text", "dec_text")
         mism = dec.join(
@@ -144,7 +144,7 @@ def q_roundtrip_mismatches(spark, sf_dir):
     # fewer bytes is the only remaining lever). Same single narrow scan,
     # no join (the reference round-trip verify streams both sides in order).
     msgs = parsed.select("text", "logtype_id", "encoded_vars")
-    return P.roundtrip_mismatch_count(spark, msgs, lt_rows, vd_rows)
+    return P.roundtrip_mismatch_count(spark, msgs, templates.rows, var_index.rows)
 
 
 def _encoded(spark, sf_dir):
@@ -197,7 +197,7 @@ def q_latest_n(spark, sf_dir):
 
 
 def q_search_var_prune(spark, sf_dir):
-    return _search(spark, sf_dir, SEARCH_VAR_QUERY, prune_vars=True)
+    return _search(spark, sf_dir, SEARCH_VAR_QUERY)
 
 
 def q_search_ci(spark, sf_dir):

@@ -35,7 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # Replicate the transcript corpus for the scaling probe so the parallel
 # region dominates fixed costs (100k turns x REPL). Each Spark job carries
 # a few seconds of fixed driver/setup cost (solve F + W/N from the two

@@ -6,13 +6,19 @@ Reference lifecycle (SURVEY.md §3.2; clp/GrepCore.hpp:156-271, clp/Grep.cpp:81-
         -> decode matching rows
         -> final wildcard confirm on the decoded text.
 
-Spark re-expression: the logtype dictionary is tiny relative to the data
-(thousands of templates vs 10^12 turns), so candidate pruning runs on the
-driver against the collected dictionary; the candidate-id set becomes a
-broadcast `isin`/semi-join; only surviving rows pay the decode join; the
-confirm filter is a JVM `rlike`. This keeps the expensive work proportional
-to matching logtypes, like the reference's segment-index pruning
-(clp/Query.cpp make_sub_queries_relevant_to_segment).
+Spark re-expression in two parts. plan_query is the one planner, a pure
+function over the collected dictionaries (the logtype dictionary is tiny
+relative to the data: thousands of templates vs 10^12 turns): it returns
+"no match" or (candidate logtype ids, encoded-variable needles, ids exempt
+from the needles), applying the candidate prune, the WontMatch check and
+the var-id lookup in one pass. The dictionaries are indexed once per load
+(LogtypeIndex, VarIndex); a var dictionary above DICT_BROADCAST_LIMIT
+answers the planner's var questions with one distributed scan of the
+dictionary. search() is the thin Spark part: ts filter, `isin` on the
+candidates, var_sequence_filter on the needles (always on, except under
+ignore_case), decode, and a JVM `rlike` confirm. This keeps the expensive
+work proportional to matching logtypes, like the reference's segment-index
+pruning (clp/Query.cpp make_sub_queries_relevant_to_segment).
 
 Candidate test = exact wildcard-pattern intersection (DP) between the query
 and the logtype template with each variable placeholder treated as '*'
@@ -23,7 +29,9 @@ confirm filter, which the reference also applies (clp/Grep.cpp:116-132).
 
 from __future__ import annotations
 
-from functools import lru_cache
+import re
+from functools import cached_property, lru_cache
+from itertools import groupby
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,6 +39,7 @@ from pyspark.sql import functions as F
 from ..caching import DRIVER_VALUES, plan_key
 from ..functions.tokenizer import PLACEHOLDER_DICT, PLACEHOLDER_FLOAT, PLACEHOLDER_INT
 from ..functions.wildcard import clean_up_wildcard_search_string, wildcard_to_regex
+from . import pipeline as P
 
 _PLACEHOLDERS = (PLACEHOLDER_INT, PLACEHOLDER_DICT, PLACEHOLDER_FLOAT)
 
@@ -130,10 +139,15 @@ def normalize_query(query: str) -> str:
     return clean_up_wildcard_search_string(q)
 
 
-def candidate_logtype_ids(logtype_rows, query: str) -> list[int]:
-    """Driver-side dictionary prune: rows = [(logtype_id, logtype), ...]."""
-    q = normalize_query(query)
-    return [lid for lid, lt in logtype_rows if patterns_intersect(q, _template_to_pattern(lt))]
+def candidate_logtype_ids(logtype_rows, query: str, ignore_case: bool = False) -> list[int]:
+    """Driver-side dictionary prune: rows = [(logtype_id, logtype), ...].
+    Under ignore_case both patterns compare lowercased."""
+
+    def fold(s: str) -> str:
+        return s.lower() if ignore_case else s
+
+    q = fold(normalize_query(query))
+    return [lid for lid, lt in logtype_rows if patterns_intersect(q, fold(_template_to_pattern(lt)))]
 
 
 def query_var_slots(query: str) -> list[tuple[str, int | None]]:
@@ -170,38 +184,9 @@ def query_var_slots(query: str) -> list[tuple[str, int | None]]:
     return slots
 
 
-def query_var_candidates(query: str, var_rows) -> list[list[int]]:
-    """Slot candidate-id lists from a COLLECTED var dictionary
-    (var_rows: [(var_id, var_str), ...]); see query_var_slots."""
-    by_val: dict[str, list[int]] = {}
-    for vid, vs in var_rows:
-        by_val.setdefault(vs, []).append(vid)
-    return [
-        [enc] if enc is not None else by_val.get(tok, [])
-        for tok, enc in query_var_slots(query)
-    ]
-
-
 def _wildcard_segments(pattern: str) -> list[str]:
     """Maximal wildcard-free segments of a pattern (escapes resolved)."""
-    segs, cur = [], []
-    i, n = 0, len(pattern)
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            cur.append(pattern[i + 1])
-            i += 2
-        elif c in "*?":
-            if cur:
-                segs.append("".join(cur))
-                cur = []
-            i += 1
-        else:
-            cur.append(c)
-            i += 1
-    if cur:
-        segs.append("".join(cur))
-    return segs
+    return _literal_runs(pattern, lambda c: True)
 
 
 _TOKEN_CHARS = frozenset(
@@ -212,32 +197,58 @@ _TOKEN_CHARS = frozenset(
 def _token_runs(pattern: str) -> list[str]:
     """Maximal token-char-only runs of a wildcard pattern (escapes resolved;
     '*' and '?' break runs — '?' may stand for a delimiter)."""
-    runs, cur = [], []
-    i, n = 0, len(pattern)
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            i += 1
-            c = pattern[i]
-            literal = True
-        else:
-            literal = False
-        if (not literal and c in "*?") or c not in _TOKEN_CHARS:
-            if cur:
-                runs.append("".join(cur))
-                cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur:
-        runs.append("".join(cur))
-    return runs
+    return _literal_runs(pattern, _TOKEN_CHARS.__contains__)
+
+
+def _literal_runs(pattern: str, keep) -> list[str]:
+    """Maximal runs of literal characters c with keep(c) in a pattern."""
+    groups = groupby(_tokens(pattern), lambda t: t[0] == "lit" and keep(t[1]))
+    return ["".join(t[1] for t in g) for kept, g in groups if kept]
 
 
 _NUMERIC_RUN_CHARS = frozenset("0123456789.-")
+_TEMPLATE_ESCAPE = re.compile(r"\\(.)", re.S)
 
 
-def query_wont_match(query: str, logtype_strings, var_strings) -> bool:
+class LogtypeIndex:
+    """A collected logtype dictionary, indexed once per load: `rows`
+    [(logtype_id, logtype), ...], `text`, every template unescaped (a
+    literal backslash is a token char, stored as an escaped pair) and joined
+    by '\\n', and `bare`, the ids of the bare dictionary-placeholder
+    template. A token run holds no '\\n', so a run is in `text` iff some
+    template contains it. A JSON VarString stores its whole value as ONE
+    dictionary variable under the bare template, so the query's inner
+    tokens are not its variables: its rows are exempt from the needles."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.text = "\n".join(_TEMPLATE_ESCAPE.sub(r"\1", lt) for _, lt in rows)
+        self.bare = [lid for lid, lt in rows if lt == PLACEHOLDER_DICT]
+
+    @cached_property
+    def lower(self) -> str:
+        return self.text.lower()
+
+
+def _runs_outside_templates(query: str, templates: LogtypeIndex, ignore_case: bool) -> list[str]:
+    """The query's token-char runs (lowercased under ignore_case) that no
+    template's text contains, leaving out runs made only of [0-9.-] (they
+    could sit inside an encoded numeric variable, which is not
+    dictionary-enumerable)."""
+    runs = [r for r in _token_runs(normalize_query(query)) if not set(r) <= _NUMERIC_RUN_CHARS]
+    if ignore_case:
+        runs = [r.lower() for r in runs]
+    text = templates.lower if ignore_case else templates.text
+    return [r for r in runs if r not in text]
+
+
+def _runs_in_vars(runs, var_strings) -> bool:
+    """Whether every run occurs in some of the (already case-folded) var
+    strings."""
+    return all(any(r in v for v in var_strings) for r in runs)
+
+
+def query_wont_match(query: str, logtype_strings, var_strings, ignore_case: bool = False) -> bool:
     """Global WontMatch check (reference SubQuery WontMatch / imprecise-var
     wildcard dictionary lookup, clp/GrepCore.hpp:98-102 +
     DictionaryReader.hpp:275+): a message token is entirely static text or
@@ -245,18 +256,88 @@ def query_wont_match(query: str, logtype_strings, var_strings) -> bool:
     as a substring of some logtype template, some dictionary variable, or a
     possible int/float rendering. If any run can appear nowhere, NO message
     matches. SOUND over-approximation: placeholder bytes are non-token
-    chars, so runs cannot falsely span a variable boundary in a template,
-    and runs made only of [0-9.-] are exempt (they could sit inside an
-    encoded numeric variable, which is not dictionary-enumerable)."""
-    for run in _token_runs(normalize_query(query)):
-        if all(c in _NUMERIC_RUN_CHARS for c in run):
-            continue  # could live inside an int/float variable
-        if any(run in lt for lt in logtype_strings):
-            continue
-        if any(run in v for v in var_strings):
-            continue
-        return True
-    return False
+    chars, so runs cannot falsely span a variable boundary in a template.
+    Under ignore_case runs and strings compare lowercased, as clg's
+    --ignore-case lowercases both sides."""
+    templates = LogtypeIndex([(0, lt) for lt in logtype_strings])
+    runs = _runs_outside_templates(query, templates, ignore_case)
+    if not runs:
+        return False
+    return not _runs_in_vars(runs, [v.lower() for v in var_strings] if ignore_case else var_strings)
+
+
+class VarIndex:
+    """A collected var dictionary, indexed once per load: `rows`
+    [(var_id, var_str), ...], `ids` value -> [var_id, ...] and `text`, every
+    distinct value joined by '\\n'. A token run holds no '\\n', so a run is
+    in `text` iff some value contains it."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.ids: dict[str, list[int]] = {}
+        for vid, vs in rows:
+            self.ids.setdefault(vs, []).append(vid)
+        self.text = "\n".join(self.ids)
+
+    @cached_property
+    def lower(self) -> str:
+        return self.text.lower()
+
+    def __call__(self, runs, toks, ignore_case):
+        """plan_query's var lookup: the whole dictionary answers both."""
+        return (self.lower if ignore_case else self.text,), self.ids
+
+
+def _var_dict_scan(var_dict: DataFrame):
+    """plan_query's var lookup for a dictionary too big to collect: ONE
+    column-pruned aggregate over the DICTIONARY (distinct variables, never
+    the data) returns, per run, one value containing it (the distributed
+    dictionary-wide wildcard lookup, clp/DictionaryReader.hpp:275+), and per
+    token the ids of that exact value. Both answers are driver-sized."""
+
+    def lookup(runs, toks, ignore_case):
+        s = F.col("var_str")
+        hay = F.lower(s) if ignore_case else s
+        row = var_dict.agg(
+            *[F.max(F.when(hay.contains(r), hay)).alias(f"r{i}") for i, r in enumerate(runs)],
+            *[
+                F.collect_list(F.when(s == t, F.col("var_id"))).alias(f"t{i}")
+                for i, t in enumerate(toks)
+            ],
+        ).first()
+        witnesses = [w for w in row[: len(runs)] if w is not None]
+        return witnesses, dict(zip(toks, row[len(runs):]))
+
+    return lookup
+
+
+def plan_query(query: str, templates: LogtypeIndex, var_lookup, ignore_case: bool = False):
+    """The search planner, pure over the collected dictionaries: None when
+    no message can match, else (candidate logtype ids, var-id needles,
+    logtype ids exempt from the needles).
+
+    One pass in the reference's order (clp/GrepCore.hpp:156-271): the
+    candidate prune over the templates, then ONE var lookup for what the
+    templates cannot answer — the runs WontMatch still needs and the ids of
+    the query's dictionary-variable tokens. `var_lookup(runs, toks,
+    ignore_case) -> (var strings, lowercased under ignore_case, {token:
+    [var_id, ...]})` is a VarIndex or _var_dict_scan. Encoded-variable
+    needles are off under ignore_case (ids and encodings are case-exact).
+    Bare-template rows (LogtypeIndex.bare) are exempt from the needles;
+    when some needle has no id, only they can still match."""
+    cand = candidate_logtype_ids(templates.rows, query, ignore_case)
+    if not cand:
+        return None
+    runs = _runs_outside_templates(query, templates, ignore_case)
+    slots = [] if ignore_case else query_var_slots(query)
+    toks = list(dict.fromkeys(tok for tok, enc in slots if enc is None))
+    var_strings, ids = var_lookup(runs, toks, ignore_case) if runs or toks else ((), {})
+    if not _runs_in_vars(runs, var_strings):
+        return None
+    needles = [[enc] if enc is not None else ids.get(tok, []) for tok, enc in slots]
+    if all(needles):
+        return cand, needles, templates.bare
+    return (templates.bare, [], []) if templates.bare else None
 
 
 def var_sequence_filter(needles: list[list[int]]):
@@ -275,11 +356,10 @@ _TOO_BIG = object()  # sentinel: var dict exceeds DICT_BROADCAST_LIMIT
 
 
 def dict_rows(logtype_dict: DataFrame, var_dict: DataFrame):
-    """Collected dictionaries -> (lt_rows, vd_rows): [(logtype_id, logtype),
-    ...] and [(var_id, var_str), ...], or _TOO_BIG in place of vd_rows above
-    DICT_BROADCAST_LIMIT. Session-cached by the dictionaries' plan identity
-    (clp_spark/caching.py), the way the reference keeps per-archive
-    dictionaries resident across queries
+    """Collected dictionaries -> (LogtypeIndex, VarIndex), or _TOO_BIG in
+    place of the VarIndex above DICT_BROADCAST_LIMIT. Session-cached by the
+    dictionaries' plan identity (clp_spark/caching.py), the way the
+    reference keeps per-archive dictionaries resident across queries
     (clp/streaming_archive/reader/Archive.cpp:163-195)."""
 
     def load():
@@ -291,40 +371,30 @@ def dict_rows(logtype_dict: DataFrame, var_dict: DataFrame):
             var_dict.select("var_id", "var_str").limit(DICT_BROADCAST_LIMIT + 1).collect()
         )
         if len(sample) > DICT_BROADCAST_LIMIT:
-            return lt_rows, _TOO_BIG
-        return lt_rows, [(r["var_id"], r["var_str"]) for r in sample]
+            return LogtypeIndex(lt_rows), _TOO_BIG
+        return LogtypeIndex(lt_rows), VarIndex([(r["var_id"], r["var_str"]) for r in sample])
 
     key = plan_key(logtype_dict, "dict_rows", plan_key(var_dict))
     return DRIVER_VALUES.get_or_load(key, load)
 
 
-def _distributed_var_contains(var_dict: DataFrame, runs: list[str], ignore_case: bool) -> list[bool]:
-    """One column-pruned scan of the var dictionary answering, per query
-    token run, "does ANY dictionary variable contain this run?" — the
-    distributed analog of the reference's dictionary-wide wildcard lookup
-    (clp/DictionaryReader.hpp:275+) for dictionaries too big to collect.
-    The scan is over the DICTIONARY (distinct variables), never the data."""
-    col = F.lower(F.col("var_str")) if ignore_case else F.col("var_str")
-    aggs = [
-        F.max(col.contains(run.lower() if ignore_case else run)).alias(f"r{i}")
-        for i, run in enumerate(runs)
-    ]
-    row = var_dict.agg(*aggs).first()
-    return [bool(row[f"r{i}"]) for i in range(len(runs))]
-
-
-def _distributed_var_ids(var_dict: DataFrame, toks: list[str]) -> dict[str, list[int]]:
-    """Exact-token id lookup against a non-collectible var dictionary: the
-    token set is tiny, so `isin` pushes into the parquet scan and the result
-    (ids of query tokens only) is always driver-sized."""
-    out: dict[str, list[int]] = {t: [] for t in toks}
-    for r in (
-        var_dict.select("var_id", "var_str")
-        .filter(F.col("var_str").isin(list(toks)))
-        .collect()
-    ):
-        out[r["var_str"]].append(r["var_id"])
-    return out
+def decode(
+    messages: DataFrame,
+    logtype_dict: DataFrame,
+    var_dict: DataFrame,
+    rows,
+    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
+) -> DataFrame:
+    """Encoded messages -> (*key_cols, ts?, text), given dict_rows' `rows`.
+    When the var dictionary is collectible (CLP's own
+    in-memory-dictionaries assumption for decompression) this is the
+    shuffle-free dictmap decode, otherwise the broadcast-join decode."""
+    templates, var_index = rows
+    if var_index is _TOO_BIG:
+        return P.decode_messages(messages, logtype_dict, var_dict, key_cols=key_cols)
+    return P.decode_messages_dictmap(
+        messages.sparkSession, messages, templates.rows, var_index.rows, key_cols=key_cols
+    )
 
 
 def search(
@@ -336,134 +406,50 @@ def search(
     begin_ts_ms: int | None = None,
     end_ts_ms: int | None = None,
     ignore_case: bool = False,
-    prune_vars: bool = False,
-    lt_rows: list | None = None,
-    vd_rows: list | None = None,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
 ) -> DataFrame:
     """Full wildcard search -> (*key_cols, ts?, text) of matching rows.
 
-    Filter staging mirrors the reference's cheap-to-expensive order
+    plan_query prunes on the driver against dict_rows' session-cached
+    dictionaries; above DICT_BROADCAST_LIMIT its var lookup is one
+    distributed dictionary scan. The Spark part then stages the filters in
+    the reference's cheap-to-expensive order
     (clp/streaming_archive/reader/File.cpp:269-292): ts range, logtype-set
-    semi-filter, optional encoded-variable subsequence prune, then decode +
-    wildcard confirm. `ignore_case` follows clg's --ignore-case
-    (clp/GrepCore.hpp process_raw_query use_ignore_case).
-
-    lt_rows / vd_rows: pre-collected dictionaries [(id, string), ...] —
-    pass them to amortize dictionary loading across queries; otherwise they
-    are collected here by dict_rows (session cache).
-    When the var dictionary exceeds DICT_BROADCAST_LIMIT, the WontMatch
-    precheck and var pruning switch to DISTRIBUTED dictionary lookups (one
-    dictionary scan each) instead of disabling themselves, and decode falls
-    back to broadcast joins.
+    semi-filter, encoded-variable subsequence filter, then decode + wildcard
+    confirm. `ignore_case` follows clg's --ignore-case
+    (clp/GrepCore.hpp process_raw_query use_ignore_case). A query the
+    planner rules out returns an empty frame that runs no Spark job.
     """
-    from .pipeline import decode_messages
-
-    spark = messages.sparkSession
-    q = normalize_query(query)
+    rows = dict_rows(logtype_dict, var_dict)
+    templates, var_index = rows
+    lookup = _var_dict_scan(var_dict) if var_index is _TOO_BIG else var_index
+    plan = plan_query(query, templates, lookup, ignore_case)
 
     has_ts = "ts" in messages.columns and "ts" not in key_cols
     out_cols = list(key_cols) + (["ts"] if has_ts else [])
-
-    def empty():
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [messages.schema[c] for c in out_cols]
-                + [StructField("text", StringType())]
-            ),
-        )
+    if plan is None:
+        # the optimizer folds this to an empty LocalTableScan: no job
+        text = F.lit(None).cast("string").alias("text")
+        return messages.select(*out_cols, text).filter(F.lit(False))
+    cand, needles, exempt = plan
 
     filtered = messages
     if begin_ts_ms is not None:
         filtered = filtered.filter(F.unix_millis(F.col("ts").cast("timestamp")) >= begin_ts_ms)
     if end_ts_ms is not None:
         filtered = filtered.filter(F.unix_millis(F.col("ts").cast("timestamp")) <= end_ts_ms)
-
-    # Driver-side dictionary prune (the logtype dictionary is bounded by
-    # #distinct templates, not data size — always collectible).
-    if lt_rows is None or vd_rows is None:
-        cached_lt, cached_vd = dict_rows(logtype_dict, var_dict)
-        lt_rows = cached_lt if lt_rows is None else lt_rows
-        vd_rows = cached_vd if vd_rows is None else vd_rows
-    if vd_rows is _TOO_BIG:
-        vd_rows = None
-
-    # Global WontMatch precheck (dictionary-wide wildcard lookup): a query
-    # term that appears in no template and no dictionary variable cannot
-    # match anything — skip the scan entirely. Distributed var-dict path
-    # when the dictionary is too big to collect.
-    lts = [lt for _, lt in lt_rows]
-    if ignore_case:
-        lts_cmp, q_cmp = [s.lower() for s in lts], q.lower()
-    else:
-        lts_cmp, q_cmp = lts, q
-    pending_runs = [
-        run
-        for run in _token_runs(q_cmp)
-        if not all(c in _NUMERIC_RUN_CHARS for c in run)
-        and not any(run in lt for lt in lts_cmp)
-    ]
-    if pending_runs:
-        if vd_rows is not None:
-            vs = [v for _, v in vd_rows]
-            if ignore_case:
-                vs = [s.lower() for s in vs]
-            if any(not any(run in v for v in vs) for run in pending_runs):
-                return empty()
-        else:
-            if not all(_distributed_var_contains(var_dict, pending_runs, ignore_case)):
-                return empty()
-
-    if ignore_case:
-        cand = [
-            lid
-            for lid, lt in lt_rows
-            if patterns_intersect(q.lower(), _template_to_pattern(lt).lower())
-        ]
-    else:
-        cand = candidate_logtype_ids(lt_rows, query)
-    if not cand:
-        return empty()
-    if len(cand) < len(lt_rows):
+    if len(cand) < len(templates.rows):
         filtered = filtered.filter(F.col("logtype_id").isin(cand))
+    if needles:
+        keep = var_sequence_filter(needles)
+        if exempt:
+            keep = keep | F.col("logtype_id").isin(exempt)
+        filtered = filtered.filter(keep)
 
-    if prune_vars and not ignore_case:
-        slots = query_var_slots(query)
-        dict_toks = [tok for tok, enc in slots if enc is None]
-        if dict_toks:
-            if vd_rows is not None:
-                by_val: dict[str, list[int]] = {}
-                for vid, vs_ in vd_rows:
-                    by_val.setdefault(vs_, []).append(vid)
-                ids = {t: by_val.get(t, []) for t in dict_toks}
-            else:
-                ids = _distributed_var_ids(var_dict, dict_toks)
-        else:
-            ids = {}
-        needles = [[enc] if enc is not None else ids[tok] for tok, enc in slots]
-        if any(len(s) == 0 for s in needles):
-            return empty()
-        if needles:
-            filtered = filtered.filter(var_sequence_filter(needles))
-
-    # Decode strategy: when the var dictionary is collectible (CLP's own
-    # in-memory-dictionaries assumption for decompression), use the
-    # shuffle-free broadcast-dictmap decode; otherwise the join-based one.
-    if vd_rows is not None:
-        from .pipeline import decode_messages_dictmap
-
-        decoded = decode_messages_dictmap(
-            spark, filtered, lt_rows, vd_rows, key_cols=key_cols
-        )
-    else:
-        decoded = decode_messages(filtered, logtype_dict, var_dict, key_cols=key_cols)
-    rx = wildcard_to_regex(q)
+    rx = wildcard_to_regex(normalize_query(query))
     if ignore_case:
         rx = "(?i)" + rx
-    return decoded.filter(F.col("text").rlike(rx))
+    return decode(filtered, logtype_dict, var_dict, rows, key_cols).filter(F.col("text").rlike(rx))
 
 
 def search_count(messages, logtype_dict, var_dict, query: str, **kw) -> DataFrame:
@@ -502,7 +488,10 @@ def write_search_results(
 
     `matches` from search() already carries ts; `messages` is only consulted
     (shuffle re-join) for legacy match sets without a ts column."""
-    import shutil as _sh
+    import contextlib
+    import os
+
+    from .ingest import _commit
 
     if "ts" in matches.columns:
         with_ts = matches
@@ -522,12 +511,12 @@ def write_search_results(
             "text",
         )
     )
-    staging = path + ".staging"
-    _sh.rmtree(staging, ignore_errors=True)
-    top.coalesce(1).write.mode("overwrite").parquet(staging)
-    _sh.rmtree(path, ignore_errors=True)
-    import os as _os
-
-    _os.replace(staging, path)
-    spark = matches.sparkSession
-    return spark.read.parquet(path).count()
+    path = os.path.abspath(path)
+    out_dir = os.path.dirname(path)
+    _commit(
+        lambda staging: top.coalesce(1).write.mode("overwrite").parquet(staging),
+        out_dir, os.path.basename(path),
+    )
+    with contextlib.suppress(OSError):  # leave only the results beside them
+        os.rmdir(os.path.join(out_dir, "_staging"))
+    return matches.sparkSession.read.parquet(path).count()

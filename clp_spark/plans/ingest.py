@@ -519,13 +519,10 @@ def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
     when the var dictionary is collectible (the reference decompressor's
     model: dictionaries load fully before reading segments), else the
     broadcast-join decode."""
-    from .grep import _TOO_BIG, dict_rows
+    from .grep import decode, dict_rows
 
     msgs, lt, vd = open_archive(spark, out_dir)
-    lt_rows, vd_rows = dict_rows(lt, vd)
-    if vd_rows is not _TOO_BIG:
-        return P.decode_messages_dictmap(spark, msgs, lt_rows, vd_rows)
-    return P.decode_messages(msgs, lt, vd)
+    return decode(msgs, lt, vd, dict_rows(lt, vd))
 
 
 # perfbench's cache counters wrap this instance's get_or_load

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the CLP-style pipeline.
 
-Local defaults mirror the sandbox (local[32], 32 shuffle partitions) but every
-knob is cluster-safe: on a real multi-executor cluster only `master` changes.
+Local defaults: local[N] and N shuffle partitions, N = SPARK_GRAFT_CPUS or
+else the cores this process may run on. Every knob is cluster-safe: on a real
+multi-executor cluster only `master` changes.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ def get_spark(
     app_name: str = "clp-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

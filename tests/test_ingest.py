@@ -183,20 +183,20 @@ def test_derived_metrics_match_sinks(spark, archive, tmp_path):
 
 
 def test_sinks_invariant_to_input_partitioning(spark, tmp_path):
-    """The same input read as 1 and as 4 partitions gives identical row sets
-    in all seven sinks. lineage.n_files counts the files each bucket was
-    written as, which follows the task layout, so it is left out."""
+    """The same input read as 1, 4 and 32 partitions gives identical row
+    sets in all seven sinks. lineage.n_files counts the files each bucket
+    was written as, which follows the task layout, so it is left out."""
     t = load_transcripts(spark, SF_DIR)
     outs = []
-    for n, df in ((1, t.coalesce(1)), (4, t.repartition(4))):
+    for n, df in ((1, t.coalesce(1)), (4, t.repartition(4)), (32, t.repartition(32))):
         assert df.rdd.getNumPartitions() == n
         out = str(tmp_path / f"p{n}")
         I.ingest(spark, df, out, dim_role=dim_role(spark), dim_tool=dim_tool(spark))
         outs.append(out)
     for sink in I.STEPS:
         drop = ("n_files",) if sink == "lineage" else ()
-        a, b = (_row_set(spark, out, sink, drop) for out in outs)
-        assert a == b and a, sink
+        first, *rest = (_row_set(spark, out, sink, drop) for out in outs)
+        assert first and all(r == first for r in rest), sink
 
 
 def test_crash_leaves_no_partial_sink(spark, tmp_path):

@@ -5,6 +5,7 @@ pruning on the routed sink, and salting's skew-spread."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -129,6 +130,7 @@ def test_results_cache_latest_n(spark, tmp_path):
     path = str(tmp_path / "results")
     n = G.write_search_results(matches, msgs, path, max_num_results=10)
     assert n == 10
+    assert os.listdir(tmp_path) == ["results"]  # no staging left beside it
     rows = spark.read.parquet(path).collect()
     # the cached rows are exactly the 10 LATEST matches (search() carries ts
     # through decode, so no re-join against the message store is needed)
@@ -171,14 +173,14 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
 
     expect = {
         (r["conv_id"], r["turn_idx"])
-        for r in G.search(msgs, lt, vd, "used 123 of ", prune_vars=True).collect()
+        for r in G.search(msgs, lt, vd, "used 123 of ").collect()
     }
     assert expect  # the query matches something at this sf
 
     DRIVER_VALUES.clear()
     monkeypatch.setattr(G, "DICT_BROADCAST_LIMIT", 2)  # force the too-big path
     try:
-        got_df = G.search(msgs, lt, vd, "used 123 of ", prune_vars=True)
+        got_df = G.search(msgs, lt, vd, "used 123 of ")
         # var-sequence prune must still be present in the plan (not disabled)
         assert "aggregate(encoded_vars" in plan_of(got_df)
         got = {(r["conv_id"], r["turn_idx"]) for r in got_df.collect()}
@@ -190,6 +192,88 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
     finally:
         DRIVER_VALUES.clear()
     parsed.unpersist()
+
+
+@pytest.fixture(scope="module")
+def encoded(spark):
+    """sf0.001 parsed once: (messages, logtype_dict, var_dict)."""
+    parsed = P.parse_encode(load_transcripts(spark, SF_DIR)).persist()
+    yield P.encoded_messages(parsed), P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    parsed.unpersist()
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs submitted while it ran)."""
+    sc = spark.sparkContext
+    group = "jobs-during"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_exits_without_a_job_on_unknown_dict_var(spark, encoded):
+    """A query whose dictionary-variable token is no var_dict value cannot
+    match: with the dictionaries loaded, search() returns an empty result
+    and submits no Spark job, neither to plan nor to collect it. The token
+    is a prefix of a real variable, so WontMatch alone would not rule it
+    out — the var-id lookup does."""
+    from clp_spark.plans import grep as G
+
+    msgs, lt, vd = encoded
+    templates, index = G.dict_rows(lt, vd)
+    tok = next(
+        v[:-1] for v in sorted(index.ids)
+        if v[:-1] not in index.ids and G.query_var_slots(f" {v[:-1]} ") == [(v[:-1], None)]
+    )
+    query = f" {tok} "
+    assert not G.query_wont_match(query, [t for _, t in templates.rows], [index.text])
+    got, jobs = _jobs_during(spark, lambda: G.search(msgs, lt, vd, query).collect())
+    assert got == [] and jobs == 0
+
+
+def test_too_big_dictionary_planned_with_one_scan(spark, encoded, monkeypatch):
+    """Above DICT_BROADCAST_LIMIT the planner's var lookup answers both of
+    its questions (does some variable contain this run, which ids hold this
+    token) with ONE distributed dictionary scan per query, and the matches
+    equal the collected-dictionary path's."""
+    from clp_spark.caching import DRIVER_VALUES
+    from clp_spark.plans import grep as G
+    from perfbench.tracing import SqlMetrics, within
+
+    msgs, lt, vd = encoded
+    lt_index, index = G.dict_rows(lt, vd)
+    templates = [t for _, t in lt_index.rows]
+    words = {  # space-delimited on both sides
+        w for r in load_transcripts(spark, SF_DIR).select("text").limit(500).collect()
+        for w in (r["text"] or "").split(" ")[1:-1]
+    }
+    var = next(
+        v for v in sorted(words & set(index.ids))
+        if G.query_var_slots(f" {v} ") == [(v, None)] and not any(v in t for t in templates)
+    )
+    query = f" {var} "
+
+    def keys(df):
+        return {(r["conv_id"], r["turn_idx"]) for r in df.collect()}
+
+    expect = keys(G.search(msgs, lt, vd, query))
+    assert expect
+    DRIVER_VALUES.clear()
+    monkeypatch.setattr(G, "DICT_BROADCAST_LIMIT", 2)
+    try:
+        assert G.dict_rows(lt, vd)[1] is G._TOO_BIG
+        sql = SqlMetrics(spark)
+        span = {"start": time.time()}
+        got_df = G.search(msgs, lt, vd, query)
+        span["end"] = time.time()
+        assert len(within(sql.collect(), span)) == 1  # one SQL execution
+        assert "aggregate(encoded_vars" in plan_of(got_df)
+        assert keys(got_df) == expect
+    finally:
+        DRIVER_VALUES.clear()
 
 
 def test_tar_scan_roundtrip(spark, tmp_path):
