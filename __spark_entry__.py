@@ -119,30 +119,27 @@ def q_count_by_time(spark, sf_dir):
 
 
 def q_roundtrip_mismatches(spark, sf_dir):
-    """Byte-exact round-trip over the whole corpus via the FAST decode path
-    (dictmap: broadcast dictionaries + one Arrow render pass — the
-    reference decompressor's model). The join-based decode_messages stays
-    exercised by pytest (tests/test_plans.py) — coverage belongs there, not
-    in the headline query."""
-    from clp_spark.plans.grep import _TOO_BIG, dict_rows
+    """Byte-exact round-trip over the whole corpus. With collectible
+    dictionaries the compare is FOLDED INTO the decode's batch render: only
+    (text, logtype_id, encoded_vars) crosses the Arrow bridge inward and one
+    int64 per partition crosses back — no key/ts columns, no decoded
+    strings shipped (the decode was measured AT the bridge floor, so fewer
+    bytes is the only remaining lever). Same single narrow scan, no join
+    (the reference round-trip verify streams both sides in order). Above
+    the collect limit the decode's own output joins the input."""
+    from clp_spark.plans.grep import _TOO_BIG, decode, dict_rows
 
     t = load_transcripts(spark, sf_dir)
     parsed = persist(P.parse_encode(t))
     lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
-    templates, var_index = dict_rows(lt, vd)  # session-cached collected dictionaries
-    if var_index is _TOO_BIG:  # dictionaries beyond broadcast: join decode
-        msgs = P.encoded_messages(parsed)
-        dec = P.decode_messages(msgs, lt, vd).withColumnRenamed("text", "dec_text")
-        mism = dec.join(
+    rows = dict_rows(lt, vd)  # session-cached collected dictionaries
+    templates, var_index = rows
+    if var_index is _TOO_BIG:
+        dec = decode(P.encoded_messages(parsed), lt, vd, rows)
+        mism = dec.withColumnRenamed("text", "dec_text").join(
             t.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"]
         ).filter("dec_text != text")
         return mism.agg(F.count("*").alias("mismatches"))
-    # The compare is FOLDED INTO the decode pass (VERDICT r3 item 9): only
-    # (text, logtype_id, encoded_vars) crosses the Arrow bridge inward and
-    # one int64 per partition crosses back — no key/ts columns, no decoded
-    # strings shipped (the decode was measured AT the bridge floor, so
-    # fewer bytes is the only remaining lever). Same single narrow scan,
-    # no join (the reference round-trip verify streams both sides in order).
     msgs = parsed.select("text", "logtype_id", "encoded_vars")
     return P.roundtrip_mismatch_count(spark, msgs, templates.rows, var_index.rows)
 
@@ -343,9 +340,7 @@ def q_json_clpstring_roundtrip(spark, sf_dir):
     from clp_spark.plans.semistructured import decode_json_strings
 
     store, encoded, lt, vd = _json_string_encoded(spark, sf_dir)
-    lt_rows = [(r["logtype_id"], r["logtype"]) for r in lt.collect()]
-    vd_rows = [(r["var_id"], r["var_str"]) for r in vd.collect()]
-    dec = decode_json_strings(spark, encoded, lt_rows, vd_rows)
+    dec = decode_json_strings(encoded, lt, vd)
     joined = dec.join(store, ["event_id", "path"]).filter("text != value")
     return joined.agg(F.count("*").alias("mismatches"))
 

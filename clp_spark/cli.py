@@ -27,17 +27,26 @@ import sys
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="clp_spark.cli", description=__doc__)
+    common = argparse.ArgumentParser(add_help=False)
+    common.add_argument("--master", default=None, help="override spark master")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    c = sub.add_parser("compress", help="ingest transcripts into an archive (clp c)")
-    c.add_argument("--input", required=True)
-    c.add_argument("--out", required=True)
-    c.add_argument("--synthesize-transcripts", action="store_true")
+    def add(name, help):
+        return sub.add_parser(name, help=help, parents=[common])
+
+    c = add("compress", "ingest transcripts into an archive (clp c)")
+    c.add_argument("--input", required=True, help="input table path (parquet dir)")
+    c.add_argument("--out", required=True, help="archive output directory")
+    c.add_argument(
+        "--synthesize-transcripts", action="store_true",
+        help="treat --input as an events table and synthesize the transcript "
+        "corpus from it (sandbox test mode)",
+    )
     c.add_argument("--n-buckets", type=int, default=16)
     c.add_argument("--no-resume", action="store_true")
     c.add_argument("--no-enrich", action="store_true")
 
-    s = sub.add_parser("search", help="wildcard search over archives (clg)")
+    s = add("search", "wildcard search over archives (clg)")
     s.add_argument("archives", nargs="+")
     s.add_argument("query")
     s.add_argument("--ignore-case", action="store_true")
@@ -52,12 +61,12 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--limit", type=int, default=None)
     s.add_argument("--raw", action="store_true", help="emit bare text lines")
 
-    x = sub.add_parser("extract", help="decompress an archive back to text (clp x)")
+    x = add("extract", "decompress an archive back to text (clp x)")
     x.add_argument("archive")
     x.add_argument("--raw", action="store_true")
     x.add_argument("--limit", type=int, default=None)
 
-    cj = sub.add_parser("compress-json", help="ingest JSON into a clp_s-style archive")
+    cj = add("compress-json", "ingest JSON into a clp_s-style archive")
     cj.add_argument("--input", required=True,
                     help="parquet with a JSON string column, or NDJSON text path")
     cj.add_argument("--out", required=True)
@@ -67,12 +76,10 @@ def build_parser() -> argparse.ArgumentParser:
     cj.add_argument("--id-col", default="event_id")
     cj.add_argument("--n-buckets", type=int, default=16)
 
-    sk = sub.add_parser("search-kql", help="KQL search over JSON archives (clp-s s)")
+    sk = add("search-kql", "KQL search over JSON archives (clp-s s)")
     sk.add_argument("archives", nargs="+")
     sk.add_argument("query")
     sk.add_argument("--limit", type=int, default=None)
-
-    p.add_argument("--master", default=None)
     return p
 
 
@@ -107,14 +114,22 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         spark = get_spark(master=args.master, app_name=f"clp-spark-{args.cmd}")
 
     if args.cmd == "compress":
-        from clp_spark import job
+        import os
 
-        jargv = ["--input", args.input, "--out", args.out,
-                 "--n-buckets", str(args.n_buckets)]
-        for flag in ("synthesize_transcripts", "no_resume", "no_enrich"):
-            if getattr(args, flag):
-                jargv.append("--" + flag.replace("_", "-"))
-        return job.main(jargv)
+        from clp_spark.plans.ingest import ingest
+        from clp_spark.sources.transcripts import dim_role, dim_tool, load_transcripts
+
+        if args.synthesize_transcripts:
+            transcripts = load_transcripts(spark, os.path.dirname(args.input.rstrip("/")))
+        else:
+            transcripts = spark.read.parquet(args.input)
+        dims = {} if args.no_enrich else {"dim_role": dim_role(spark), "dim_tool": dim_tool(spark)}
+        manifest = ingest(
+            spark, transcripts, args.out,
+            n_buckets=args.n_buckets, resume=not args.no_resume, **dims,
+        )
+        print(json.dumps(manifest["metrics"]), file=out)
+        return 0
 
     if args.cmd == "search":
         from clp_spark.plans.ingest import search_archives

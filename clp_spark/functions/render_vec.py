@@ -8,6 +8,9 @@ numpy/Arrow column op (int format, custom-float decode, dictionary gather),
 and assembles the final strings with ONE Arrow varargs concat kernel
 (`binary_join_element_wise`) per template group — no per-row Python loop
 anywhere on the hot decode path (every search confirm, every round-trip).
+`render_arrow` is the one batch render every decode calls: dictionary
+slots resolve through a DictLookup, the broadcast one or, above the
+collect limit, one built from the batch's own joined strings.
 
 Semantics re-derived from the reference decompressor (NOT ported code):
 clp/EncodedVariableInterpreter.hpp:480-556 decode_variables_into_message and
@@ -82,6 +85,18 @@ class DictLookup:
         self.vals = [p[1] for p in pairs]
         self._pa_vals = None  # built lazily executor-side (not picklable cheaply)
 
+    @classmethod
+    def from_arrays(cls, ids: np.ndarray, vals):
+        """Lookup over parallel int64 ids and a pa.StringArray, sorted by
+        one argsort; an id may repeat (one variable in many slots)."""
+        import pyarrow as pa
+
+        order = np.argsort(ids, kind="stable")
+        self = cls.__new__(cls)
+        self.ids, self.vals = ids[order], None
+        self._pa_vals = vals.take(pa.array(order))
+        return self
+
     def take_arrow(self, q: np.ndarray):
         """q (int64 ids) -> pa.StringArray of strings, missing -> ""."""
         import pyarrow as pa
@@ -118,17 +133,13 @@ def render_groups(
     ev_offsets: np.ndarray,
     ev_values: np.ndarray,
     templates: TemplateTable,
-    vd: DictLookup | None = None,
-    dv_offsets: np.ndarray | None = None,
-    dv_values: np.ndarray | None = None,
+    vd: DictLookup,
 ):
     """Render one batch -> pyarrow StringArray of decoded texts.
 
     lids: int64 row template ids; (ev_offsets, ev_values): the rows'
-    encoded_vars as flat list-offsets + values. With `vd` set, dict slots
-    resolve through the broadcast dictionary (dictmap decode); with
-    (dv_offsets, dv_values) set, dict slots take the row's own recovered
-    dict_vars strings in slot order (join-based decode).
+    encoded_vars as flat list-offsets + values; dict slots resolve through
+    the `vd` lookup.
 
     Everything stays Arrow/numpy: int slots use Arrow's C++ int64->string
     cast, float slots the grouped numpy decoder, dict slots an Arrow take;
@@ -158,10 +169,7 @@ def render_groups(
             )
             continue
         starts = ev_offsets[idx]
-        if dv_offsets is not None:
-            dstarts = dv_offsets[idx]
         args = []
-        di = 0
         for j, kind in enumerate(kinds):
             args.append(pa.scalar(segs[j]))
             col = ev_values[starts + j]
@@ -169,11 +177,8 @@ def render_groups(
                 s = pc.cast(pa.array(col), pa.string())
             elif kind == PLACEHOLDER_FLOAT:
                 s = pa.array(decode_float_vec(col), type=pa.string())
-            elif vd is not None:
-                s = vd.take_arrow(col)
             else:
-                s = pa.array(dv_values[dstarts + di], type=pa.string())
-                di += 1
+                s = vd.take_arrow(col)
             args.append(s)
         args.append(pa.scalar(segs[k]))
         parts.append(pc.binary_join_element_wise(*args, ""))
@@ -183,25 +188,19 @@ def render_groups(
     return pc.take(combined, pa.array(inv))
 
 
-def render_joined_batch(logtypes, ev_col, dv_col):
-    """Join-based decode render for one Arrow batch: rows carry their own
-    (logtype string, slot-ordered dict_vars, encoded_vars). Templates are
-    dictionary-encoded per batch (one C pass) so the group machinery above
-    applies unchanged; returns pa.StringArray of texts."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if isinstance(logtypes, pa.ChunkedArray):
-        logtypes = logtypes.combine_chunks()
-    d = pc.dictionary_encode(pc.fill_null(logtypes, ""))
-    codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    templates = TemplateTable(enumerate(d.dictionary.to_pylist()))
-    ev_offs, ev_vals = list_column_parts(ev_col)
-    dv_offs, dv_vals = list_column_parts(dv_col)
-    return render_groups(
-        codes, ev_offs[:-1], ev_vals, templates,
-        vd=None, dv_offsets=dv_offs[:-1], dv_values=dv_vals,
-    )
+def render_arrow(lid_col, ev_col, templates: TemplateTable, vd: DictLookup, strs_col=None):
+    """One Arrow batch's logtype_id and encoded_vars columns -> pa.StringArray
+    of texts. `strs_col`, when given, holds each row's strings per slot,
+    aligned with encoded_vars and null where the slot's value is no
+    dictionary id; dict slots then resolve through a lookup of the batch's
+    own (value, string) pairs instead of `vd`."""
+    lids = np.asarray(lid_col.to_numpy(zero_copy_only=False), dtype=np.int64)
+    offs, vals = list_column_parts(ev_col)
+    if strs_col is not None:
+        strs = strs_col.flatten()
+        hit = strs.is_valid()
+        vd = DictLookup.from_arrays(vals[hit.to_numpy(zero_copy_only=False)], strs.filter(hit))
+    return render_groups(lids, offs[:-1], vals, templates, vd=vd)
 
 
 def list_column_parts(arr):

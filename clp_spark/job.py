@@ -17,61 +17,14 @@ the manifest checkpoint (see clp_spark/plans/ingest.py).
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
 
 
-def build_parser() -> argparse.ArgumentParser:
-    p = argparse.ArgumentParser(prog="clp_spark.job", description=__doc__)
-    p.add_argument("--input", required=True, help="input table path (parquet dir)")
-    p.add_argument("--out", required=True, help="archive output directory")
-    p.add_argument(
-        "--synthesize-transcripts",
-        action="store_true",
-        help="treat --input as an events table and synthesize the transcript "
-        "corpus from it (sandbox test mode)",
-    )
-    p.add_argument("--n-buckets", type=int, default=16)
-    p.add_argument("--no-resume", action="store_true")
-    p.add_argument("--no-enrich", action="store_true")
-    p.add_argument("--master", default=None, help="override spark master")
-    return p
-
-
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    """`cli compress` with these arguments: the flags are cli's."""
+    from clp_spark import cli
 
-    from clp_spark.plans.ingest import ingest
-    from clp_spark.session import get_spark
-    from clp_spark.sources.transcripts import dim_role, dim_tool
-
-    spark = get_spark(master=args.master, app_name="clp-spark-ingest")
-
-    if args.synthesize_transcripts:
-        import os
-
-        from clp_spark.sources.transcripts import load_transcripts
-
-        sf_dir = os.path.dirname(args.input.rstrip("/"))
-        transcripts = load_transcripts(spark, sf_dir)
-    else:
-        transcripts = spark.read.parquet(args.input)
-
-    kwargs = {}
-    if not args.no_enrich:
-        kwargs = {"dim_role": dim_role(spark), "dim_tool": dim_tool(spark)}
-
-    manifest = ingest(
-        spark,
-        transcripts,
-        args.out,
-        n_buckets=args.n_buckets,
-        resume=not args.no_resume,
-        **kwargs,
-    )
-    print(json.dumps(manifest["metrics"]))
-    return 0
+    return cli.main(["compress", *(sys.argv[1:] if argv is None else argv)])
 
 
 if __name__ == "__main__":

@@ -35,18 +35,25 @@ from itertools import groupby
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..caching import DRIVER_VALUES, plan_key
-from ..functions.tokenizer import PLACEHOLDER_DICT, PLACEHOLDER_FLOAT, PLACEHOLDER_INT
+from ..functions.tokenizer import (
+    PLACEHOLDER_DICT,
+    PLACEHOLDER_FLOAT,
+    PLACEHOLDER_INT,
+    _template_parts,
+)
 from ..functions.wildcard import clean_up_wildcard_search_string, wildcard_to_regex
 from . import pipeline as P
 
 _PLACEHOLDERS = (PLACEHOLDER_INT, PLACEHOLDER_DICT, PLACEHOLDER_FLOAT)
 
-# Max var-dict entries to ship to executors as an in-memory map for the
-# shuffle-free decode (the reference decompressor's working assumption —
-# it loads var.dict fully into RAM). Above this, decode falls back to
-# broadcast joins.
+# Max var-dict entries to collect and ship to executors in the decode's
+# broadcast (the reference decompressor's working assumption — it loads
+# var.dict fully into RAM). Above this, decode joins each row's slots with
+# the var dictionary instead, and search scans the dictionary for its var
+# lookups.
 DICT_BROADCAST_LIMIT = 1_000_000
 
 
@@ -141,13 +148,20 @@ def normalize_query(query: str) -> str:
 
 def candidate_logtype_ids(logtype_rows, query: str, ignore_case: bool = False) -> list[int]:
     """Driver-side dictionary prune: rows = [(logtype_id, logtype), ...].
-    Under ignore_case both patterns compare lowercased."""
+    Under ignore_case both patterns compare lowercased. A template with an
+    (unescaped) placeholder is a candidate for every query without the DP:
+    normalize_query's result is always `*...*`, so the query's match can
+    sit inside that variable."""
 
     def fold(s: str) -> str:
         return s.lower() if ignore_case else s
 
     q = fold(normalize_query(query))
-    return [lid for lid, lt in logtype_rows if patterns_intersect(q, fold(_template_to_pattern(lt)))]
+    return [
+        lid
+        for lid, lt in logtype_rows
+        if _template_parts(lt)[1] or patterns_intersect(q, fold(_template_to_pattern(lt)))
+    ]
 
 
 def query_var_slots(query: str) -> list[tuple[str, int | None]]:
@@ -385,15 +399,71 @@ def decode(
     rows,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
 ) -> DataFrame:
-    """Encoded messages -> (*key_cols, ts?, text), given dict_rows' `rows`.
-    When the var dictionary is collectible (CLP's own
-    in-memory-dictionaries assumption for decompression) this is the
-    shuffle-free dictmap decode, otherwise the broadcast-join decode."""
+    """Encoded messages -> (*key_cols, ts?, text), given dict_rows' `rows`:
+    the one decode. Templates travel in one broadcast and every batch
+    renders in one Arrow pass (render_vec.render_arrow), the reference
+    decompressor's model: dictionaries load before segments are read
+    (clp/streaming_archive/reader/Archive.cpp:163-195). A collectible var
+    dictionary rides the same broadcast, and the plan is a select and one
+    mapInArrow with no Exchange. Above DICT_BROADCAST_LIMIT each row brings
+    its own dictionary strings (_slot_strings)."""
     templates, var_index = rows
+    spark = messages.sparkSession
+    has_ts = "ts" in messages.columns and "ts" not in key_cols
+    passthrough = list(key_cols) + (["ts"] if has_ts else [])
     if var_index is _TOO_BIG:
-        return P.decode_messages(messages, logtype_dict, var_dict, key_cols=key_cols)
-    return P.decode_messages_dictmap(
-        messages.sparkSession, messages, templates.rows, var_index.rows, key_cols=key_cols
+        bc = P._dict_broadcast(spark, templates.rows, ())
+        framed = _slot_strings(messages, var_dict, passthrough)
+    else:
+        bc = P._dict_broadcast(spark, templates.rows, var_index.rows)
+        framed = messages.select(*passthrough, "logtype_id", "encoded_vars")
+    n = len(passthrough)
+    names = passthrough + ["text"]
+
+    def render(batches):
+        import pyarrow as pa
+
+        from clp_spark.functions.render_vec import render_arrow
+
+        table, vd = bc.value
+        for b in batches:
+            strs = b.column(n + 2) if b.num_columns > n + 2 else None
+            texts = render_arrow(b.column(n), b.column(n + 1), table, vd, strs)
+            yield pa.RecordBatch.from_arrays([b.column(i) for i in range(n)] + [texts], names)
+
+    schema = StructType([framed.schema[c] for c in passthrough] + [StructField("text", StringType())])
+    return framed.mapInArrow(render, schema=schema)
+
+
+def _slot_strings(messages: DataFrame, var_dict: DataFrame, passthrough: list[str]) -> DataFrame:
+    """(*passthrough, logtype_id, encoded_vars, slot_strs) for a var
+    dictionary too big to collect: one posexplode of each row's slots that
+    carries only a row id, the passthrough columns, logtype_id, the slot's
+    position and value; one join of the values with the var dictionary;
+    one regroup per row that rebuilds encoded_vars in slot order beside
+    the joined strings (null where a value is no dictionary id). Every
+    exploded row is a few columns wide, so the work is linear in the row's
+    size. The regroup key is a surrogate row id, not the key columns:
+    callers may union rows that share a key (one input ingested into two
+    archives)."""
+    vd = var_dict.select(F.col("var_id").alias("_value"), "var_str")
+    slot = F.when(F.col("_pos").isNotNull(), F.struct("_pos", "_value", "var_str"))
+    regrouped = (
+        messages.withColumn("_row_id", F.monotonically_increasing_id())
+        .select(
+            "_row_id", *passthrough, "logtype_id",
+            F.posexplode_outer("encoded_vars").alias("_pos", "_value"),
+        )
+        .join(vd, "_value", "left")
+        .groupBy("_row_id")
+        .agg(
+            *[F.first(c).alias(c) for c in passthrough + ["logtype_id"]],
+            F.array_sort(F.collect_list(slot)).alias("_slots"),
+        )
+    )
+    return regrouped.select(
+        *passthrough, "logtype_id",
+        F.col("_slots._value").alias("encoded_vars"), F.col("_slots.var_str").alias("slot_strs"),
     )
 
 

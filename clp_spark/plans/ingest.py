@@ -515,10 +515,10 @@ def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
     """Round-trip decode of an ingested archive back to original text
     (reference FileDecompressor / JsonConstructor analog) ->
     (conv_id, turn_idx, text); stable (conv_id, turn_idx) ordering restored
-    by the caller's sort. Uses the shuffle-free in-memory-dictionary decode
-    when the var dictionary is collectible (the reference decompressor's
-    model: dictionaries load fully before reading segments), else the
-    broadcast-join decode."""
+    by the caller's sort. One decode (grep.decode): shuffle-free when the
+    var dictionary is collectible (the reference decompressor's model:
+    dictionaries load fully before reading segments), else with one join
+    of each row's slots against the var dictionary."""
     from .grep import decode, dict_rows
 
     msgs, lt, vd = open_archive(spark, out_dir)

@@ -11,6 +11,11 @@ Archive.cpp:299-316 write_msg -> EncodedVariableInterpreter.hpp:317-336):
              written partition-local (no shuffle; plans/ingest.py)
       parsed --groupBy--> per-logtype / per-tool / per-conversation counts
 
+The way back is plans/grep.decode, the one decode: templates (and a
+collectible var dictionary) travel in one broadcast (_dict_broadcast) and
+every batch renders through render_vec.render_arrow, the same batch render
+roundtrip_mismatch_count folds its compare into.
+
 Design-for-scale notes:
   * dictionary IDs are content hashes (functions/hash64.py, computed inside
     the parse UDF over the flat byte buffers), not first-seen dense ids —
@@ -145,11 +150,6 @@ def var_kinds(logtype: str | None) -> list[int]:
     return [ord(k) for k in _template_parts(logtype or "")[1]]
 
 
-@F.pandas_udf(ArrayType(IntegerType()))
-def _var_kinds_udf(logtypes: pd.Series) -> pd.Series:
-    return logtypes.map(var_kinds)
-
-
 def build_logtype_dict(parsed: DataFrame) -> DataFrame:
     """Logtype dictionary: (logtype_id, logtype, var_kinds, n_messages).
 
@@ -159,12 +159,12 @@ def build_logtype_dict(parsed: DataFrame) -> DataFrame:
     LogTypeDictionaryEntry::get_placeholder_info) lets the message store
     drop its per-row dict_var_ids column: dict ids are recoverable from
     encoded_vars + the template, exactly like the reference's ragged layout.
-    The udf runs over dictionary ENTRIES (tiny), not rows.
+    The kinds are the parse's own `var_types`, which every parsed frame
+    carries equal to the template's placeholders, so the whole build is one
+    JVM aggregate.
     """
-    return (
-        parsed.groupBy("logtype_id", "logtype")
-        .agg(F.count("*").alias("n_messages"))
-        .withColumn("var_kinds", _var_kinds_udf("logtype"))
+    return parsed.groupBy("logtype_id", "logtype").agg(
+        F.count("*").alias("n_messages"), F.first("var_types").alias("var_kinds")
     )
 
 
@@ -203,101 +203,6 @@ def encoded_messages(parsed: DataFrame) -> DataFrame:
     return parsed.select(
         "conv_id", "turn_idx", "ts", "role", "tool", "logtype_id", "encoded_vars",
     )
-
-
-def decode_messages(
-    messages: DataFrame,
-    logtype_dict: DataFrame,
-    var_dict: DataFrame,
-    *,
-    broadcast_dicts: bool = True,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """Decode join: messages ⋈ logtype_dict ⋈ var_dict -> original text.
-
-    Analog of reference decode_variables_into_message
-    (clp/EncodedVariableInterpreter.hpp:480-556). Dict-var strings are
-    recovered by exploding dict_var_ids with position, joining the var
-    dictionary, and re-collecting in slot order; the final render is one
-    Arrow-batched UDF.
-    """
-    if "var_kinds" in logtype_dict.columns:
-        lt = logtype_dict.select("logtype_id", "logtype", "var_kinds")
-    else:  # dictionary from an older layout: derive kinds from the template
-        lt = logtype_dict.select(
-            "logtype_id", "logtype", _var_kinds_udf("logtype").alias("var_kinds")
-        )
-    vd = var_dict.select("var_id", "var_str")
-    if broadcast_dicts:
-        lt, vd = F.broadcast(lt), F.broadcast(vd)
-
-    with_lt = messages.join(lt, "logtype_id", "left")
-    if "dict_var_ids" not in with_lt.columns:
-        # recover the dict-id subsequence from the template's placeholder
-        # kinds (reference ragged-array semantics; VT_DICT = 0x12 = 18)
-        with_lt = with_lt.withColumn(
-            "dict_var_ids",
-            F.expr(
-                "transform(filter(arrays_zip(encoded_vars, var_kinds),"
-                " p -> p.var_kinds = 18), p -> p.encoded_vars)"
-            ),
-        )
-
-    # Recover slot-ordered dict var strings in ONE branch: posexplode_outer
-    # keeps rows with no dict vars (pos=null), and the CASE inside
-    # collect_list drops those null markers — no union, so the messages
-    # input is scanned exactly once (a union would recompute an un-cached
-    # upstream parse twice). The regroup key is a per-row surrogate id, not
-    # (conv_id, turn_idx): callers without the key-uniqueness invariant
-    # (e.g. the same rows ingested into two archives then unioned) must not
-    # silently collapse rows / interleave two rows' pos lists.
-    has_ts = "ts" in messages.columns and "ts" not in key_cols
-    passthrough = list(key_cols) + (["ts"] if has_ts else [])
-    combined = (
-        with_lt.withColumn("_row_id", F.monotonically_increasing_id())
-        .select(
-            "_row_id", *passthrough, "logtype", "encoded_vars",
-            F.posexplode_outer("dict_var_ids").alias("pos", "var_id"),
-        )
-        .join(vd, "var_id", "left")
-        .groupBy("_row_id")
-        .agg(
-            *[F.first(c).alias(c) for c in passthrough],
-            F.first("logtype").alias("logtype"),
-            F.first("encoded_vars").alias("encoded_vars"),
-            F.expr(
-                "transform(array_sort(collect_list("
-                "CASE WHEN pos IS NOT NULL THEN struct(pos, var_str) END"
-                ")), s -> s.var_str)"
-            ).alias("dict_vars"),
-        )
-    )
-
-    # ts rides through the render (it is needed by every downstream
-    # count-by-time / latest-N handler; re-joining the message store to
-    # recover it would be a full shuffle join).
-    render_schema = StructType(
-        [messages.schema[c] for c in passthrough] + [StructField("text", StringType())]
-    )
-    out_names = passthrough + ["text"]
-    comb_names = combined.columns
-    pass_idx = [comb_names.index(c) for c in passthrough]
-    i_lt, i_ev, i_dv = (
-        comb_names.index(c) for c in ("logtype", "encoded_vars", "dict_vars")
-    )
-
-    def render(batches):
-        import pyarrow as pa
-
-        from clp_spark.functions.render_vec import render_joined_batch
-
-        for b in batches:
-            texts = render_joined_batch(b.column(i_lt), b.column(i_ev), b.column(i_dv))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(i) for i in pass_idx] + [texts], out_names
-            )
-
-    return combined.mapInArrow(render, schema=render_schema)
 
 
 def per_logtype_counts(parsed: DataFrame) -> DataFrame:
@@ -388,61 +293,6 @@ def _dict_broadcast(spark, logtype_rows, var_rows):
     )
 
 
-def decode_messages_dictmap(
-    spark,
-    messages: DataFrame,
-    logtype_rows,
-    var_rows,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """Shuffle-free decode: dictionaries travel to executors as ONE Spark
-    broadcast (templates pre-split, var dictionary as sorted arrays) and the
-    render happens in one Arrow pass over the messages — no explode, no
-    join, no groupBy, and no per-row Python: the batch is grouped by
-    template, each variable slot renders as one numpy/Arrow column op, and
-    the final strings assemble with Arrow's varargs concat kernel
-    (functions/render_vec.py — the tokenizer_vec playbook in reverse).
-
-    This mirrors the reference decompressor exactly: it loads logtype.dict
-    and var.dict fully into memory before reading segments
-    (clp/streaming_archive/reader/Archive.cpp:163-195). Use when the
-    dictionaries fit in executor memory (CLP's own operating assumption);
-    otherwise use decode_messages (broadcast-join based).
-
-    logtype_rows: iterable of (logtype_id, logtype);
-    var_rows: iterable of (var_id, var_str).
-    """
-    bc = _dict_broadcast(spark, logtype_rows, var_rows)
-
-    has_ts = "ts" in messages.columns and "ts" not in key_cols
-    passthrough = list(key_cols) + (["ts"] if has_ts else [])
-    schema = StructType(
-        [messages.schema[c] for c in passthrough] + [StructField("text", StringType())]
-    )
-    names = passthrough + ["text"]
-    n_pass = len(passthrough)
-
-    def render(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from clp_spark.functions.render_vec import list_column_parts, render_groups
-
-        templates, vd = bc.value
-        for b in batches:
-            lids = np.asarray(
-                b.column(n_pass).to_numpy(zero_copy_only=False), dtype=np.int64
-            )
-            offs, vals = list_column_parts(b.column(n_pass + 1))
-            texts = render_groups(lids, offs[:-1], vals, templates, vd=vd)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(i) for i in range(n_pass)] + [texts], names
-            )
-
-    cols = passthrough + ["logtype_id", "encoded_vars"]
-    return messages.select(*cols).mapInArrow(render, schema=schema)
-
-
 def roundtrip_mismatch_count(
     spark,
     messages: DataFrame,
@@ -466,20 +316,15 @@ def roundtrip_mismatch_count(
     out_schema = StructType([StructField("mismatches", LongType())])
 
     def run(batches):
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from clp_spark.functions.render_vec import list_column_parts, render_groups
+        from clp_spark.functions.render_vec import render_arrow
 
         templates, vd = bc.value
         total = 0
         for b in batches:
-            lids = np.asarray(
-                b.column(1).to_numpy(zero_copy_only=False), dtype=np.int64
-            )
-            offs, vals = list_column_parts(b.column(2))
-            texts = render_groups(lids, offs[:-1], vals, templates, vd=vd)
+            texts = render_arrow(b.column(1), b.column(2), templates, vd)
             # null orig vs rendered text counts as a mismatch (fill True)
             neq = pc.fill_null(pc.invert(pc.equal(texts, b.column(0))), True)
             total += pc.sum(pc.cast(neq, pa.int64())).as_py() or 0

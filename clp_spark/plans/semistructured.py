@@ -428,20 +428,20 @@ def json_string_dicts(encoded: DataFrame):
 
 
 def decode_json_strings(
-    spark: SparkSession,
     encoded: DataFrame,
-    lt_rows,
-    vd_rows,
+    logtype_dict: DataFrame,
+    var_dict: DataFrame,
     id_col: str = "event_id",
 ) -> DataFrame:
-    """Round-trip decode: (id, path, text) — byte-exact against the store."""
-    from . import pipeline as P
+    """Round-trip decode: (id, path, text) — byte-exact against the store.
+    The message decode (grep.decode), keyed by (id, path)."""
+    from .grep import decode, dict_rows
 
-    return P.decode_messages_dictmap(
-        spark,
+    return decode(
         encoded.select(id_col, "path", "logtype_id", "encoded_vars"),
-        lt_rows,
-        vd_rows,
+        logtype_dict,
+        var_dict,
+        dict_rows(logtype_dict, var_dict),
         key_cols=(id_col, "path"),
     )
 

@@ -26,6 +26,26 @@ def archive(spark, tmp_path_factory):
     return out
 
 
+def test_cli_compress_sinks_equal_ingest(spark, archive, tmp_path):
+    """`compress` writes the seven sinks ingest() writes for the same input
+    (enrichment on, the default)."""
+    import os
+
+    from clp_spark.plans.ingest import STEPS, ingest
+    from clp_spark.sources.transcripts import dim_role, dim_tool, load_transcripts
+
+    out = str(tmp_path / "lib")
+    ingest(spark, load_transcripts(spark, SF_DIR), out,
+           dim_role=dim_role(spark), dim_tool=dim_tool(spark))
+
+    def rows(root, sink):
+        return sorted(repr(tuple(r)) for r in spark.read.parquet(os.path.join(root, sink)).collect())
+
+    assert len(STEPS) == 7
+    for sink in STEPS:
+        assert rows(archive, sink) == rows(out, sink), sink
+
+
 def _run(spark, argv):
     buf = io.StringIO()
     rc = cli.main(argv, spark=spark, out=buf)

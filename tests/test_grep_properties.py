@@ -7,10 +7,10 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import example, given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
-from clp_spark.functions.tokenizer import PLACEHOLDER_DICT, encode_text
+from clp_spark.functions.tokenizer import PLACEHOLDER_DICT, _template_parts, encode_text
 from clp_spark.functions.wildcard import wildcard_to_regex
 from clp_spark.plans.grep import (
     LogtypeIndex,
@@ -90,6 +90,37 @@ def test_candidate_pruning_is_sound(case, ignore_case):
     assert candidate_logtype_ids([(LID, logtype)], query, ignore_case) == [LID], (
         message, query, logtype,
     )
+
+
+# mostly static text: the tokenizer stores their 0x11-0x13 bytes (and
+# backslashes) escaped in the template
+CONSTANT_PIECES = st.sampled_from(
+    ["alpha", "Beta", " ", "\x00", "\x11", "\x12", "\x13", "*", "?", "\\", "a\\b"]
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(cases(), QUERIES, st.booleans())
+def test_templates_with_a_variable_are_candidates_for_any_query(case, query, ignore_case):
+    """A template with an unescaped placeholder is a candidate for every
+    query: the normalized query is `*...*`, so its match can sit inside
+    the variable."""
+    logtype = encode_text(case[0])[0]
+    assume(_template_parts(logtype)[1])
+    assert candidate_logtype_ids([(LID, logtype)], query, ignore_case) == [LID]
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(CONSTANT_PIECES, min_size=1, max_size=6).map("".join), QUERIES, st.booleans())
+@example("a\x12b", "alpha", False)
+def test_constant_templates_go_through_the_dp(message, query, ignore_case):
+    """A template without a variable, whose 0x11-0x13 bytes are escaped
+    literal text, is a candidate exactly when the query matches its text:
+    the escaped bytes do not count as placeholders."""
+    logtype = encode_text(message)[0]
+    assume(not _template_parts(logtype)[1])
+    got = candidate_logtype_ids([(LID, logtype)], query, ignore_case)
+    assert got == ([LID] if _matches(message, query, ignore_case) else []), (message, logtype)
 
 
 @settings(max_examples=1000, deadline=None)

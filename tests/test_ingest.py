@@ -67,6 +67,42 @@ def test_roundtrip_decode(spark, archive):
     assert joined.filter("dec_text != text").count() == 0
 
 
+def test_build_logtype_dict_equals_sink_without_python(spark, archive):
+    """build_logtype_dict takes var_kinds from the parse's var_types, one
+    JVM aggregate with no Python stage: on sf0.001 its rows equal ingest()'s
+    logtype_dict sink in all four columns. The grok parse and the JSON
+    string store carry var_types equal to their templates' placeholders."""
+    from clp_spark.functions.grok import DEFAULT_SCHEMA
+    from clp_spark.plans.semistructured import (
+        encode_json_strings,
+        infer_json_schema,
+        json_string_dicts,
+        json_string_store,
+        parse_json,
+    )
+    from clp_spark.sources.jsonlogs import load_jsonlogs
+
+    out, _ = archive
+    cols = ["logtype_id", "logtype", "n_messages", "var_kinds"]
+    t = load_transcripts(spark, SF_DIR)
+    built = P.build_logtype_dict(P.parse_encode(t))
+    plan = built._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan
+    sink = spark.read.parquet(os.path.join(out, "logtype_dict"))
+    assert sorted(map(tuple, built.select(*cols).collect())) == sorted(
+        map(tuple, sink.select(*cols).collect())
+    )
+
+    df = load_jsonlogs(spark, SF_DIR)
+    schema = infer_json_schema(spark, df, "json")
+    json_lt, _ = json_string_dicts(encode_json_strings(json_string_store(
+        parse_json(df, "json", schema), schema
+    )))
+    for lt in (P.build_logtype_dict(P.parse_encode_with_schema(t, DEFAULT_SCHEMA)), json_lt):
+        rows = lt.collect()
+        assert rows and all(r["var_kinds"] == P.var_kinds(r["logtype"]) for r in rows)
+
+
 COUNT_SINKS = ("counts_logtype", "counts_tool", "counts_conv", "lineage")
 
 

@@ -70,3 +70,23 @@ def test_window_holds_all_oracle_bearing_possible():
     oracles = E.oracle_sql()
     missing = [n for n in names[:WINDOW] if n not in oracles]
     assert missing == [], missing
+
+
+@pytest.mark.parametrize("limit", [None, 2])
+def test_roundtrip_queries_on_both_decode_sides(spark, monkeypatch, limit):
+    """The entry's two round-trip queries read 0 mismatches with collected
+    dictionaries and with DICT_BROADCAST_LIMIT forced to 2, where both go
+    through the decode's join side."""
+    import __spark_entry__ as E
+    from clp_spark.caching import DRIVER_VALUES
+    from clp_spark.plans import grep as G
+
+    if limit is not None:
+        monkeypatch.setattr(G, "DICT_BROADCAST_LIMIT", limit)
+    DRIVER_VALUES.clear()
+    try:
+        for name in ("roundtrip_mismatches", "json_clpstring_roundtrip"):
+            (row,) = E.queries()[name](spark, SF_DIR).collect()
+            assert row["mismatches"] == 0, name
+    finally:
+        DRIVER_VALUES.clear()

@@ -42,15 +42,32 @@ def test_enrich_uses_broadcast_joins(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_decode_joins_are_broadcast(spark):
+def _decode_sides(msgs, lt, vd):
+    """grep.decode of msgs with the collected dictionaries and with the
+    var dictionary treated as too big to collect."""
+    from clp_spark.plans import grep as G
+
+    rows = G.dict_rows(lt, vd)
+    return G.decode(msgs, lt, vd, rows), G.decode(msgs, lt, vd, (rows[0], G._TOO_BIG))
+
+
+def test_too_big_decode_joins_only_the_var_dict(spark):
+    """Above the collect limit the decode's one join is each slot value
+    against var_dict: no join on the logtype and no broadcast hint, so the
+    planner sizes the var dictionary's side itself."""
+    import re
+
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t)
-    dec = P.decode_messages(
+    _, dec = _decode_sides(
         P.encoded_messages(parsed), P.build_logtype_dict(parsed), P.build_var_dict(parsed)
     )
-    plan = plan_of(dec)
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "SortMergeJoin" not in plan
+    qe = dec._jdf.queryExecution()
+    assert "ResolvedHint" not in qe.analyzed().toString()
+    joins = [ln for ln in qe.optimizedPlan().toString().splitlines() if "Join " in ln]
+    assert len(joins) == 1, joins
+    # the slot value against var_id, which the decode renames to _value
+    assert re.search(r"Join LeftOuter, \(_value#\d+L = _value#\d+L\)$", joins[0]), joins
 
 
 @pytest.fixture(scope="module")
@@ -89,19 +106,9 @@ def test_dictmap_decode_equals_join_decode(spark):
     parsed = P.parse_encode(t).persist()
     msgs = P.encoded_messages(parsed)
     lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
-    join_dec = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in P.decode_messages(msgs, lt, vd).collect()
-    }
-    map_dec = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in P.decode_messages_dictmap(
-            spark,
-            msgs,
-            [(r["logtype_id"], r["logtype"]) for r in lt.collect()],
-            [(r["var_id"], r["var_str"]) for r in vd.collect()],
-        ).collect()
-    }
+    map_df, join_df = _decode_sides(msgs, lt, vd)
+    join_dec = {(r["conv_id"], r["turn_idx"]): r["text"] for r in join_df.collect()}
+    map_dec = {(r["conv_id"], r["turn_idx"]): r["text"] for r in map_df.collect()}
     parsed.unpersist()
     assert map_dec == join_dec
     # and both equal the original text
@@ -110,11 +117,14 @@ def test_dictmap_decode_equals_join_decode(spark):
 
 
 def test_dictmap_decode_plan_has_no_shuffle(spark):
+    from clp_spark.plans import grep as G
+
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t)
     msgs = P.encoded_messages(parsed)
-    dec = P.decode_messages_dictmap(spark, msgs, [(1, "x")], [(2, "y")])
-    assert "Exchange" not in plan_of(dec)
+    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    rows = (G.LogtypeIndex([(1, "x")]), G.VarIndex([(2, "y")]))
+    assert "Exchange" not in plan_of(G.decode(msgs, lt, vd, rows))
 
 
 def test_results_cache_latest_n(spark, tmp_path):

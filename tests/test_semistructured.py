@@ -98,9 +98,7 @@ def test_clpstring_typing_and_roundtrip(spark):
     assert clp_rows.filter("size(encoded_vars) = 0").count() == 0
 
     lt, vd = json_string_dicts(encoded)
-    lt_rows = [(r["logtype_id"], r["logtype"]) for r in lt.collect()]
-    vd_rows = [(r["var_id"], r["var_str"]) for r in vd.collect()]
-    dec = decode_json_strings(spark, encoded, lt_rows, vd_rows)
+    dec = decode_json_strings(encoded, lt, vd)
     bad = dec.join(store, ["event_id", "path"]).filter("text != value").count()
     assert bad == 0
     assert dec.count() == store.count()
