@@ -25,6 +25,7 @@ from clp_spark.plans.grep import (
     search_count,
     search_count_by_time,
 )
+from clp_spark.plans.ingest import logtype_dict_frame
 from clp_spark.plans.kql import kql_filter
 from clp_spark.functions.wildcard import wildcard_to_regex
 from clp_spark.functions import text_metrics as TM
@@ -131,11 +132,11 @@ def q_roundtrip_mismatches(spark, sf_dir):
 
     t = load_transcripts(spark, sf_dir)
     parsed = persist(P.parse_encode(t))
-    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    lt, vd = logtype_dict_frame(parsed), P.build_var_dict(parsed)
     rows = dict_rows(lt, vd)  # session-cached collected dictionaries
     templates, var_index = rows
     if var_index is _TOO_BIG:
-        dec = decode(P.encoded_messages(parsed), lt, vd, rows)
+        dec = decode(P.encoded_messages(parsed), vd, rows)
         mism = dec.withColumnRenamed("text", "dec_text").join(
             t.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"]
         ).filter("dec_text != text")
@@ -152,7 +153,7 @@ def _encoded(spark, sf_dir):
     parsed = persist(P.parse_encode(load_transcripts(spark, sf_dir)))
     return (
         P.encoded_messages(parsed),
-        P.build_logtype_dict(parsed),
+        logtype_dict_frame(parsed),
         P.build_var_dict(parsed),
     )
 
@@ -320,7 +321,6 @@ def _json_string_encoded(spark, sf_dir):
     from clp_spark.plans.semistructured import (
         encode_json_strings,
         infer_json_schema,
-        json_string_dicts,
         json_string_store,
         parse_json,
     )
@@ -330,7 +330,7 @@ def _json_string_encoded(spark, sf_dir):
     schema = infer_json_schema(spark, df, "json")
     store = json_string_store(parse_json(df, "json", schema), schema)
     encoded = persist(encode_json_strings(store))
-    lt, vd = json_string_dicts(encoded)
+    lt, vd = logtype_dict_frame(encoded), P.build_var_dict(encoded)
     return store, encoded, lt, vd
 
 

@@ -394,7 +394,6 @@ def dict_rows(logtype_dict: DataFrame, var_dict: DataFrame):
 
 def decode(
     messages: DataFrame,
-    logtype_dict: DataFrame,
     var_dict: DataFrame,
     rows,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
@@ -519,7 +518,7 @@ def search(
     rx = wildcard_to_regex(normalize_query(query))
     if ignore_case:
         rx = "(?i)" + rx
-    return decode(filtered, logtype_dict, var_dict, rows, key_cols).filter(F.col("text").rlike(rx))
+    return decode(filtered, var_dict, rows, key_cols).filter(F.col("text").rlike(rx))
 
 
 def search_count(messages, logtype_dict, var_dict, query: str, **kw) -> DataFrame:

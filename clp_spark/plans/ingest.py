@@ -25,7 +25,9 @@ each step commits: out/messages/batch_id=N/logtype_bucket=B/ and
 out/<sink>/_deltas/batch_id=N/ for the six aggregate sinks, merged on read
 by SINKS' per-column rules; its _manifest.json holds a `batches` map plus
 the summed turn count and ts range. open_archive() reads either layout, so
-search_archives, decode_archive and readable_dictionaries open both.
+search_archives, decode_archive and readable_dictionaries open both. It also
+reads a JSON archive (semistructured.ingest_json_archive), whose json_strings/
+stand in for messages: search_archives(..., key_cols=("event_id", "path")).
 
 Design-for-scale notes:
   * One parse feeds all seven sinks, as the reference's compressor parses
@@ -55,7 +57,9 @@ Design-for-scale notes:
     _commit, as the reference writes its logtype dictionary from memory
     once per archive (LogTypeDictionaryWriter) and counts with one
     partial/final CountOperator aggregate. var_dict and counts_conv grow
-    with the data and stay Spark groupBys.
+    with the data and stay Spark groupBys. _logtype_dict is the one
+    logtype-dictionary builder: the JSON archive's too, and
+    logtype_dict_frame's for queries over a parsed frame.
   * Each step commits via staging-dir + atomic rename and is recorded in
     the manifest; re-running ingest() skips completed steps (idempotent,
     no append-on-retry double counting). This is the filesystem analog of
@@ -81,7 +85,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import DRIVER_VALUES
+from ..caching import DRIVER_VALUES, plan_key
 from . import pipeline as P
 
 MANIFEST = "_manifest.json"
@@ -286,20 +290,35 @@ def _table(sink: str, *columns) -> pa.Table:
 
 
 def _aggregate(staged: DataFrame, keys: list[str]) -> pa.Table:
-    """The one Spark action behind the driver sinks: rows and ts range per
-    group of `keys` (at most templates x tools rows), collected as Arrow."""
+    """The one Spark action behind the driver sinks: rows and ts range (if
+    `staged` has ts) per group of `keys` (at most templates x tools rows),
+    collected as Arrow."""
     ts_ms = P.ts_millis("ts")
+    ts_range = [F.min(ts_ms).alias("ts_min"), F.max(ts_ms).alias("ts_max")]
     return staged.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n"), F.min(ts_ms).alias("ts_min"), F.max(ts_ms).alias("ts_max")
+        F.count(F.lit(1)).alias("n"), *(ts_range if "ts" in staged.columns else [])
     ).toArrow()
 
 
-def _logtype_dict(groups: pa.Table, _msgs_dir: str) -> pa.Table:
-    """(logtype_id, logtype, n_messages, var_kinds): P.build_logtype_dict's
-    rows, from the groups."""
+def _logtype_dict(groups: pa.Table, _msgs_dir: str | None) -> pa.Table:
+    """(logtype_id, logtype, n_messages, var_kinds) from the groups: the one
+    logtype-dictionary builder (reference LogTypeDictionaryWriter). var_kinds
+    are each template's placeholder kinds, so messages need no per-row kinds."""
     t = groups.group_by(["logtype_id", "logtype"]).aggregate([("n", "sum")])
     kinds = [P.var_kinds(lt) for lt in t["logtype"].to_pylist()]
     return _table("logtype_dict", t["logtype_id"], t["logtype"], t["n_sum"], kinds)
+
+
+def logtype_dict_frame(frame: DataFrame) -> DataFrame:
+    """The logtype dictionary of a parsed or encoded frame as local rows,
+    built once per frame plan; equal rows give equal plan keys, so
+    dict_rows' cache hits for rebuilt frames too."""
+    keys = ["logtype_id", "logtype"]
+    table = DRIVER_VALUES.get_or_load(
+        plan_key(frame, "logtype_dict"),
+        lambda: _logtype_dict(_aggregate(frame.select(*keys), keys), None),
+    )
+    return frame.sparkSession.createDataFrame(table)
 
 
 def _counts(sink: str, key: str):
@@ -494,11 +513,12 @@ def compact_bucket(
 
 
 def open_archive(spark: SparkSession, out_dir: str):
-    """(messages, logtype_dict, var_dict) of a batch or streamed archive.
-    A dictionary is its plain directory, or base ∪ live deltas merged by
-    SINKS when it has _deltas/. Messages are projected to MESSAGE_COLUMNS,
-    so archives of either layout (a streamed one adds a batch_id partition
-    column) union by name."""
+    """(messages, logtype_dict, var_dict) of a batch, streamed or JSON
+    archive. A dictionary is its plain directory, or base ∪ live deltas
+    merged by SINKS when it has _deltas/. Messages are projected to
+    MESSAGE_COLUMNS, so archives of either text layout (a streamed one adds
+    a batch_id partition column) union by name; a JSON archive's are its
+    json_strings/ keyed by (event_id, path)."""
     from ..streaming.ingest import read_dict_sink
 
     def sink(name):
@@ -507,7 +527,11 @@ def open_archive(spark: SparkSession, out_dir: str):
             return read_dict_sink(spark, d)
         return spark.read.parquet(d)
 
-    msgs = spark.read.parquet(os.path.join(out_dir, "messages")).select(*MESSAGE_COLUMNS)
+    json_dir = os.path.join(out_dir, "json_strings")
+    if os.path.isdir(json_dir):
+        msgs = spark.read.parquet(json_dir).select("event_id", "path", "logtype_id", "encoded_vars")
+    else:
+        msgs = spark.read.parquet(os.path.join(out_dir, "messages")).select(*MESSAGE_COLUMNS)
     return msgs, sink("logtype_dict"), sink("var_dict")
 
 
@@ -522,7 +546,7 @@ def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
     from .grep import decode, dict_rows
 
     msgs, lt, vd = open_archive(spark, out_dir)
-    return decode(msgs, lt, vd, dict_rows(lt, vd))
+    return decode(msgs, vd, dict_rows(lt, vd))
 
 
 # perfbench's cache counters wrap this instance's get_or_load
@@ -570,7 +594,8 @@ def search_archives(
 ) -> DataFrame:
     """Wildcard search across selected archives (the clg-over-many-archives
     path). Content-hash ids are globally deterministic, so unioned messages
-    join unioned (deduplicated) dictionaries directly."""
+    join unioned (deduplicated) dictionaries directly. JSON archives take
+    key_cols=("event_id", "path")."""
     from .grep import search
 
     dirs = select_archives(

@@ -150,24 +150,6 @@ def var_kinds(logtype: str | None) -> list[int]:
     return [ord(k) for k in _template_parts(logtype or "")[1]]
 
 
-def build_logtype_dict(parsed: DataFrame) -> DataFrame:
-    """Logtype dictionary: (logtype_id, logtype, var_kinds, n_messages).
-
-    Analog of reference LogTypeDictionaryWriter (clp/LogTypeDictionaryWriter.hpp:37)
-    — Spark's partial+final hash aggregate replaces the intern map.
-    `var_kinds` (the template's placeholder types, reference
-    LogTypeDictionaryEntry::get_placeholder_info) lets the message store
-    drop its per-row dict_var_ids column: dict ids are recoverable from
-    encoded_vars + the template, exactly like the reference's ragged layout.
-    The kinds are the parse's own `var_types`, which every parsed frame
-    carries equal to the template's placeholders, so the whole build is one
-    JVM aggregate.
-    """
-    return parsed.groupBy("logtype_id", "logtype").agg(
-        F.count("*").alias("n_messages"), F.first("var_types").alias("var_kinds")
-    )
-
-
 def build_var_dict(parsed: DataFrame) -> DataFrame:
     """Variable dictionary: (var_id, var_str, n_occurrences).
 

@@ -24,7 +24,7 @@ Spark re-expression:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -418,15 +418,6 @@ def encode_json_strings(store: DataFrame, id_col: str = "event_id") -> DataFrame
     return store.mapInArrow(run, schema=out_schema)
 
 
-def json_string_dicts(encoded: DataFrame):
-    """(logtype_dict, var_dict) for an encoded string store — the JSON
-    archive's own dictionaries (reference: per-archive var.dict/log.dict
-    shared by all ClpString/VarString columns)."""
-    from . import pipeline as P
-
-    return P.build_logtype_dict(encoded), P.build_var_dict(encoded)
-
-
 def decode_json_strings(
     encoded: DataFrame,
     logtype_dict: DataFrame,
@@ -439,7 +430,6 @@ def decode_json_strings(
 
     return decode(
         encoded.select(id_col, "path", "logtype_id", "encoded_vars"),
-        logtype_dict,
         var_dict,
         dict_rows(logtype_dict, var_dict),
         key_cols=(id_col, "path"),
@@ -1127,15 +1117,18 @@ def ingest_json_archive(
                       schema becomes hash-bucketed partitions, same
                       shuffle-free fan-out as the message store)
       json_strings/   (id, path, kind, logtype_id, encoded_vars)
-      logtype_dict/ var_dict/
-      _manifest.json  row/schema counts
+      logtype_dict/   from the text archive's builder, ingest._logtype_dict
+      var_dict/ array_store/ array_dict/
+      _manifest.json  n_records, n_schemas and the timestamp index, from
+                      one Observation on the records write (no read-back)
     Every sink and the manifest commit through plans/ingest.py's _commit
     and _write_manifest (staging + atomic rename): a crash mid-write leaves
     the previous sink or manifest readable.
     """
     import os
 
-    from .ingest import _commit, _write_manifest
+    from . import ingest as I
+    from . import pipeline as P
 
     if schema is None:
         # archive ingest: a key the sample misses is silently ABSENT from
@@ -1156,90 +1149,64 @@ def ingest_json_archive(
         parsed = type_json_float_formats(parsed, schema, json_col=json_col)
     store = json_string_store(parsed, schema, id_col=id_col)
     encoded = encode_json_strings(store, id_col=id_col).persist()
-    lt, vd = json_string_dicts(encoded)
     # array.dict: serialized arrays leave the records table for their own
     # dictionary; records keep nulls (ids live in array_store)
     arr_store = json_array_store(parsed, schema, id_col=id_col).persist()
-    arr_dict = json_array_dict(arr_store)
     parsed = strip_json_arrays(parsed, schema)
 
-    os.makedirs(out_dir, exist_ok=True)
+    # per-archive timestamp index (TimestampEntry min/max): epoch ms per date
+    # path, raw values per numeric-epoch path (no unit conversion, as
+    # TimestampEntry.hpp:105 notes). Schema ids are few, as SchemaMap assumes.
+    date_paths = date_leaf_paths(schema)
+    num_paths = numeric_ts_leaf_paths(schema)
+    ranges = {f"date:{p}": F.unix_millis(F.col(f"rec.{p}")) for p in date_paths}
+    ranges.update({f"num:{p}": F.col(f"rec.{p}") for p in num_paths})
+    obs = Observation("json_records")
+    records = parsed.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_records"),
+        F.size(F.collect_set("schema_id")).alias("n_schemas"),
+        *(F.array(F.min(c), F.max(c)).alias(name) for name, c in ranges.items()),
+    ).withColumn("schema_bucket", F.pmod(F.col("schema_id"), F.lit(n_buckets)).cast("int"))
 
-    records = parsed.withColumn(
-        "schema_bucket", F.pmod(F.col("schema_id"), F.lit(n_buckets)).cast("int")
-    )
-    _commit(
+    os.makedirs(out_dir, exist_ok=True)
+    codec = I._parquet_codec(spark, None)
+    I._commit(
         lambda d: records.sortWithinPartitions("schema_bucket")
         .write.mode("overwrite").partitionBy("schema_bucket").parquet(d),
         out_dir,
         "records",
     )
-    _commit(
+    I._commit(
         lambda d: encoded.select(
             id_col, "path", "kind", "logtype_id", "encoded_vars"
         ).write.mode("overwrite").parquet(d),
         out_dir,
         "json_strings",
     )
-    _commit(lambda d: lt.write.mode("overwrite").parquet(d), out_dir, "logtype_dict")
-    _commit(lambda d: vd.write.mode("overwrite").parquet(d), out_dir, "var_dict")
-    _commit(lambda d: arr_store.write.mode("overwrite").parquet(d), out_dir, "array_store")
-    _commit(lambda d: arr_dict.write.mode("overwrite").parquet(d), out_dir, "array_dict")
+    lt = I._logtype_dict(I._aggregate(encoded, ["logtype_id", "logtype"]), None)
+    I._commit(lambda d: I._write_table(lt, d, codec), out_dir, "logtype_dict")
+    vd = P.build_var_dict(encoded)
+    I._commit(lambda d: vd.write.mode("overwrite").parquet(d), out_dir, "var_dict")
+    I._commit(lambda d: arr_store.write.mode("overwrite").parquet(d), out_dir, "array_store")
+    arr_dict = json_array_dict(arr_store)
+    I._commit(lambda d: arr_dict.write.mode("overwrite").parquet(d), out_dir, "array_dict")
     encoded.unpersist()
     arr_store.unpersist()
 
-    written = spark.read.parquet(os.path.join(out_dir, "records"))
-    n_records = written.count()
-    n_schemas = written.select("schema_id").distinct().count()
-    manifest = {"n_records": n_records, "n_schemas": n_schemas}
-    # per-archive timestamp index (TimestampEntry min/max): one pruned-column
-    # agg over the WRITTEN parquet (reads only the date columns' pages)
-    sidecars = date_sidecars(schema)
-    if sidecars:
-        aggs = []
-        for i, (p, _fmt, _raw) in enumerate(sidecars):
-            ms = F.unix_millis(F.col(f"rec.{p}"))
-            aggs += [F.min(ms).alias(f"lo_{i}"), F.max(ms).alias(f"hi_{i}")]
-        row = written.agg(*aggs).first()
-        manifest["timestamp_ranges"] = {
-            p: [row[f"lo_{i}"], row[f"hi_{i}"]]
-            for i, (p, _fmt, _raw) in enumerate(sidecars)
-            if row[f"lo_{i}"] is not None
-        }
-    # numeric-epoch timestamp keys: raw min/max values, NO unit conversion
-    # (reference TimestampEntry ingest_timestamp(epochtime_t/double) and the
-    # :105 TODO: seconds/nanoseconds are deliberately not normalized)
-    num_paths = numeric_ts_leaf_paths(schema)
-    if num_paths:
-        aggs = []
-        for i, p in enumerate(num_paths):
-            c = F.col(f"rec.{p}")
-            aggs += [F.min(c).alias(f"nlo_{i}"), F.max(c).alias(f"nhi_{i}")]
-        row = written.agg(*aggs).first()
-        ranges = {
-            p: [row[f"nlo_{i}"], row[f"nhi_{i}"]]
-            for i, p in enumerate(num_paths)
-            if row[f"nlo_{i}"] is not None
-        }
-        if ranges:
-            manifest["numeric_ts_ranges"] = ranges
-    _write_manifest(out_dir, manifest)
+    m = obs.get
+
+    def index(kind, paths):
+        # [min, max] per path that holds a value
+        return {p: m[f"{kind}:{p}"] for p in paths if m[f"{kind}:{p}"][0] is not None}
+
+    manifest = {"n_records": m["n_records"], "n_schemas": m["n_schemas"]}
+    if date_paths:
+        manifest["timestamp_ranges"] = index("date", date_paths)
+    if index("num", num_paths):
+        manifest["numeric_ts_ranges"] = index("num", num_paths)
+    I._write_manifest(out_dir, manifest)
     # sinks rewritten by rename: a persisted read of them must not keep
     # serving the old files (caching.py)
     spark.catalog.refreshByPath(out_dir)
     return manifest
-
-
-def search_json_archive(spark: SparkSession, out_dir: str, query: str, **kw) -> DataFrame:
-    """Wildcard search inside a written JSON archive's encoded strings."""
-    import os
-
-    enc = spark.read.parquet(os.path.join(out_dir, "json_strings"))
-    lt = spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
-    vd = spark.read.parquet(os.path.join(out_dir, "var_dict"))
-    from .grep import search
-
-    return search(
-        enc.select("event_id", "path", "logtype_id", "encoded_vars"),
-        lt, vd, query, key_cols=("event_id", "path"), **kw,
-    )

@@ -87,7 +87,7 @@ def test_rebuilt_search_hits_dictionary_cache(spark, monkeypatch):
         parsed = P.parse_encode(load_transcripts(spark, SF_DIR))
         G.search(
             P.encoded_messages(parsed),
-            P.build_logtype_dict(parsed),
+            I.logtype_dict_frame(parsed),
             P.build_var_dict(parsed),
             "used 123 of ",
         )

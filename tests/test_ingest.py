@@ -67,16 +67,16 @@ def test_roundtrip_decode(spark, archive):
     assert joined.filter("dec_text != text").count() == 0
 
 
-def test_build_logtype_dict_equals_sink_without_python(spark, archive):
-    """build_logtype_dict takes var_kinds from the parse's var_types, one
-    JVM aggregate with no Python stage: on sf0.001 its rows equal ingest()'s
-    logtype_dict sink in all four columns. The grok parse and the JSON
-    string store carry var_types equal to their templates' placeholders."""
+def test_logtype_dict_builder_equals_spark_oracle(spark, archive):
+    """logtype_dict_frame (ingest._logtype_dict over _aggregate's groups) is
+    the one logtype-dictionary builder: on sf0.001 its rows equal a Spark
+    groupBy oracle in all four columns for the transcript parse, the grok
+    parse and the JSON string store, so every parse's var_types equal its
+    templates' placeholders. The transcript rows equal ingest()'s sink."""
     from clp_spark.functions.grok import DEFAULT_SCHEMA
     from clp_spark.plans.semistructured import (
         encode_json_strings,
         infer_json_schema,
-        json_string_dicts,
         json_string_store,
         parse_json,
     )
@@ -84,23 +84,26 @@ def test_build_logtype_dict_equals_sink_without_python(spark, archive):
 
     out, _ = archive
     cols = ["logtype_id", "logtype", "n_messages", "var_kinds"]
-    t = load_transcripts(spark, SF_DIR)
-    built = P.build_logtype_dict(P.parse_encode(t))
-    plan = built._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    sink = spark.read.parquet(os.path.join(out, "logtype_dict"))
-    assert sorted(map(tuple, built.select(*cols).collect())) == sorted(
-        map(tuple, sink.select(*cols).collect())
-    )
 
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    t = load_transcripts(spark, SF_DIR)
     df = load_jsonlogs(spark, SF_DIR)
     schema = infer_json_schema(spark, df, "json")
-    json_lt, _ = json_string_dicts(encode_json_strings(json_string_store(
-        parse_json(df, "json", schema), schema
-    )))
-    for lt in (P.build_logtype_dict(P.parse_encode_with_schema(t, DEFAULT_SCHEMA)), json_lt):
-        rows = lt.collect()
-        assert rows and all(r["var_kinds"] == P.var_kinds(r["logtype"]) for r in rows)
+    frames = (
+        P.parse_encode(t),
+        P.parse_encode_with_schema(t, DEFAULT_SCHEMA),
+        encode_json_strings(json_string_store(parse_json(df, "json", schema), schema)),
+    )
+    for frame in frames:
+        oracle = frame.groupBy("logtype_id", "logtype").agg(
+            F.count("*").alias("n_messages"), F.first("var_types").alias("var_kinds")
+        )
+        built = rows(I.logtype_dict_frame(frame))
+        assert built and built == rows(oracle)
+    sink = spark.read.parquet(os.path.join(out, "logtype_dict"))
+    assert rows(sink) == rows(I.logtype_dict_frame(frames[0]))
 
 
 COUNT_SINKS = ("counts_logtype", "counts_tool", "counts_conv", "lineage")

@@ -48,7 +48,7 @@ def _decode_sides(msgs, lt, vd):
     from clp_spark.plans import grep as G
 
     rows = G.dict_rows(lt, vd)
-    return G.decode(msgs, lt, vd, rows), G.decode(msgs, lt, vd, (rows[0], G._TOO_BIG))
+    return G.decode(msgs, vd, rows), G.decode(msgs, vd, (rows[0], G._TOO_BIG))
 
 
 def test_too_big_decode_joins_only_the_var_dict(spark):
@@ -60,7 +60,7 @@ def test_too_big_decode_joins_only_the_var_dict(spark):
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t)
     _, dec = _decode_sides(
-        P.encoded_messages(parsed), P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+        P.encoded_messages(parsed), I.logtype_dict_frame(parsed), P.build_var_dict(parsed)
     )
     qe = dec._jdf.queryExecution()
     assert "ResolvedHint" not in qe.analyzed().toString()
@@ -105,7 +105,7 @@ def test_dictmap_decode_equals_join_decode(spark):
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t).persist()
     msgs = P.encoded_messages(parsed)
-    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    lt, vd = I.logtype_dict_frame(parsed), P.build_var_dict(parsed)
     map_df, join_df = _decode_sides(msgs, lt, vd)
     join_dec = {(r["conv_id"], r["turn_idx"]): r["text"] for r in join_df.collect()}
     map_dec = {(r["conv_id"], r["turn_idx"]): r["text"] for r in map_df.collect()}
@@ -122,9 +122,8 @@ def test_dictmap_decode_plan_has_no_shuffle(spark):
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t)
     msgs = P.encoded_messages(parsed)
-    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
     rows = (G.LogtypeIndex([(1, "x")]), G.VarIndex([(2, "y")]))
-    assert "Exchange" not in plan_of(G.decode(msgs, lt, vd, rows))
+    assert "Exchange" not in plan_of(G.decode(msgs, P.build_var_dict(parsed), rows))
 
 
 def test_results_cache_latest_n(spark, tmp_path):
@@ -133,7 +132,7 @@ def test_results_cache_latest_n(spark, tmp_path):
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t).persist()
     msgs = P.encoded_messages(parsed)
-    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    lt, vd = I.logtype_dict_frame(parsed), P.build_var_dict(parsed)
     matches = G.search(msgs, lt, vd, "commit BEEF")
     total = matches.count()
     assert total > 10
@@ -161,7 +160,7 @@ def test_search_count_by_time_has_no_rejoin(spark):
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t).persist()
     msgs = P.encoded_messages(parsed)
-    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    lt, vd = I.logtype_dict_frame(parsed), P.build_var_dict(parsed)
     cbt = G.search_count_by_time(msgs, lt, vd, "commit BEEF", bucket_ms=3_600_000)
     plan = plan_of(cbt)
     assert "Join" not in plan
@@ -179,7 +178,7 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
     t = load_transcripts(spark, SF_DIR)
     parsed = P.parse_encode(t).persist()
     msgs = P.encoded_messages(parsed)
-    lt, vd = P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    lt, vd = I.logtype_dict_frame(parsed), P.build_var_dict(parsed)
 
     expect = {
         (r["conv_id"], r["turn_idx"])
@@ -208,7 +207,7 @@ def test_search_distributed_dict_fallback(spark, monkeypatch):
 def encoded(spark):
     """sf0.001 parsed once: (messages, logtype_dict, var_dict)."""
     parsed = P.parse_encode(load_transcripts(spark, SF_DIR)).persist()
-    yield P.encoded_messages(parsed), P.build_logtype_dict(parsed), P.build_var_dict(parsed)
+    yield P.encoded_messages(parsed), I.logtype_dict_frame(parsed), P.build_var_dict(parsed)
     parsed.unpersist()
 
 

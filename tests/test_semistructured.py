@@ -5,19 +5,63 @@ JSON equality)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from clp_spark.plans import pipeline as P
+from clp_spark.plans.ingest import logtype_dict_frame, search_archives
 from clp_spark.plans.semistructured import (
+    TIMESTAMP_KEYS,
     infer_json_schema,
     ingest_json,
+    ingest_json_archive,
     leaf_paths,
+    numeric_ts_leaf_paths,
     schema_table,
 )
 from clp_spark.sources.jsonlogs import load_jsonlogs
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _manifest_file(out):
+    with open(os.path.join(out, "_manifest.json")) as f:
+        return json.load(f)
+
+
+def _manifest_oracle(spark, out):
+    """The manifest read back from the written records/: row count, distinct
+    schema ids, and [min, max] per date path (epoch ms) and per
+    numeric-epoch timestamp path (raw values) that holds a value."""
+    written = spark.read.parquet(os.path.join(out, "records"))
+    rec = written.schema["rec"].dataType
+    date_paths = [
+        p for p in leaf_paths(rec)
+        if p.rsplit(".", 1)[-1].lower() in TIMESTAMP_KEYS
+        and isinstance(written.select(F.col(f"rec.{p}")).schema[0].dataType, T.TimestampType)
+    ]
+
+    def ranges(cols):
+        if not cols:
+            return {}
+        row = written.agg(*(f(c) for c in cols.values() for f in (F.min, F.max))).first()
+        return {
+            p: [row[2 * i], row[2 * i + 1]] for i, p in enumerate(cols) if row[2 * i] is not None
+        }
+
+    m = {
+        "n_records": written.count(),
+        "n_schemas": written.select("schema_id").distinct().count(),
+    }
+    if date_paths:
+        m["timestamp_ranges"] = ranges({p: F.unix_millis(F.col(f"rec.{p}")) for p in date_paths})
+    numeric = ranges({p: F.col(f"rec.{p}") for p in numeric_ts_leaf_paths(rec)})
+    if numeric:
+        m["numeric_ts_ranges"] = numeric
+    return m
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +123,6 @@ def test_clpstring_typing_and_roundtrip(spark):
         decode_json_strings,
         encode_json_strings,
         infer_json_schema,
-        json_string_dicts,
         json_string_store,
         parse_json,
     )
@@ -97,7 +140,7 @@ def test_clpstring_typing_and_roundtrip(spark):
     assert clp_rows.filter(f"logtype_id = {VARSTRING_LOGTYPE_ID}").count() == 0
     assert clp_rows.filter("size(encoded_vars) = 0").count() == 0
 
-    lt, vd = json_string_dicts(encoded)
+    lt, vd = logtype_dict_frame(encoded), P.build_var_dict(encoded)
     dec = decode_json_strings(encoded, lt, vd)
     bad = dec.join(store, ["event_id", "path"]).filter("text != value").count()
     assert bad == 0
@@ -111,7 +154,6 @@ def test_clpstring_search_matches_raw_values(spark):
     from clp_spark.plans.semistructured import (
         encode_json_strings,
         infer_json_schema,
-        json_string_dicts,
         json_string_store,
         parse_json,
         search_json_strings,
@@ -122,7 +164,7 @@ def test_clpstring_search_matches_raw_values(spark):
     schema = infer_json_schema(spark, df, "json")
     store = json_string_store(parse_json(df, "json", schema), schema)
     encoded = encode_json_strings(store).persist()
-    lt, vd = json_string_dicts(encoded)
+    lt, vd = logtype_dict_frame(encoded), P.build_var_dict(encoded)
 
     got = {
         (r["event_id"], r["path"])
@@ -145,7 +187,6 @@ def test_varstring_search_finds_inner_tokens(spark):
     drop such rows."""
     from clp_spark.plans.semistructured import (
         encode_json_strings,
-        json_string_dicts,
         search_json_strings,
     )
 
@@ -154,7 +195,7 @@ def test_varstring_search_finds_inner_tokens(spark):
         [(i, "v", v) for i, v in enumerate(values)], "event_id long, path string, value string"
     )
     encoded = encode_json_strings(store).persist()
-    lt, vd = json_string_dicts(encoded)
+    lt, vd = logtype_dict_frame(encoded), P.build_var_dict(encoded)
 
     def hits(q):
         return sorted(r["event_id"] for r in search_json_strings(encoded, lt, vd, q).collect())
@@ -222,33 +263,54 @@ def test_projection_prunes_from_json_schema(spark):
 
 
 def test_json_archive_roundtrip_and_search(spark, tmp_path):
-    """On-disk clp_s archive: per-schema-bucket records + string dicts;
-    search over the written archive matches raw-value grep; bucket
-    partition pruning is visible in the plan."""
-    from clp_spark.plans.semistructured import (
-        ingest_json_archive,
-        search_json_archive,
-    )
-    from pyspark.sql import functions as F
-
+    """On-disk clp_s archive: per-schema-bucket records + string dicts, and a
+    manifest equal to a read-back of records/; search_archives over one
+    archive, and over two archives of disjoint halves of the input, matches
+    raw-value grep without opening records/; bucket partition pruning is
+    visible in the plan."""
     df = load_jsonlogs(spark, SF_DIR)
     out = str(tmp_path / "jarch")
     m = ingest_json_archive(spark, df, out)
     assert m["n_records"] == df.count() and m["n_schemas"] == 4
+    assert _manifest_file(out) == m == _manifest_oracle(spark, out)
 
-    got = {
-        (r["event_id"], r["path"])
-        for r in search_json_archive(spark, out, "retry 1 of").collect()
-    }
+    def hits(dirs):
+        found = search_archives(spark, dirs, "retry 1 of", key_cols=("event_id", "path"))
+        assert not [f for f in found.inputFiles() if "/records/" in f]
+        return {(r["event_id"], r["path"]) for r in found.collect()}
+
     want = {
         (r["event_id"], "note")
         for r in df.filter(F.get_json_object("json", "$.note").rlike(".*retry 1 of.*")).collect()
     }
-    assert got == want and got
+    assert hits([out]) == want and want
+
+    halves = []
+    for i in range(2):
+        halves.append(str(tmp_path / f"half{i}"))
+        ingest_json_archive(spark, df.filter(F.col("event_id") % 2 == i), halves[-1])
+    assert hits(halves) == want
 
     rec = spark.read.parquet(out + "/records").filter(F.col("schema_bucket") == 3)
     plan = rec._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+
+
+def test_json_archive_ingest_job_count(spark, tmp_path):
+    """A warm ingest_json_archive on sf0.001 runs at most 12 Spark jobs: the
+    manifest comes from an Observation on the records write and nothing is
+    read back."""
+    df = load_jsonlogs(spark, SF_DIR)
+    out = str(tmp_path / "jarch")
+    ingest_json_archive(spark, df, out)
+    sc = spark.sparkContext
+    group = "json-archive-ingest"
+    sc.setJobGroup(group, group)
+    try:
+        ingest_json_archive(spark, df, out)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
 
 
 def test_json_archive_manifest_survives_torn_rewrite(spark, tmp_path, monkeypatch):
@@ -403,6 +465,8 @@ def test_json_archive_timestamp_index_prunes(spark, tmp_path):
     d1, d2 = str(tmp_path / "a07"), str(tmp_path / "a19")
     m1 = ingest_json_archive(spark, mk(7), d1)
     m2 = ingest_json_archive(spark, mk(19), d2)
+    for d, m in ((d1, m1), (d2, m2)):
+        assert _manifest_file(d) == m == _manifest_oracle(spark, d)
     assert "meta.timestamp" in m1["timestamp_ranges"]
     lo, hi = m1["timestamp_ranges"]["meta.timestamp"]
     assert lo <= hi and str(lo)[:2] == "14"
@@ -522,6 +586,7 @@ def test_json_archive_numeric_epoch_timestamp_index(spark, tmp_path):
     d1, d2 = str(tmp_path / "near"), str(tmp_path / "far")
     m1 = ingest_json_archive(spark, mk(0), d1)
     ingest_json_archive(spark, mk(10**9), d2)
+    assert _manifest_file(d1) == m1 == _manifest_oracle(spark, d1)
     assert m1["numeric_ts_ranges"]["timestamp"] == [1759417024100, 1759417024300]
 
     # the reference's own query set (clp-s-search-epoch-timestamp)
@@ -545,6 +610,7 @@ def test_json_archive_numeric_epoch_timestamp_index(spark, tmp_path):
 
     d3 = str(tmp_path / "float")
     m3 = ingest_json_archive(spark, mkf(), d3)
+    assert _manifest_file(d3) == m3 == _manifest_oracle(spark, d3)
     lo, hi = m3["numeric_ts_ranges"]["timestamp"]
     assert abs(lo - 1759417024.1) < 1e-6 and abs(hi - 1759417026.3) < 1e-6
     got = search_json_archives_kql(
